@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -37,36 +35,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Codegen cache stays at Spark's 100-entry DEFAULT — measured, not
-      // guessed: raising it to 5000 for this ~100-query workload made
-      // tight-loop queries collapse (weekly_summary_nl 7.8 s → 138 s,
-      // weekly_summary_sql → 306 s, pricing_summary 1.25 s → 8.6 s) with
-      // FLAT gc time and class counts during the slow query. Thousands
-      // of live generated Predicate/Projection subclasses turn the hot
-      // eval() call sites megamorphic, so the JIT stops inlining the
-      // inner loops; the small cache lets dead generated classes unload
-      // and keeps dispatch sites monomorphic-ish. Recompile cost of an
-      // evicted plan is milliseconds — the wrong trade at any scale.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "100"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The weekly-summary cumulative windows run single-partition BY
-    // DESIGN (week-grain input; see WeeklySummary.statsFromCounts), so
-    // WindowExec's per-execution scale warning is noise in this harness.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // Up-front install (idempotent): every query plans with the same
-    // optimizer rule set, so per-query timings don't depend on whether an
-    // earlier query happened to install the band-join rewrite.
-    GraftSession.install(spark)
+    val spark = GraftSession.local()
 
     def execute(name: String): Double = {
       // Hygiene between queries: drop cached relations, explicitly free
@@ -138,10 +107,8 @@ object Bench {
     // per-rep minimum. Back-to-back reps let reps 2..n hit the codegen
     // cache and warmed loops — the steady-state latency a resident
     // engine serves (the same philosophy as the warmup above), while the
-    // median still absorbs a one-off GC/compile transient. The r4
-    // ordering stays available for A/B via SPARK_GRAFT_BENCH_INTERLEAVE=1.
+    // median still absorbs a one-off GC/compile transient.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val interleave = sys.env.get("SPARK_GRAFT_BENCH_INTERLEAVE").contains("1")
     val order = selected.sorted
     def median(xs: Seq[Double]): Double = {
       val ok = xs.filter(_ >= 0).sorted
@@ -197,25 +164,17 @@ object Bench {
     def flush(repsDone: Int): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
         (currentJson(repsDone) + "\n").getBytes("UTF-8"))
-    if (interleave) {
-      (1 to reps).foreach { r =>
-        System.err.println(s"[bench] === rep $r/$reps (interleaved) ===")
-        order.foreach(n => samples(n) = samples(n) :+ execute(n))
-        flush(r)
-      }
-    } else {
-      order.zipWithIndex.foreach { case (n, i) =>
-        System.err.println(s"[bench] === query ${i + 1}/${order.size}: $n ($reps reps) ===")
-        (1 to reps).foreach(_ => samples(n) = samples(n) :+ execute(n))
-        flush(reps) // after every query: a killed run still has complete medians so far
-      }
+    order.zipWithIndex.foreach { case (n, i) =>
+      System.err.println(s"[bench] === query ${i + 1}/${order.size}: $n ($reps reps) ===")
+      (1 to reps).foreach(_ => samples(n) = samples(n) :+ execute(n))
+      flush(reps) // after every query: a killed run still has complete medians so far
     }
     // ---- operational mains (round-5 task 8): cold incremental build,
     // warm-delta no-op re-run (watermark advance only), and a full
     // streaming micro-batch drain with convergence check. Each rep gets
     // a FRESH state/work dir for the cold paths; the warm run reuses the
     // state its rep's cold run just built. The mains reuse this session
-    // (embeddable-main protocol) — a divergence/DQ failure throws and
+    // ([[GraftSession.run]]) — a divergence/DQ failure throws and
     // lands in `failed` like any red query. Skipped when SPARK_GRAFT_ONLY
     // narrows to queries; SPARK_GRAFT_ONLY=operational runs just this.
     val runOperational = sys.env.get("SPARK_GRAFT_ONLY")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** BPE-trainer scale measurement (BASELINE.md evidence row): train
@@ -27,15 +26,7 @@ object BpeScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_BPE_N", "10").toInt
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "1000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.install(spark)
+    val spark = GraftSession.local()
 
     // N-replica inflation with Soak's per-replica alphabet bijection
     // (replica 0 = identity), persisted once so every mode reads the

@@ -106,23 +106,22 @@ object CorpusNearDupSweep {
 
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
-    val (spark, owned) = RunSession.obtain()
-    GraftSession.install(spark)
-    import spark.implicits._
+    GraftSession.run { spark =>
+      import spark.implicits._
 
-    val (total, nDemoted) = sweep(spark, outDir)
-    val store = new SnapshotTable(spark, s"$outDir/corpus", "doc_id")
+      val (total, nDemoted) = sweep(spark, outDir)
+      val store = new SnapshotTable(spark, s"$outDir/corpus", "doc_id")
 
-    if (nDemoted == 0) {
-      println(s"[sweep] $total docs, no cross-batch near-dups — store unchanged " +
-        s"(version ${store.currentVersion.get})")
-    } else {
-      Seq(("neardup_sweep_demoted", nDemoted))
-        .toDF("stage", "n_docs")
-        .coalesce(1).write.mode("append").parquet(s"$outDir/report.parquet")
-      println(s"[sweep] $total docs -> demoted $nDemoted cross-batch near-dups " +
-        s"(version ${store.currentVersion.get}); kept/ + train_packed re-exported")
+      if (nDemoted == 0) {
+        println(s"[sweep] $total docs, no cross-batch near-dups — store unchanged " +
+          s"(version ${store.currentVersion.get})")
+      } else {
+        Seq(("neardup_sweep_demoted", nDemoted))
+          .toDF("stage", "n_docs")
+          .coalesce(1).write.mode("append").parquet(s"$outDir/report.parquet")
+        println(s"[sweep] $total docs -> demoted $nDemoted cross-batch near-dups " +
+          s"(version ${store.currentVersion.get}); kept/ + train_packed re-exported")
+      }
     }
-    if (owned) spark.stop()
   }
 }

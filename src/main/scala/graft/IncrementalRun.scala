@@ -39,83 +39,77 @@ object IncrementalRun {
     val mode =
       if (args.length > 2 && args(2) == "strict") ConsistencyMode.Strict
       else ConsistencyMode.Faithful
-    // embeddable main: when a session already exists (Bench timing the
-    // operational path, a spec), reuse it UNTOUCHED ([[RunSession]]),
-    // leave its lifecycle to the owner, and signal failure by throwing
-    // instead of exiting the shared JVM
-    val (spark, owned) = RunSession.obtain()
-    val rental = sys.env.get("SPARK_GRAFT_SOURCE_JDBC_URL") match {
-      case Some(url) =>
-        val props = new java.util.Properties()
-        sys.env.get("SPARK_GRAFT_SOURCE_JDBC_USER").foreach(props.setProperty("user", _))
-        sys.env.get("SPARK_GRAFT_SOURCE_JDBC_PASSWORD").foreach(props.setProperty("password", _))
-        spark.read.jdbc(url,
-          sys.env.getOrElse("SPARK_GRAFT_SOURCE_TABLE", "rental"), props)
-      case None => Tables.rental(spark, sfDir)
-    }
-    // DQ gate BEFORE any state mutation (Deequ-style publish guard):
-    // warn (default) prints failures and proceeds; fail aborts with exit
-    // code 2 on a REQUIRED failure, leaving watermark/summary untouched
-    // (advisory checks never block — see Profile.rentalDqChecks); off
-    // skips the scan (the gate costs one extra pass over the source)
-    sys.env.getOrElse("SPARK_GRAFT_DQ_GATE", "warn").toLowerCase match {
-      case "off" =>
-      case gate @ ("warn" | "fail") =>
-        val checks = graft.ops.Profile.rentalDqChecks(rental).collect()
-        val failed = checks.filter(!_.getBoolean(2))
-        failed.foreach(r => println(s"[incremental] DQ " +
-          s"${if (r.getBoolean(3)) "FAIL" else "warn"} ${r.getString(0)} metric=${r.get(1)}"))
-        if (failed.isEmpty)
-          println(s"[incremental] DQ gate passed (${checks.length} checks)")
-        else if (gate == "fail" && failed.exists(_.getBoolean(3))) {
-          println("[incremental] DQ gate failed - aborting before state mutation")
-          if (owned) { spark.stop(); sys.exit(2) }
-          else sys.error("DQ gate failed - aborting before state mutation")
-        }
-      // a typo'd mode must not silently degrade a safety gate to warn
-      case other => sys.error(
-        s"SPARK_GRAFT_DQ_GATE must be warn|fail|off, got '$other'")
-    }
-    val report = IncrementalWeeklySummary.run(spark, rental, stateDir, mode)
-    println(s"[incremental] watermark ${report.previousWatermark} -> ${report.newWatermark}; " +
-      s"deltaRows=${report.deltaRows} affectedWeeks=${report.affectedWeeks} processed=${report.processed}")
-    graft.incremental.RunLog.append(spark, stateDir, report)
-    // table maintenance: a scheduled production job must stay healthy
-    // without an out-of-band janitor. Each processed run adds one
-    // manifest and batch-sized data files; past 16 live files compact
-    // them (content-identical, watermark tag carried), and bound the
-    // time-travel window + reclaim unreferenced bytes every run.
-    val summaryTbl = IncrementalWeeklySummary.summaryTable(spark, stateDir)
-    if (summaryTbl.exists) {
-      if (summaryTbl.history.last._4 > 16) {
-        summaryTbl.optimize()
-        println(s"[incremental] maintenance: compacted summary to " +
-          s"${summaryTbl.history.last._4} files")
+    GraftSession.run { spark =>
+      val rental = sys.env.get("SPARK_GRAFT_SOURCE_JDBC_URL") match {
+        case Some(url) =>
+          val props = new java.util.Properties()
+          sys.env.get("SPARK_GRAFT_SOURCE_JDBC_USER").foreach(props.setProperty("user", _))
+          sys.env.get("SPARK_GRAFT_SOURCE_JDBC_PASSWORD").foreach(props.setProperty("password", _))
+          spark.read.jdbc(url,
+            sys.env.getOrElse("SPARK_GRAFT_SOURCE_TABLE", "rental"), props)
+        case None => Tables.rental(spark, sfDir)
       }
-      summaryTbl.retire(keepLast = 16)
-      summaryTbl.vacuum()
+      // DQ gate BEFORE any state mutation (Deequ-style publish guard):
+      // warn (default) prints failures and proceeds; fail aborts with exit
+      // code 2 on a REQUIRED failure, leaving watermark/summary untouched
+      // (advisory checks never block — see Profile.rentalDqChecks); off
+      // skips the scan (the gate costs one extra pass over the source)
+      sys.env.getOrElse("SPARK_GRAFT_DQ_GATE", "warn").toLowerCase match {
+        case "off" =>
+        case gate @ ("warn" | "fail") =>
+          val checks = graft.ops.Profile.rentalDqChecks(rental).collect()
+          val failed = checks.filter(!_.getBoolean(2))
+          failed.foreach(r => println(s"[incremental] DQ " +
+            s"${if (r.getBoolean(3)) "FAIL" else "warn"} ${r.getString(0)} metric=${r.get(1)}"))
+          if (failed.isEmpty)
+            println(s"[incremental] DQ gate passed (${checks.length} checks)")
+          else if (gate == "fail" && failed.exists(_.getBoolean(3))) {
+            GraftSession.gateFailed("[incremental] DQ gate failed - aborting before state mutation")
+          }
+        // a typo'd mode must not silently degrade a safety gate to warn
+        case other => sys.error(
+          s"SPARK_GRAFT_DQ_GATE must be warn|fail|off, got '$other'")
+      }
+      val report = IncrementalWeeklySummary.run(spark, rental, stateDir, mode)
+      println(s"[incremental] watermark ${report.previousWatermark} -> ${report.newWatermark}; " +
+        s"deltaRows=${report.deltaRows} affectedWeeks=${report.affectedWeeks} processed=${report.processed}")
+      graft.incremental.RunLog.append(spark, stateDir, report)
+      // table maintenance: a scheduled production job must stay healthy
+      // without an out-of-band janitor. Each processed run adds one
+      // manifest and batch-sized data files; past 16 live files compact
+      // them (content-identical, watermark tag carried), and bound the
+      // time-travel window + reclaim unreferenced bytes every run.
+      val summaryTbl = IncrementalWeeklySummary.summaryTable(spark, stateDir)
+      if (summaryTbl.exists) {
+        if (summaryTbl.history.last._4 > 16) {
+          summaryTbl.optimize()
+          println(s"[incremental] maintenance: compacted summary to " +
+            s"${summaryTbl.history.last._4} files")
+        }
+        summaryTbl.retire(keepLast = 16)
+        summaryTbl.vacuum()
+      }
+      CatalogDdl.registerStateTables(spark, stateDir)
+      sys.env.get("SPARK_GRAFT_ROLLUP_JDBC_URL").foreach { url =>
+        val props = new java.util.Properties()
+        sys.env.get("SPARK_GRAFT_ROLLUP_JDBC_USER").foreach(props.setProperty("user", _))
+        sys.env.get("SPARK_GRAFT_ROLLUP_JDBC_PASSWORD").foreach(props.setProperty("password", _))
+        val table = sys.env.getOrElse("SPARK_GRAFT_ROLLUP_TABLE", "weekly_rental_summary")
+        val summary = IncrementalWeeklySummary.readSummary(spark, stateDir)
+        val conn = java.sql.DriverManager.getConnection(url, props)
+        try {
+          JdbcUpsert.createTableIfAbsent(conn, table,
+            IncrementalWeeklySummary.summarySchema, Seq("week_beginning"))
+          JdbcUpsert.createTableIfAbsent(conn, "etl_watermarks",
+            Watermarks.schema, Seq("process_name"))
+        } finally conn.close()
+        JdbcUpsert.upsert(summary, url, table, Seq("week_beginning"), props)
+        // the watermark row is derived from the summary commit's tag —
+        // the rollup copy can never carry a watermark its summary lacks
+        val wmRow = IncrementalWeeklySummary.watermarkFrame(spark, stateDir)
+        JdbcUpsert.upsert(wmRow, url, "etl_watermarks", Seq("process_name"), props)
+        println(s"[incremental] rollup upsert -> $url ($table, etl_watermarks)")
+      }
     }
-    CatalogDdl.registerStateTables(spark, stateDir)
-    sys.env.get("SPARK_GRAFT_ROLLUP_JDBC_URL").foreach { url =>
-      val props = new java.util.Properties()
-      sys.env.get("SPARK_GRAFT_ROLLUP_JDBC_USER").foreach(props.setProperty("user", _))
-      sys.env.get("SPARK_GRAFT_ROLLUP_JDBC_PASSWORD").foreach(props.setProperty("password", _))
-      val table = sys.env.getOrElse("SPARK_GRAFT_ROLLUP_TABLE", "weekly_rental_summary")
-      val summary = IncrementalWeeklySummary.readSummary(spark, stateDir)
-      val conn = java.sql.DriverManager.getConnection(url, props)
-      try {
-        JdbcUpsert.createTableIfAbsent(conn, table,
-          IncrementalWeeklySummary.summarySchema, Seq("week_beginning"))
-        JdbcUpsert.createTableIfAbsent(conn, "etl_watermarks",
-          Watermarks.schema, Seq("process_name"))
-      } finally conn.close()
-      JdbcUpsert.upsert(summary, url, table, Seq("week_beginning"), props)
-      // the watermark row is derived from the summary commit's tag —
-      // the rollup copy can never carry a watermark its summary lacks
-      val wmRow = IncrementalWeeklySummary.watermarkFrame(spark, stateDir)
-      JdbcUpsert.upsert(wmRow, url, "etl_watermarks", Seq("process_name"), props)
-      println(s"[incremental] rollup upsert -> $url ($table, etl_watermarks)")
-    }
-    if (owned) spark.stop()
   }
 }

@@ -17,7 +17,7 @@ import graft.incremental.IngestIndex
   *   probe   delta (doc_id % 10 == 0) against the existing state: all
   *           four probes (exact, bloom-prefiltered exact, span, winnow).
   *           The bloom arm must return exactly the exact arm's rows (no
-  *           false negatives; FPs die in the join) — divergence throws.
+  *           false negatives; FPs die in the join) — divergence exits 1.
   *   absorb  fold the delta into the state (segment append — no corpus
   *           text read, no index rewrite)
   *   compact fold accumulated segments into the bucketed base
@@ -35,75 +35,70 @@ object IngestRun {
     val sfDir = args(0)
     val stateDir = args(1)
     val mode = if (args.length > 2) args(2) else "build"
-    // embeddable main (same protocol as [[IncrementalRun]]): reuse an
-    // active session UNTOUCHED ([[RunSession]] — the builder route would
-    // reconfigure the caller's runtime SQL confs), signal failure by
-    // throwing
-    val (spark, owned) = RunSession.obtain()
+    GraftSession.run { spark =>
+      val docs = Tables.documents(spark, sfDir)
+      val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+      val delta = docs.filter(col("doc_id") % 10 === 0)
+      val index = new IngestIndex(spark, stateDir)
 
-    val docs = Tables.documents(spark, sfDir)
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-    val delta = docs.filter(col("doc_id") % 10 === 0)
-    val index = new IngestIndex(spark, stateDir)
-
-    mode match {
-      case "build" =>
-        index.build(corpus)
-        println(s"[ingest] built fp/bloom/spans/winnow state at $stateDir")
-      case "probe" =>
-        require(index.exists, s"no ingest state at $stateDir — run build first")
-        // the four probes are independent read-only jobs — overlap them
-        // (driver threads; same pattern a production ingest admission
-        // uses, and the same one IngestIndex's own staging uses)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        val Seq(exact, bloom, spans, winnow) = Await.result(Future.sequence(Seq(
-          Future(index.dedupExactProbe(delta).count()),
-          Future(index.dedupExactProbeBloom(delta).count()),
-          Future(index.dupSpansProbe(delta).count()),
-          Future(index.winnowProbe(delta).count()))), Duration.Inf)
-        if (exact != bloom)
-          throw new IllegalStateException(
-            s"bloom probe diverged from exact probe: $bloom vs $exact rows")
-        println(s"[ingest] probe dedup=$exact bloom=$bloom spans=$spans winnow=$winnow")
-      case "absorb" =>
-        require(index.exists, s"no ingest state at $stateDir — run build first")
-        index.absorb(delta)
-        println(s"[ingest] absorbed delta into $stateDir (segment append)")
-      case "compact" =>
-        require(index.exists, s"no ingest state at $stateDir — run build first")
-        index.compact()
-        println(s"[ingest] compacted segments into $stateDir base")
-      case "cycle" =>
-        def timed(name: String)(body: => Unit): Unit = {
-          val t0 = System.nanoTime()
-          body
-          println(f"[ingest-cycle] $name%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        }
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        def probeAll(): Unit = Await.result(Future.sequence(Seq(
-          Future(index.dedupExactProbe(delta).count()),
-          Future(index.dedupExactProbeBloom(delta).count()),
-          Future(index.dupSpansProbe(delta).count()),
-          Future(index.winnowProbe(delta).count()))), Duration.Inf)
-        timed("build")(index.build(corpus))
-        timed("probe_cold")(probeAll())
-        timed("probe_warm")(probeAll())
-        timed("absorb")(index.absorb(delta))
-        timed("probe_seg")(probeAll())
-        timed("compact")(index.compact())
-        timed("probe_post")(probeAll())
-        // warm rebuild into a sibling dir: the JIT-warm build cost the
-        // bench's operational row actually observes
-        val warmIdx = new IngestIndex(spark, stateDir + "-warm")
-        timed("build_warm")(warmIdx.build(corpus))
-      case other => throw new IllegalArgumentException(s"unknown mode: $other")
+      mode match {
+        case "build" =>
+          index.build(corpus)
+          println(s"[ingest] built fp/bloom/spans/winnow state at $stateDir")
+        case "probe" =>
+          require(index.exists, s"no ingest state at $stateDir — run build first")
+          // the four probes are independent read-only jobs — overlap them
+          // (driver threads; same pattern a production ingest admission
+          // uses, and the same one IngestIndex's own staging uses)
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          implicit val ec: scala.concurrent.ExecutionContext =
+            scala.concurrent.ExecutionContext.global
+          val Seq(exact, bloom, spans, winnow) = Await.result(Future.sequence(Seq(
+            Future(index.dedupExactProbe(delta).count()),
+            Future(index.dedupExactProbeBloom(delta).count()),
+            Future(index.dupSpansProbe(delta).count()),
+            Future(index.winnowProbe(delta).count()))), Duration.Inf)
+          if (exact != bloom)
+            GraftSession.diverged(
+              s"bloom probe diverged from exact probe: $bloom vs $exact rows")
+          println(s"[ingest] probe dedup=$exact bloom=$bloom spans=$spans winnow=$winnow")
+        case "absorb" =>
+          require(index.exists, s"no ingest state at $stateDir — run build first")
+          index.absorb(delta)
+          println(s"[ingest] absorbed delta into $stateDir (segment append)")
+        case "compact" =>
+          require(index.exists, s"no ingest state at $stateDir — run build first")
+          index.compact()
+          println(s"[ingest] compacted segments into $stateDir base")
+        case "cycle" =>
+          def timed(name: String)(body: => Unit): Unit = {
+            val t0 = System.nanoTime()
+            body
+            println(f"[ingest-cycle] $name%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+          }
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          implicit val ec: scala.concurrent.ExecutionContext =
+            scala.concurrent.ExecutionContext.global
+          def probeAll(): Unit = Await.result(Future.sequence(Seq(
+            Future(index.dedupExactProbe(delta).count()),
+            Future(index.dedupExactProbeBloom(delta).count()),
+            Future(index.dupSpansProbe(delta).count()),
+            Future(index.winnowProbe(delta).count()))), Duration.Inf)
+          timed("build")(index.build(corpus))
+          timed("probe_cold")(probeAll())
+          timed("probe_warm")(probeAll())
+          timed("absorb")(index.absorb(delta))
+          timed("probe_seg")(probeAll())
+          timed("compact")(index.compact())
+          timed("probe_post")(probeAll())
+          // warm rebuild into a sibling dir: the JIT-warm build cost the
+          // bench's operational row actually observes
+          val warmIdx = new IngestIndex(spark, stateDir + "-warm")
+          timed("build_warm")(warmIdx.build(corpus))
+        case other => throw new IllegalArgumentException(s"unknown mode: $other")
+      }
     }
-    if (owned) spark.stop()
   }
 }

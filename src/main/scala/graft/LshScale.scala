@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.VectorOps
@@ -40,7 +40,6 @@ object LshScale {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val batchNs = sys.env.getOrElse("SPARK_GRAFT_LSH_NS", "1,3,10,30")
       .split(",").map(_.trim.toInt).toSeq
     val maxBatchN = sys.env.getOrElse("SPARK_GRAFT_LSH_MAX_BATCH_N", "30").toInt
@@ -49,15 +48,7 @@ object LshScale {
     val h2N = sys.env.getOrElse("SPARK_GRAFT_LSH_H2_N", "10").toInt
     val mdPath = sys.env.getOrElse("SPARK_GRAFT_LSH_MD", "SOAK.md")
     val work = "/tmp/graft_lsh_scale"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "100")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.install(spark)
+    val spark = GraftSession.local()
 
     // ---- inflation: Soak's orthogonal decorrelation, embeddings only ----
     val base = Tables.embeddings(spark, sfDir)

@@ -434,20 +434,8 @@ object Soak {
     val n = sys.env.getOrElse("SPARK_GRAFT_SOAK_N", "10").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_SOAK_REPS", "3").toInt
     val mdPath = sys.env.getOrElse("SPARK_GRAFT_SOAK_MD", "SOAK.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val maxGrowth = n * sys.env.getOrElse("SPARK_GRAFT_SOAK_SLACK", "1.5").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "100")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    GraftSession.install(spark)
+    val spark = GraftSession.local()
 
     val dataDir = s"$workDir/data"
     val reuse = sys.env.get("SPARK_GRAFT_SOAK_REUSE").contains("1") &&
@@ -1424,7 +1412,7 @@ object Soak {
     md ++= s"Deterministic ${n}x inflation of `$sfDir` (id-offset replicas; seeded-alphabet-\n"
     md ++= s"bijection decorrelated text, permutation∘sign-flip (orthogonal) decorrelated\n"
     md ++= s"embeddings, single-copy dims — see `graft.Soak` doc).\n"
-    md ++= s"Timings are medians of $reps noop-sink reps on local[$cpus]; bound t(${n}x) ≤ ${maxGrowth.toInt}·t(1x).\n\n"
+    md ++= s"Timings are medians of $reps noop-sink reps on local[${spark.sparkContext.defaultParallelism}]; bound t(${n}x) ≤ ${maxGrowth.toInt}·t(1x).\n\n"
     md ++= "| query | rows 1x | rows ${n}x | rule | rows ok | t 1x (s) | t ${n}x (s) | ratio | time ok |\n".replace("${n}", n.toString)
     md ++= "|---|---|---|---|---|---|---|---|---|\n"
     results.foreach { r =>

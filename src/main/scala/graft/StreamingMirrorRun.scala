@@ -40,108 +40,104 @@ object StreamingMirrorRun {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val workDir = args(1)
-    val (spark, owned) = RunSession.obtain()
+    GraftSession.run { spark =>
+      val docs = Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("text"), col("lang"))
+      val srcDir = s"$workDir/source"
+      val mirDir = s"$workDir/mirror"
+      val src = new SnapshotTable(spark, srcDir, "doc_id", clusterPartitions = Some(4))
+      val mirror = new SnapshotTable(spark, mirDir, "doc_id")
 
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"), col("lang"))
-    val srcDir = s"$workDir/source"
-    val mirDir = s"$workDir/mirror"
-    val src = new SnapshotTable(spark, srcDir, "doc_id", clusterPartitions = Some(4))
-    val mirror = new SnapshotTable(spark, mirDir, "doc_id")
+      src.create(docs)
+      println(s"[stream-mirror] source <- create v${src.currentVersion.get}")
 
-    src.create(docs)
-    println(s"[stream-mirror] source <- create v${src.currentVersion.get}")
+      val synced = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      def drain(wave: String): Unit = {
+        val q = spark.readStream
+          .option("maxFilesPerTrigger", 1) // one wake-up per commit, as online
+          .text(s"$srcDir/manifests")
+          .writeStream
+          .option("checkpointLocation", s"$workDir/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch { (_: org.apache.spark.sql.DataFrame, batchId: Long) =>
+            val v = SnapshotSync.sync(src, mirror, "doc_id")
+            synced += ((batchId, v))
+            println(s"[stream-mirror] $wave batch $batchId -> mirror at source v$v " +
+              s"(mirror op ${mirror.history.last._3})")
+            ()
+          }
+          .start()
+        q.awaitTermination()
+      }
 
-    val synced = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def drain(wave: String): Unit = {
-      val q = spark.readStream
-        .option("maxFilesPerTrigger", 1) // one wake-up per commit, as online
-        .text(s"$srcDir/manifests")
+      drain("wave1") // the create commit: cold copy
+      val coldOps = mirror.history.map(_._3)
+
+      // source keeps moving: a merge, the routine compaction, an erasure
+      val v1 = src.merge(docs.filter(col("doc_id") % 31 === 0)
+        .withColumn("text", lit("[redacted-v2]")))
+      val v2 = src.optimize(smallBytes = Long.MaxValue)
+      val v3 = src.delete(docs.filter(col("doc_id") % 17 === 0).select("doc_id"))
+      println(s"[stream-mirror] source <- merge v$v1, optimize v$v2, delete v$v3")
+
+      drain("wave2") // three manifest wake-ups; first syncs all, rest no-op
+
+      // convergence 1: streamed mirror == source, cursor at the head
+      val srcRows = src.read()
+      val diff = mirror.read().exceptAll(srcRows).count() +
+        srcRows.exceptAll(mirror.read()).count()
+      val cursorOk = mirror.currentTag.contains(s"sync:$v3")
+      // convergence 2: == one batch sync built independently
+      val batchMirror = new SnapshotTable(spark, s"$workDir/batch-mirror", "doc_id")
+      SnapshotSync.sync(src, batchMirror, "doc_id")
+      val batchDiff = mirror.read().exceptAll(batchMirror.read()).count() +
+        batchMirror.read().exceptAll(mirror.read()).count()
+      // shape: cold copy, then ONE delta for the merge+optimize+delete
+      // wave (op-aware feed — the compaction never crossed), no
+      // contentless versions
+      val ops = mirror.history.map(_._3)
+      val shapeOk = coldOps == Seq("create") &&
+        ops.count(_ == "delta") == 1 && !ops.contains("overwrite")
+
+      if (diff != 0) println(s"[stream-mirror] mirror != source: $diff differing rows")
+      if (batchDiff != 0) println(s"[stream-mirror] streamed != batch sync: $batchDiff rows")
+      if (!cursorOk) println(s"[stream-mirror] cursor ${mirror.currentTag} != sync:$v3")
+      if (!shapeOk) println(s"[stream-mirror] unexpected mirror ops: $ops (cold $coldOps)")
+
+      // ONE-SHOT mode (the operational backfill): snapshot-seed the
+      // mirror at the source's v0, then DRAIN the CDC feed itself with
+      // Trigger.AvailableNow — the source captures the committed head at
+      // start and the rate-limited drain stops there (no continuous
+      // query to babysit). Convergence-checked against the same batch
+      // sync as the continuous arm.
+      val onceDir = s"$workDir/once-mirror"
+      val once = new SnapshotTable(spark, onceDir, "doc_id")
+      once.create(src.readVersion(0))
+      val onceQ = spark.readStream
+        .format("org.apache.spark.sql.graft.SnapshotTableProvider")
+        .option("path", srcDir).option("key", "doc_id")
+        .option("startingVersion", "0")
+        .option("maxVersionsPerBatch", "1") // several batches, one drain
+        .load()
         .writeStream
-        .option("checkpointLocation", s"$workDir/ckpt")
+        .format("org.apache.spark.sql.graft.SnapshotTableProvider")
+        .option("path", onceDir).option("key", "doc_id").option("mode", "cdc")
+        .option("checkpointLocation", s"$workDir/once-ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (_: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val v = SnapshotSync.sync(src, mirror, "doc_id")
-          synced += ((batchId, v))
-          println(s"[stream-mirror] $wave batch $batchId -> mirror at source v$v " +
-            s"(mirror op ${mirror.history.last._3})")
-          ()
-        }
         .start()
-      q.awaitTermination()
-    }
+      val onceDone = onceQ.awaitTermination(600000)
+      val onceDiff = once.read().exceptAll(batchMirror.read()).count() +
+        batchMirror.read().exceptAll(once.read()).count()
+      if (!onceDone) println("[stream-mirror] one-shot drain did not self-terminate")
+      if (onceDiff != 0) println(s"[stream-mirror] one-shot != batch sync: $onceDiff rows")
+      println(s"[stream-mirror] one-shot drain: terminated=$onceDone diff=$onceDiff")
 
-    drain("wave1") // the create commit: cold copy
-    val coldOps = mirror.history.map(_._3)
-
-    // source keeps moving: a merge, the routine compaction, an erasure
-    val v1 = src.merge(docs.filter(col("doc_id") % 31 === 0)
-      .withColumn("text", lit("[redacted-v2]")))
-    val v2 = src.optimize(smallBytes = Long.MaxValue)
-    val v3 = src.delete(docs.filter(col("doc_id") % 17 === 0).select("doc_id"))
-    println(s"[stream-mirror] source <- merge v$v1, optimize v$v2, delete v$v3")
-
-    drain("wave2") // three manifest wake-ups; first syncs all, rest no-op
-
-    // convergence 1: streamed mirror == source, cursor at the head
-    val srcRows = src.read()
-    val diff = mirror.read().exceptAll(srcRows).count() +
-      srcRows.exceptAll(mirror.read()).count()
-    val cursorOk = mirror.currentTag.contains(s"sync:$v3")
-    // convergence 2: == one batch sync built independently
-    val batchMirror = new SnapshotTable(spark, s"$workDir/batch-mirror", "doc_id")
-    SnapshotSync.sync(src, batchMirror, "doc_id")
-    val batchDiff = mirror.read().exceptAll(batchMirror.read()).count() +
-      batchMirror.read().exceptAll(mirror.read()).count()
-    // shape: cold copy, then ONE delta for the merge+optimize+delete
-    // wave (op-aware feed — the compaction never crossed), no
-    // contentless versions
-    val ops = mirror.history.map(_._3)
-    val shapeOk = coldOps == Seq("create") &&
-      ops.count(_ == "delta") == 1 && !ops.contains("overwrite")
-
-    if (diff != 0) println(s"[stream-mirror] mirror != source: $diff differing rows")
-    if (batchDiff != 0) println(s"[stream-mirror] streamed != batch sync: $batchDiff rows")
-    if (!cursorOk) println(s"[stream-mirror] cursor ${mirror.currentTag} != sync:$v3")
-    if (!shapeOk) println(s"[stream-mirror] unexpected mirror ops: $ops (cold $coldOps)")
-
-    // ONE-SHOT mode (the operational backfill): snapshot-seed the
-    // mirror at the source's v0, then DRAIN the CDC feed itself with
-    // Trigger.AvailableNow — the source captures the committed head at
-    // start and the rate-limited drain stops there (no continuous
-    // query to babysit). Convergence-checked against the same batch
-    // sync as the continuous arm.
-    val onceDir = s"$workDir/once-mirror"
-    val once = new SnapshotTable(spark, onceDir, "doc_id")
-    once.create(src.readVersion(0))
-    val onceQ = spark.readStream
-      .format("org.apache.spark.sql.graft.SnapshotTableProvider")
-      .option("path", srcDir).option("key", "doc_id")
-      .option("startingVersion", "0")
-      .option("maxVersionsPerBatch", "1") // several batches, one drain
-      .load()
-      .writeStream
-      .format("org.apache.spark.sql.graft.SnapshotTableProvider")
-      .option("path", onceDir).option("key", "doc_id").option("mode", "cdc")
-      .option("checkpointLocation", s"$workDir/once-ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val onceDone = onceQ.awaitTermination(600000)
-    val onceDiff = once.read().exceptAll(batchMirror.read()).count() +
-      batchMirror.read().exceptAll(once.read()).count()
-    if (!onceDone) println("[stream-mirror] one-shot drain did not self-terminate")
-    if (onceDiff != 0) println(s"[stream-mirror] one-shot != batch sync: $onceDiff rows")
-    println(s"[stream-mirror] one-shot drain: terminated=$onceDone diff=$onceDiff")
-
-    val converged = diff == 0 && batchDiff == 0 && cursorOk && shapeOk &&
-      onceDone && onceDiff == 0
-    println(s"[stream-mirror] synced=${synced.size} batches, " +
-      s"mirror ops=${ops.mkString(",")}")
-    println(s"[stream-mirror] converged=$converged")
-    if (owned) spark.stop()
-    if (!converged) {
-      if (owned) sys.exit(1)
-      else sys.error("streaming mirror diverged from the batch sync")
+      val converged = diff == 0 && batchDiff == 0 && cursorOk && shapeOk &&
+        onceDone && onceDiff == 0
+      println(s"[stream-mirror] synced=${synced.size} batches, " +
+        s"mirror ops=${ops.mkString(",")}")
+      println(s"[stream-mirror] converged=$converged")
+      if (!converged) GraftSession.diverged("streaming mirror diverged from the batch sync")
     }
   }
 }

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Week-grain cumulative windows are single-partition by design —
-    // suppress WindowExec's scale warning here (see Bench for rationale).
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // Same rule set for every query, independent of execution order.
-    GraftSession.install(spark)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 dumps a subset — a local iteration aid
     // (mirrors Bench); the driver leaves it unset and dumps everything.

@@ -1766,12 +1766,9 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     // maxRecordsPerFile), so partition stats ARE file stats — verified
     // against the directory listing below, with the r19 read-back pass
     // as the fallback whenever the 1:1 mapping does not hold.
-    // SPARK_GRAFT_NO_INLINE_STATS=1 disables it outright for A/B.
-    val inline = !sys.props.get("SPARK_GRAFT_NO_INLINE_STATS")
-      .orElse(sys.env.get("SPARK_GRAFT_NO_INLINE_STATS")).contains("1")
     var obs: Option[org.apache.spark.sql.Observation] = None
     val toWrite =
-      if (!inline) pf
+      if (!inlineStats) pf
       else {
         import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
         import org.apache.spark.sql.catalyst.expressions.XxHash64
@@ -1838,6 +1835,9 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
   private[graft] var inlineStatsCommits: Long = 0L
   private[graft] var inlineStatsFallbacks: Long = 0L
 
+  /** Spec seam: `false` stages every commit through [[readBackEntries]]. */
+  private[graft] var inlineStats = true
+
   /** Manifest entries from the write job's own observed [[FileStats]]
     * metric — `None` (fall back to [[readBackEntries]]) when the metric
     * did not arrive or the partition-id ↔ part-file mapping is not the
@@ -1866,31 +1866,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
         inlineStatsCommits += 1
         Some(arr.map { sr =>
           val name = partByPid(sr.getInt(0))
-          val rows = sr.getLong(1)
-          val (mn, mx) =
-            if (kind == "opaque") (None, None)
-            else (ordEncode(sr.get(3)), ordEncode(sr.get(4)))
-          val ok = mn.isDefined && mx.isDefined
-          val colStats = present.zipWithIndex.flatMap { case (c, i) =>
-            val base = 5 + 3 * i
-            val (smn, smx) = (ordEncode(sr.get(base + 1)), ordEncode(sr.get(base + 2)))
-            val sNulls = Some(rows - sr.getLong(base))
-            if (smn.isDefined && smx.isDefined)
-              Some(phys(c) -> ColStat(kindOf(schema(c).dataType), smn, smx, sNulls))
-            else if (sNulls.contains(rows))
-              Some(phys(c) -> ColStat(kindOf(schema(c).dataType), None, None, sNulls))
-            else None
-          }.toMap
-          val bloom =
-            if (keyBloomBits == 0) None
-            else Some((keyBloomBits, KeyBloom.K,
-              java.util.Base64.getEncoder.encodeToString(
-                sr.getAs[Array[Byte]](5 + 3 * present.size))))
-          Entry(s"$rel/$name", rows,
-            if (ok) kind else "opaque",
-            if (ok) mn else None, if (ok) mx else None, colStats,
-            nulls = Some(rows - sr.getLong(2)), bloom = bloom,
-            bytes = lenByName.get(name))
+          decodeEntry(sr, s"$rel/$name", kind, present, lenByName.get(name), phys, schema)
         })
       }
     }
@@ -1898,28 +1874,27 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
 
   /** The r19 stats pass: re-read the freshly written files and gather
     * per-file aggregates grouped by `input_file_name()` — one extra
-    * full pass + shuffle + job per commit; kept verbatim as the
-    * verified fallback for [[inlineEntries]] and the
-    * SPARK_GRAFT_NO_INLINE_STATS A/B arm. */
+    * full pass + shuffle + job per commit; kept as the verified
+    * fallback for [[inlineEntries]]. */
   private def readBackEntries(pfSchema: StructType, rel: String, out: Path,
       kind: String, present: Seq[String], lenByName: Map[String, Long],
       phys: String => String, schema: StructType): Seq[Entry] = {
     val base = fs.makeQualified(out).toUri.getPath
     // the opt-in key bloom rides the same aggregate: one more column
-    // folding xxhash64(key) into the bit words (KeyBloom), appended
-    // LAST so the fixed indices below never move
+    // folding xxhash64(key) into the bit words (KeyBloom), appended LAST
+    // like FileStats' bloom words
     val bloomAgg =
       if (keyBloomBits == 0) Nil
       else Seq(org.apache.spark.sql.functions
         .udaf(new KeyBloom.BloomAgg(keyBloomBits),
           org.apache.spark.sql.Encoders.scalaLong)
         .apply(xxhash64(col(phys(key)))).as("__kbloom"))
-    val aggs = Seq(count(lit(1)).as("__rows"),
-      min(col(phys(key))).as("__mn"), max(col(phys(key))).as("__mx"),
-      count(col(phys(key))).as("__knn")) ++
+    // columns in FileStats order, so [[decodeEntry]] reads both passes
+    val aggs = Seq(count(lit(1)).as("__rows"), count(col(phys(key))).as("__knn"),
+      min(col(phys(key))).as("__mn"), max(col(phys(key))).as("__mx")) ++
       present.zipWithIndex.flatMap { case (c, i) =>
-        Seq(min(col(phys(c))).as(s"__smn$i"), max(col(phys(c))).as(s"__smx$i"),
-          count(col(phys(c))).as(s"__snn$i")) } ++
+        Seq(count(col(phys(c))).as(s"__snn$i"), min(col(phys(c))).as(s"__smn$i"),
+          max(col(phys(c))).as(s"__smx$i")) } ++
       bloomAgg
     val stats = spark.read.schema(pfSchema).parquet(out.toString)
       .groupBy(input_file_name().as("__file"))
@@ -1928,33 +1903,43 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     stats.toSeq.map { r =>
       val full = new Path(new java.net.URI(r.getString(0))).toUri.getPath
       val name = full.stripPrefix(base).stripPrefix("/")
-      val rows = r.getLong(1)
-      val (mn, mx) =
-        if (kind == "opaque") (None, None)
-        else (ordEncode(r.get(2)), ordEncode(r.get(3)))
-      // both bounds or neither: a half-encoded pair can't order safely
-      val ok = mn.isDefined && mx.isDefined
-      val colStats = present.zipWithIndex.flatMap { case (c, i) =>
-        val (smn, smx) = (ordEncode(r.get(5 + 3 * i)), ordEncode(r.get(6 + 3 * i)))
-        val sNulls = Some(rows - r.getLong(7 + 3 * i))
-        // an all-null file has no orderable bounds but a fully-known
-        // null count — still prunable by null predicates and countable
-        if (smn.isDefined && smx.isDefined)
-          Some(phys(c) -> ColStat(kindOf(schema(c).dataType), smn, smx, sNulls))
-        else if (sNulls.contains(rows))
-          Some(phys(c) -> ColStat(kindOf(schema(c).dataType), None, None, sNulls))
-        else None
-      }.toMap
-      val bloom =
-        if (keyBloomBits == 0) None
-        else Some((keyBloomBits, KeyBloom.K, java.util.Base64.getEncoder.encodeToString(
-          r.getAs[Array[Byte]](5 + 3 * present.size))))
-      Entry(s"$rel/$name", rows,
-        if (ok) kind else "opaque",
-        if (ok) mn else None, if (ok) mx else None, colStats,
-        nulls = Some(rows - r.getLong(4)), bloom = bloom,
-        bytes = lenByName.get(name))
+      decodeEntry(r, s"$rel/$name", kind, present, lenByName.get(name), phys, schema)
     }
+  }
+
+  /** A manifest entry from one file's stats row in [[FileStats]] order:
+    * [0] the file (read by the caller), [1] rows, [2] key non-nulls,
+    * [3] key min, [4] key max, then (non-nulls, min, max) per `present`
+    * column, then the key bloom words. */
+  private def decodeEntry(r: org.apache.spark.sql.Row, path: String, kind: String,
+      present: Seq[String], bytes: Option[Long], phys: String => String,
+      schema: StructType): Entry = {
+    val rows = r.getLong(1)
+    val (mn, mx) =
+      if (kind == "opaque") (None, None)
+      else (ordEncode(r.get(3)), ordEncode(r.get(4)))
+    // both bounds or neither: a half-encoded pair can't order safely
+    val ok = mn.isDefined && mx.isDefined
+    val colStats = present.zipWithIndex.flatMap { case (c, i) =>
+      val base = 5 + 3 * i
+      val (smn, smx) = (ordEncode(r.get(base + 1)), ordEncode(r.get(base + 2)))
+      val sNulls = Some(rows - r.getLong(base))
+      // an all-null file has no orderable bounds but a fully-known
+      // null count — still prunable by null predicates and countable
+      if (smn.isDefined && smx.isDefined)
+        Some(phys(c) -> ColStat(kindOf(schema(c).dataType), smn, smx, sNulls))
+      else if (sNulls.contains(rows))
+        Some(phys(c) -> ColStat(kindOf(schema(c).dataType), None, None, sNulls))
+      else None
+    }.toMap
+    val bloom =
+      if (keyBloomBits == 0) None
+      else Some((keyBloomBits, KeyBloom.K, java.util.Base64.getEncoder.encodeToString(
+        r.getAs[Array[Byte]](5 + 3 * present.size))))
+    Entry(path, rows,
+      if (ok) kind else "opaque",
+      if (ok) mn else None, if (ok) mx else None, colStats,
+      nulls = Some(rows - r.getLong(2)), bloom = bloom, bytes = bytes)
   }
 
   /** Test seam: lets a spec fabricate the PRE-GUARD legacy shape (a

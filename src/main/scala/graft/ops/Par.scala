@@ -42,9 +42,6 @@ object Par {
     * harmless, one guarded pass of a small input). Frames with no file
     * scan underneath (checkpoints, in-memory) are left alone. */
   def fanned(df: DataFrame): DataFrame = {
-    // A/B + operational kill-switch (also honors sys.props for specs)
-    if (sys.props.get("SPARK_GRAFT_NO_FANOUT").orElse(
-        sys.env.get("SPARK_GRAFT_NO_FANOUT")).contains("1")) return df
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     val files = df.inputFiles

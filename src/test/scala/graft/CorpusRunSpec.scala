@@ -111,6 +111,22 @@ class CorpusRunSpec extends AnyFunSuite {
     }
   }
 
+  test("a failed PSI gate throws to the embedding caller and publishes nothing") {
+    // the shared session must exist first: a run with none to reuse
+    // owns its session and exits the JVM on the gate failure
+    assert(!spark.sparkContext.isStopped)
+    val out = java.nio.file.Files.createTempDirectory("graft-corpus-psi").toString
+    sys.props("SPARK_GRAFT_PSI_MAX") = "-1" // every split's PSI is >= 0
+    val e =
+      try intercept[GraftSession.RunFailed](CorpusRun.main(Array("/root/testdata/sf0.001", out)))
+      finally sys.props.remove("SPARK_GRAFT_PSI_MAX")
+    assert(e.code == 2)
+    assert(e.getMessage.contains("PSI gate FAILED"))
+    assert(new java.io.File(out).list().isEmpty,
+      s"gate failure published: ${new java.io.File(out).list().mkString(", ")}")
+    assert(!spark.sparkContext.isStopped)
+  }
+
   test("gated excise + cluster splitter: extra stage, rewritten text, zero split leakage") {
     val out = java.nio.file.Files.createTempDirectory("graft-corpus-ex").toString
     sys.props("SPARK_GRAFT_EXCISE") = "1"

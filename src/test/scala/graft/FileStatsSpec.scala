@@ -82,9 +82,8 @@ final class FileStatsSpec extends AnyFunSuite {
 
     // ARM B: the r19 read-back pass, same data, same operations
     val b = tableAt(s"$base/b")
-    sys.props("SPARK_GRAFT_NO_INLINE_STATS") = "1"
-    try { b.create(docs); b.merge(upserts) }
-    finally sys.props.remove("SPARK_GRAFT_NO_INLINE_STATS")
+    b.inlineStats = false
+    b.create(docs); b.merge(upserts)
 
     assert(normalizedManifest(s"$base/a") == normalizedManifest(s"$base/b"),
       "inline stats diverged from the read-back stats pass")
@@ -174,11 +173,10 @@ final class FileStatsSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, s"$dir/t", "doc_id",
       clusterPartitions = Some(1), statsColumns = Seq("score"))
     t.create(df)
-    sys.props("SPARK_GRAFT_NO_INLINE_STATS") = "1"
     val t2 = new SnapshotTable(spark, s"$dir/t2", "doc_id",
       clusterPartitions = Some(1), statsColumns = Seq("score"))
-    try t2.create(df)
-    finally sys.props.remove("SPARK_GRAFT_NO_INLINE_STATS")
+    t2.inlineStats = false
+    t2.create(df)
     assert(normalizedManifest(s"$dir/t") == normalizedManifest(s"$dir/t2"))
     // countWhere on the NaN-maxed column stays exact (scan fallback)
     assert(t.countWhere("score", Some(0.0), Some(10.0)) ==
