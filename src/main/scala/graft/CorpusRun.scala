@@ -51,9 +51,7 @@ import graft.ops.TextOps
 object CorpusRun {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // gates and modes read system properties first so an embedding spec
-    // can toggle them per-run without mutating the process environment
-    def flag(k: String): Option[String] = sys.props.get(k).orElse(sys.env.get(k))
+    import GraftSession.flag
     val psiMax = flag("SPARK_GRAFT_PSI_MAX").getOrElse("0.1").toDouble
     GraftSession.run { spark =>
       val docs = Tables.documents(spark, sfDir)

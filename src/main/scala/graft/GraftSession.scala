@@ -45,6 +45,11 @@ object GraftSession {
     install(spark)
   }
 
+  /** A main's setting: the JVM system property `name`, else the
+    * environment variable — so an embedding spec can set a gate or a
+    * source per run without mutating the process environment. */
+  def flag(name: String): Option[String] = sys.props.get(name).orElse(sys.env.get(name))
+
   /** A main's failed check. An owned [[run]] exits the JVM with `code`;
     * an embedded one rethrows to its caller. */
   final class RunFailed(val code: Int, message: String) extends RuntimeException(message)

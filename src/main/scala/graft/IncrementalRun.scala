@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.Row
 
 import graft.incremental.{CatalogDdl, ConsistencyMode, IncrementalWeeklySummary, Watermarks}
 import graft.sources.JdbcUpsert
@@ -19,13 +18,14 @@ import graft.sources.JdbcUpsert
   * tables (SURVEY.md S4, [[CatalogDdl]]), and — when a rollup database is
   * configured — the summary and watermark are ALSO upserted over JDBC
   * ([[JdbcUpsert]]), mirroring the reference's Postgres rollup load
-  * (etl:249-284). Env vars, set by the Airflow DAG
-  * (airflow/dags/pagila_weekly_summary_dag.py) from its Airflow
-  * connections; unset ⇒ parquet in/out only, since no database ships in
-  * this container:
+  * (etl:249-284). Settings, each read as a JVM system property first,
+  * then as an env var ([[GraftSession.flag]]):
+  *   SPARK_GRAFT_DQ_GATE           warn (default) | fail | off
+  * and, set by the Airflow DAG (airflow/dags/pagila_weekly_summary_dag.py)
+  * from its Airflow connections (unset ⇒ parquet in/out only, since no
+  * database ships in this container):
   *   SPARK_GRAFT_SOURCE_JDBC_URL   read `rental` over JDBC instead of
-  *     sfDir parquet — the run's watermark filter then pushes down to
-  *     the remote WHERE clause (the reference's delta SQL, etl:116-128)
+  *     sfDir parquet (two full reads per processed run, one per no-op)
   *   SPARK_GRAFT_SOURCE_JDBC_USER / SPARK_GRAFT_SOURCE_JDBC_PASSWORD
   *   SPARK_GRAFT_SOURCE_TABLE      default rental
   *   SPARK_GRAFT_ROLLUP_JDBC_URL   e.g. jdbc:postgresql://host:5432/rollup
@@ -33,44 +33,43 @@ import graft.sources.JdbcUpsert
   *   SPARK_GRAFT_ROLLUP_TABLE      default weekly_rental_summary
   */
 object IncrementalRun {
+  import GraftSession.flag
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val stateDir = args(1)
     val mode =
       if (args.length > 2 && args(2) == "strict") ConsistencyMode.Strict
       else ConsistencyMode.Faithful
+    // a typo'd mode must not silently degrade a safety gate to warn
+    val gate = flag("SPARK_GRAFT_DQ_GATE").getOrElse("warn").toLowerCase
+    if (!Set("warn", "fail", "off").contains(gate))
+      sys.error(s"SPARK_GRAFT_DQ_GATE must be warn|fail|off, got '$gate'")
     GraftSession.run { spark =>
-      val rental = sys.env.get("SPARK_GRAFT_SOURCE_JDBC_URL") match {
+      val rental = flag("SPARK_GRAFT_SOURCE_JDBC_URL") match {
         case Some(url) =>
           val props = new java.util.Properties()
-          sys.env.get("SPARK_GRAFT_SOURCE_JDBC_USER").foreach(props.setProperty("user", _))
-          sys.env.get("SPARK_GRAFT_SOURCE_JDBC_PASSWORD").foreach(props.setProperty("password", _))
-          spark.read.jdbc(url,
-            sys.env.getOrElse("SPARK_GRAFT_SOURCE_TABLE", "rental"), props)
+          flag("SPARK_GRAFT_SOURCE_JDBC_USER").foreach(props.setProperty("user", _))
+          flag("SPARK_GRAFT_SOURCE_JDBC_PASSWORD").foreach(props.setProperty("password", _))
+          spark.read.jdbc(url, flag("SPARK_GRAFT_SOURCE_TABLE").getOrElse("rental"), props)
         case None => Tables.rental(spark, sfDir)
       }
-      // DQ gate BEFORE any state mutation (Deequ-style publish guard):
-      // warn (default) prints failures and proceeds; fail aborts with exit
+      // DQ gate BEFORE any state mutation (Deequ-style publish guard),
+      // over the checks the run's first source pass computes: warn
+      // (default) prints failures and proceeds; fail aborts with exit
       // code 2 on a REQUIRED failure, leaving watermark/summary untouched
       // (advisory checks never block — see Profile.rentalDqChecks); off
-      // skips the scan (the gate costs one extra pass over the source)
-      sys.env.getOrElse("SPARK_GRAFT_DQ_GATE", "warn").toLowerCase match {
-        case "off" =>
-        case gate @ ("warn" | "fail") =>
-          val checks = graft.ops.Profile.rentalDqChecks(rental).collect()
-          val failed = checks.filter(!_.getBoolean(2))
-          failed.foreach(r => println(s"[incremental] DQ " +
-            s"${if (r.getBoolean(3)) "FAIL" else "warn"} ${r.getString(0)} metric=${r.get(1)}"))
-          if (failed.isEmpty)
-            println(s"[incremental] DQ gate passed (${checks.length} checks)")
-          else if (gate == "fail" && failed.exists(_.getBoolean(3))) {
-            GraftSession.gateFailed("[incremental] DQ gate failed - aborting before state mutation")
-          }
-        // a typo'd mode must not silently degrade a safety gate to warn
-        case other => sys.error(
-          s"SPARK_GRAFT_DQ_GATE must be warn|fail|off, got '$other'")
+      // skips only the verdict
+      def dqGate(checks: Seq[Row]): Unit = if (gate != "off") {
+        val failed = checks.filter(!_.getBoolean(2))
+        failed.foreach(r => println(s"[incremental] DQ " +
+          s"${if (r.getBoolean(3)) "FAIL" else "warn"} ${r.getString(0)} metric=${r.get(1)}"))
+        if (failed.isEmpty)
+          println(s"[incremental] DQ gate passed (${checks.length} checks)")
+        else if (gate == "fail" && failed.exists(_.getBoolean(3)))
+          GraftSession.gateFailed("[incremental] DQ gate failed - aborting before state mutation")
       }
-      val report = IncrementalWeeklySummary.run(spark, rental, stateDir, mode)
+      val report = IncrementalWeeklySummary.run(spark, rental, stateDir, mode, dqGate = dqGate)
       println(s"[incremental] watermark ${report.previousWatermark} -> ${report.newWatermark}; " +
         s"deltaRows=${report.deltaRows} affectedWeeks=${report.affectedWeeks} processed=${report.processed}")
       graft.incremental.RunLog.append(spark, stateDir, report)
@@ -90,11 +89,11 @@ object IncrementalRun {
         summaryTbl.vacuum()
       }
       CatalogDdl.registerStateTables(spark, stateDir)
-      sys.env.get("SPARK_GRAFT_ROLLUP_JDBC_URL").foreach { url =>
+      flag("SPARK_GRAFT_ROLLUP_JDBC_URL").foreach { url =>
         val props = new java.util.Properties()
-        sys.env.get("SPARK_GRAFT_ROLLUP_JDBC_USER").foreach(props.setProperty("user", _))
-        sys.env.get("SPARK_GRAFT_ROLLUP_JDBC_PASSWORD").foreach(props.setProperty("password", _))
-        val table = sys.env.getOrElse("SPARK_GRAFT_ROLLUP_TABLE", "weekly_rental_summary")
+        flag("SPARK_GRAFT_ROLLUP_JDBC_USER").foreach(props.setProperty("user", _))
+        flag("SPARK_GRAFT_ROLLUP_JDBC_PASSWORD").foreach(props.setProperty("password", _))
+        val table = flag("SPARK_GRAFT_ROLLUP_TABLE").getOrElse("weekly_rental_summary")
         val summary = IncrementalWeeklySummary.readSummary(spark, stateDir)
         val conn = java.sql.DriverManager.getConnection(url, props)
         try {

@@ -4,11 +4,10 @@ import java.sql.{Date, Timestamp}
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.WeeklySummary
+import graft.ops.{Profile, WeeklySummary}
 
 /** How far the per-run recompute reaches.
   *
@@ -43,19 +42,30 @@ final case class RunReport(
 
 /** The reference's incremental watermark-driven pipeline
   * (etl_script_incremental_pandas.py:24-298), re-expressed as Spark jobs
-  * over parquet state:
+  * over parquet state. A processed run reads the source twice, a no-op
+  * run once:
   *
-  *  1. empty-target ⇒ watermark reset to 1900-01-01 (etl:68-85)
-  *  2. read watermark; probe `MAX(last_update)` (etl:89-113)
-  *  3. delta extract `last_update ∈ (wm, max]` (etl:116-128) — on a real
-  *     JDBC/CDC source this predicate pushes down to the scan; on parquet
-  *     it prunes row groups via min/max stats
-  *  4. affected weeks = weeks of delta rental/return dates ∪ end-gap
-  *     backfill weeks (etl:131-200)
-  *  5. recompute affected weeks — the reference loops one SQL round-trip
-  *     per week (etl:218-243); we run ONE plan:
-  *     [[WeeklySummary.statsForWeeks]] over the sparse affected set
-  *     (SURVEY.md G2 elimination)
+  *  1. target state from the summary MANIFEST, zero jobs: empty target
+  *     (row count 0) ⇒ watermark reset to 1900-01-01 (etl:68-85); else
+  *     the watermark is the commit tag and the last summarized week is
+  *     the key's recorded max
+  *  2. PASS A, one global aggregate over the source: the DQ counts and
+  *     verdicts of [[graft.ops.Profile.rentalDqChecks]] (handed to the
+  *     run's `dqGate` before any write), `MAX(last_update)` (etl:89-113),
+  *     the max activity week and the min activity week (end-gap bounds,
+  *     etl:148-194), and the delta row count — rows with `last_update ∈
+  *     (wm, max]`, the delta extract of etl:116-128
+  *  3. PASS B, one week-grain aggregate over the source, only when the
+  *     delta has rows or the end gap is open: full counts per week plus
+  *     the delta's counts ([[WeeklySummary.weekCounts]] with the extract
+  *     predicate as flag), local-checkpointed. Affected weeks = weeks
+  *     where the delta rented or returned ∪ end-gap backfill weeks
+  *     (etl:131-200), united on the driver
+  *  4. no affected week ⇒ no-op: watermark advance only (etl:202-213)
+  *  5. recompute the affected weeks from the checkpointed counts — the
+  *     reference loops one SQL round-trip per week (etl:218-243); we run
+  *     ONE plan, [[WeeklySummary.statsFromCounts]] (SURVEY.md G2
+  *     elimination), collected to a local frame of one row per week
   *  6. keyed upsert into the summary (etl:249-267) = [[SnapshotTable.merge]]:
   *     file-pruned copy-on-write, so only the files whose week range the
   *     affected set touches are rewritten — at 100 TB a weekly delta
@@ -73,6 +83,10 @@ final case class RunReport(
   *     watermark is MONOTONE: a source whose MAX(last_update) moved
   *     backwards (source-side deletes) never lowers it — see the
   *     `newWatermark` clamp in [[run]].
+  *
+  * On a JDBC source neither pass pushes the delta predicate down: pass A
+  * must see every row for the DQ counts and the end-gap bounds, and
+  * pass B for the full per-week counts the recompute needs.
   *
   * Deliberate divergence: the reference's per-week recompute compares raw
   * timestamps against week-end *midnight* (etl:226,230,234-235), while its
@@ -126,13 +140,18 @@ object IncrementalWeeklySummary {
 
   /** One incremental run. `now` parameterizes the reference's
     * `CURRENT_TIMESTAMP` audit column for deterministic tests (SURVEY.md F9).
+    * `dqGate` receives the source's DQ checks (the rows of
+    * [[graft.ops.Profile.rentalDqChecks]]) after pass A and before any
+    * state mutation; it throws to abort the run.
     */
   def run(
       spark: SparkSession,
       rental0: DataFrame,
       stateDir: String,
       mode: ConsistencyMode = ConsistencyMode.Faithful,
-      now: Timestamp = new Timestamp(System.currentTimeMillis())): RunReport = {
+      now: Timestamp = new Timestamp(System.currentTimeMillis()),
+      dqGate: Seq[Row] => Unit = _ => ()): RunReport = {
+    import scala.jdk.CollectionConverters._
 
     // Timestamp normalization (etl:103-108): sources may carry
     // TIMESTAMP_NTZ (e.g. the harness parquet) or tz-aware timestamps;
@@ -145,19 +164,34 @@ object IncrementalWeeklySummary {
     // pin the base version: the merge below is compare-and-swap against
     // it, so a concurrent run fails loudly instead of losing an update
     val baseVersion = table.currentVersion
-    val summary = readSummary(spark, stateDir)
-    val targetEmpty = summary.limit(1).isEmpty
 
-    // -- step 0/1: window bounds (etl:89-113). Empty target ⇒ watermark
-    // resets to DefaultStart (etl:68-85) — with the watermark riding the
-    // summary commit, the reset is a READ rule, not a write: an empty
-    // summary cannot carry a meaningful watermark.
+    // -- step 1: target state from the manifest. Empty target ⇒
+    // watermark resets to DefaultStart (etl:68-85) — with the watermark
+    // riding the summary commit, the reset is a READ rule, not a write:
+    // an empty summary cannot carry a meaningful watermark.
+    val targetEmpty = baseVersion.isEmpty || table.countRows() == 0
     val previousWatermark =
       if (targetEmpty) Watermarks.DefaultStart
       else watermark(spark, stateDir)
-    val maxSource: Option[Timestamp] =
-      Option(rental.agg(max(col("last_update"))).head().getTimestamp(0))
-    val currentMax = maxSource.getOrElse(previousWatermark) // etl:109-111
+    val maxTargetWeek: Option[Date] =
+      if (targetEmpty) None else table.keyMax().map(_.asInstanceOf[Date])
+
+    // -- step 2: pass A. Every non-null last_update is ≤ the max it
+    // rides with, so `last_update > wm` counts exactly the rows of the
+    // extract window (wm, max] (empty when max ≤ wm).
+    val wk = WeeklySummary.weekStart _
+    val activity = greatest(col("rental_date"), coalesce(col("return_date"), col("rental_date")))
+    val probes = Profile.rentalDqAggs ++ Seq(
+      max(col("last_update")).as("max_update"),
+      wk(to_date(max(activity))).as("max_activity_week"),
+      wk(to_date(min(when(col("rental_date").isNotNull, activity)))).as("min_activity_week"),
+      count(when(col("last_update") > lit(previousWatermark), 1)).as("delta_rows"))
+    val a = rental.agg(probes.head, probes.tail: _*)
+      .select(Profile.rentalDqVerdicts, col("max_update"), col("max_activity_week"),
+        col("min_activity_week"), col("delta_rows"))
+      .head()
+    dqGate(a.getSeq[Row](0))
+    val currentMax = Option(a.getTimestamp(1)).getOrElse(previousWatermark) // etl:109-111
     // Monotone watermark (deliberate divergence, documented): the
     // reference sets watermark = MAX(last_update) unconditionally, so a
     // source whose max moves BACKWARDS (rows deleted at the source —
@@ -181,54 +215,38 @@ object IncrementalWeeklySummary {
     // assigned monotonically by the source, as the reference does.
     val newWatermark =
       if (currentMax.after(previousWatermark)) currentMax else previousWatermark
+    val deltaRows = a.getLong(4)
 
-    // -- step 2: delta extract (etl:116-128)
-    val delta =
-      if (currentMax.after(previousWatermark))
-        rental.filter(
-          col("last_update") > lit(previousWatermark) &&
-          col("last_update") <= lit(currentMax))
-      else rental.limit(0)
-
-    // -- step 3a: weeks touched by the delta (etl:131-146)
-    val wk = WeeklySummary.weekStart _
-    val changedWeeks = delta
-      .select(wk(to_date(col("rental_date"))).as("week_beginning"))
-      .filter(col("week_beginning").isNotNull)
-      .union(delta
-        .filter(col("return_date").isNotNull)
-        .select(wk(to_date(col("return_date"))).as("week_beginning")))
-      .distinct()
-
-    // -- step 3b: end-gap backfill weeks (etl:148-194)
-    val activity = greatest(col("rental_date"), coalesce(col("return_date"), col("rental_date")))
-    val maxActivityWeek: Option[Date] =
-      Option(rental.agg(wk(to_date(max(activity)))).head().getDate(0))
-    val maxTargetWeek: Option[Date] =
-      Option(summary.agg(max(col("week_beginning"))).head().getDate(0))
-
-    val backfillStart: Option[Date] = maxActivityWeek.flatMap { maxW =>
-      maxTargetWeek match {
-        case None =>
-          Option(rental
-            .filter(col("rental_date").isNotNull)
-            .agg(wk(to_date(min(activity)))).head().getDate(0))
-        case Some(t) if t.toLocalDate.isBefore(maxW.toLocalDate) =>
-          Some(Date.valueOf(t.toLocalDate.plusWeeks(1)))
+    // -- end-gap backfill weeks (etl:148-194), on the driver
+    val maxActivityWeek = Option(a.getDate(2)).map(_.toLocalDate)
+    val backfillStart: Option[LocalDate] = maxActivityWeek.flatMap { maxW =>
+      maxTargetWeek.map(_.toLocalDate) match {
+        case None => Option(a.getDate(3)).map(_.toLocalDate)
+        case Some(t) if t.isBefore(maxW) => Some(t.plusWeeks(1))
         case _ => None
       }
     }
-    val backfillWeeks: DataFrame = (backfillStart, maxActivityWeek) match {
-      case (Some(s), Some(e)) => weekRange(spark, s, e)
-      case _ => changedWeeks.limit(0)
+    val backfillWeeks = (backfillStart, maxActivityWeek) match {
+      case (Some(s), Some(e)) => mondays(s, e)
+      case _ => Nil
     }
 
-    // -- step 3c: combine (etl:196-200)
-    val affectedNarrow = changedWeeks.union(backfillWeeks).distinct().cache()
-    val nAffected = affectedNarrow.count()
+    // -- step 3: pass B, run on first use: by the changed weeks when the
+    // delta has rows, by the recompute when only the end gap is open.
+    // The flag is the extract predicate itself, so a row with a null
+    // last_update stays out of the delta.
+    lazy val counts = WeeklySummary.weekCounts(rental, None, Some(
+      col("last_update") > lit(previousWatermark) && col("last_update") <= lit(currentMax)))
+      .localCheckpoint()
+    // weeks touched by the delta (etl:131-146) ∪ backfill (etl:196-200)
+    val changedWeeks =
+      if (deltaRows == 0) Nil
+      else counts.filter(col("f_rented") > 0 || col("f_returned") > 0)
+        .select(col("week_beginning")).collect().map(_.getDate(0).toLocalDate).toSeq
+    val affectedNarrow = (changedWeeks ++ backfillWeeks).distinct
 
-    if (nAffected == 0) {
-      // etl:202-213 — bump watermark, nothing to process: a tag-only
+    if (affectedNarrow.isEmpty) {
+      // -- step 4, etl:202-213 — bump watermark, nothing to process: a tag-only
       // commit on the summary table (no data files). An empty source
       // over a never-committed table has nothing to record — stay
       // write-free (the watermark read rule already yields DefaultStart).
@@ -238,19 +256,22 @@ object IncrementalWeeklySummary {
         table.create(spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row], summarySchema), tagOf(newWatermark))
       }
-      affectedNarrow.unpersist()
-      return RunReport(previousWatermark, newWatermark, delta.count(), 0, processed = false)
+      return RunReport(previousWatermark, newWatermark, deltaRows, 0, processed = false)
     }
 
     val affected = mode match {
       case ConsistencyMode.Faithful => affectedNarrow
       case ConsistencyMode.Strict =>
-        val minAffected = affectedNarrow.agg(min(col("week_beginning"))).head().getDate(0)
-        weekRange(spark, minAffected, maxActivityWeek.getOrElse(minAffected))
+        val minAffected = affectedNarrow.minBy(_.toEpochDay)
+        mondays(minAffected, maxActivityWeek.getOrElse(minAffected))
     }
 
-    // -- step 4: recompute all affected weeks in one plan (etl:216-244)
-    val recomputed = WeeklySummary.statsForWeeks(rental, affected)
+    // -- step 5: recompute all affected weeks in one plan (etl:216-244),
+    // materialized once as a local frame so the commit's jobs never
+    // re-derive it
+    val weeks = spark.createDataFrame(affected.map(w => Row(Date.valueOf(w))).asJava,
+      StructType(Seq(StructField("week_beginning", DateType))))
+    val stats = WeeklySummary.statsFromCounts(counts, weeks)
       .select(
         col("week_beginning"),
         col("outstanding_rentals_at_week_end").as("OutstandingRentals"),
@@ -258,28 +279,25 @@ object IncrementalWeeklySummary {
         col("newly_rented_during_week"),
         col("net_change_in_outstanding"),
         lit(now).as("last_updated"))
+    val recomputed = spark.createDataFrame(stats.collect().toSeq.asJava, stats.schema)
 
-    // -- upsert + watermark advance as ONE atomic commit (etl:249-284;
-    // the reference's single transaction, etl:272). merge is file-pruned
-    // copy-on-write: weeks outside the affected range carry forward by
-    // reference ([[SnapshotTable]]); statsForWeeks returns exactly one
-    // row per affected week (it semi-joins back to the spine), so the
-    // keyed merge is result-identical to anti-join-then-union.
+    // -- step 6/7: upsert + watermark advance as ONE atomic commit
+    // (etl:249-284; the reference's single transaction, etl:272). merge
+    // is file-pruned copy-on-write: weeks outside the affected range
+    // carry forward by reference ([[SnapshotTable]]); statsFromCounts
+    // returns exactly one row per affected week (it semi-joins back to
+    // the requested weeks), so the keyed merge is result-identical to
+    // anti-join-then-union.
     if (targetEmpty) table.create(recomputed, tagOf(newWatermark))
     else table.merge(recomputed, expectedVersion = baseVersion, tag = tagOf(newWatermark))
 
-    val report = RunReport(previousWatermark, newWatermark, delta.count(), nAffected, processed = true)
-    affectedNarrow.unpersist()
-    report
+    RunReport(previousWatermark, newWatermark, deltaRows, affectedNarrow.size, processed = true)
   }
 
-  /** Contiguous Monday-week spine [start, end], both inclusive Mondays —
-    * the reference's while-loop week enumeration (etl:187-191) as a
-    * `sequence`/`explode` generator. */
-  def weekRange(spark: SparkSession, start: Date, end: Date): DataFrame =
-    spark.range(1).select(
-      explode(sequence(
-        lit(start), lit(end), expr("INTERVAL 7 DAYS"))).as("week_beginning"))
+  /** Mondays from `start` to `end`, both inclusive — the reference's
+    * while-loop week enumeration (etl:187-191). */
+  private def mondays(start: LocalDate, end: LocalDate): Seq[LocalDate] =
+    Iterator.iterate(start)(_.plusWeeks(1)).takeWhile(!_.isAfter(end)).toSeq
 
   /** Current materialized summary (empty frame when never run). */
   def readSummary(spark: SparkSession, stateDir: String): DataFrame = {

@@ -783,6 +783,25 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * opened. At 100 TB, `COUNT(*)` is driver-side arithmetic. */
   def countRows(): Long = requireManifest.entries.map(_.logicalRows).sum
 
+  /** The current snapshot's largest key, decoded from the manifest's
+    * per-file key stats with zero files opened — the MAX rule of
+    * [[serveAggregate]]. Where the manifest cannot prove it (a file
+    * without key stats, a deletion vector, a timestamp key), the
+    * [[boundsOf]] scan of the candidate files answers. None on an empty
+    * snapshot. */
+  def keyMax(): Option[Any] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.connector.expressions.{Expression, Expressions}
+    import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Max}
+    val m = requireManifest
+    val max = new Aggregation(
+      Array[AggregateFunc](new Max(Expressions.column(key))), Array.empty[Expression])
+    Option(serveAggregate(Some(m.version), max) match {
+      case Some(Seq(v)) => CatalystTypeConverters.convertToScala(v, m.schema(key).dataType)
+      case _ => boundsOf(key).head().get(1)
+    })
+  }
+
   /** Files [[countWhere]] had to open on its most recent call — spec
     * seam for asserting manifest-served coverage. -1 until called. */
   private[graft] var lastCountScanned: Int = -1

@@ -53,7 +53,11 @@ object Profile {
 
   /** DQ gate for the incremental pipeline's rental change log — run by
     * IncrementalRun BEFORE any state mutation (`SPARK_GRAFT_DQ_GATE=
-    * warn|fail|off`). One aggregation pass, no joins.
+    * warn|fail|off`). One aggregation pass, no joins: the
+    * [[rentalDqAggs]] columns, then the [[rentalDqVerdicts]] rules over
+    * them. The incremental run folds the same columns into its own
+    * source probe ([[graft.incremental.IncrementalWeeklySummary.run]]),
+    * so the gate costs no pass of its own.
     *
     * Two check tiers, split by what the PIPELINE depends on:
     * `required = true` — row count and identity/date completeness (join
@@ -65,33 +69,40 @@ object Profile {
     * indifferent to them, and a gate that can't pass real data trains
     * operators to turn it off. They report, they don't block. */
   def rentalDqChecks(rental: DataFrame): DataFrame =
-    rental.agg(
-      count(lit(1)).as("n"),
-      count(col("rental_id")).as("n_id"),
-      count(col("rental_date")).as("n_rd"),
-      count(col("last_update")).as("n_lu"),
-      sum(when(col("return_date") < col("rental_date"), 1L).otherwise(0L))
-        .as("neg_dur"),
-      sum(when(col("last_update") < col("rental_date"), 1L).otherwise(0L))
-        .as("early_lu"))
-      .select(explode(array(
-        tiered("row_count", col("n"), col("n") > 0, required = true),
-        tiered("completeness_rental_id",
-          round(col("n_id").cast(DoubleType) / col("n"), 6), col("n_id") === col("n"),
-          required = true),
-        tiered("completeness_rental_date",
-          round(col("n_rd").cast(DoubleType) / col("n"), 6), col("n_rd") === col("n"),
-          required = true),
-        tiered("completeness_last_update",
-          round(col("n_lu").cast(DoubleType) / col("n"), 6), col("n_lu") === col("n"),
-          required = true),
-        tiered("return_not_before_rental", col("neg_dur"), col("neg_dur") === 0,
-          required = false),
-        tiered("update_not_before_rental", col("early_lu"), col("early_lu") === 0,
-          required = false)
-      )).as("c"))
+    rental.agg(rentalDqAggs.head, rentalDqAggs.tail: _*)
+      .select(explode(rentalDqVerdicts).as("c"))
       .select(col("c.check").as("check"), col("c.metric").as("metric"),
         col("c.passed").as("passed"), col("c.required").as("required"))
+
+  /** The rental DQ counts, as aggregate columns over the source. */
+  private[graft] def rentalDqAggs: Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    count(col("rental_id")).as("n_id"),
+    count(col("rental_date")).as("n_rd"),
+    count(col("last_update")).as("n_lu"),
+    count(when(col("return_date") < col("rental_date"), 1)).as("neg_dur"),
+    count(when(col("last_update") < col("rental_date"), 1)).as("early_lu"))
+
+  /** The six checks over a frame carrying the [[rentalDqAggs]] columns:
+    * an array of (check, metric, passed, required) structs. Every count
+    * is 0, never null, on an empty source, and a completeness ratio is
+    * null there (`try_divide`), so the probe never throws; `row_count`
+    * fails it instead. */
+  private[graft] def rentalDqVerdicts: Column = {
+    def ratio(c: String) = round(try_divide(col(c).cast(DoubleType), col("n")), 6)
+    array(
+      tiered("row_count", col("n"), col("n") > 0, required = true),
+      tiered("completeness_rental_id", ratio("n_id"), col("n_id") === col("n"),
+        required = true),
+      tiered("completeness_rental_date", ratio("n_rd"), col("n_rd") === col("n"),
+        required = true),
+      tiered("completeness_last_update", ratio("n_lu"), col("n_lu") === col("n"),
+        required = true),
+      tiered("return_not_before_rental", col("neg_dur"), col("neg_dur") === 0,
+        required = false),
+      tiered("update_not_before_rental", col("early_lu"), col("early_lu") === 0,
+        required = false))
+  }
 
   private def tiered(name: String, metric: Column, passed: Column,
       required: Boolean) =

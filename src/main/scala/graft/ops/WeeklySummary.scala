@@ -82,27 +82,34 @@ object WeeklySummary {
     * return_date)) — the cumulative-outstanding guard (object doc); 4
     * (only when `asOf` is given) = open rental's spine-extension week
     * `week(GREATEST(rental_date, asOf))`, reference_query.sql:5-8. Null
-    * weeks (null return_date for kinds 2/3) drop before the shuffle. */
-  private def weekCounts(rental: DataFrame, asOf: Option[LocalDate]): DataFrame = {
+    * weeks (null return_date for kinds 2/3) drop before the shuffle.
+    *
+    * With a `flag` (a boolean over the source row), every event carries
+    * it and each `n_<kind>` count gains an `f_<kind>` twin counting only
+    * the flagged rows — a null flag counts as false. That is how one
+    * pass yields both the full counts and a subset's: the old state of
+    * [[upsertRoundParts]], the delta of the incremental run. */
+  private[graft] def weekCounts(rental: DataFrame, asOf: Option[LocalDate],
+      flag: Option[Column] = None): DataFrame = {
     val rd = to_date(col("rental_date"))
     val ret = to_date(col("return_date"))
-    val base = Seq(
-      struct(weekStart(rd).as("week_beginning"), lit(1).as("kind")),
-      struct(weekStart(ret).as("week_beginning"), lit(2).as("kind")),
-      struct(when(ret.isNotNull, weekStart(greatest(rd, ret))).as("week_beginning"),
-        lit(3).as("kind")))
-    val spineEvt = asOf.toSeq.map(d =>
-      struct(when(ret.isNull, weekStart(greatest(rd, lit(java.sql.Date.valueOf(d)))))
-        .as("week_beginning"), lit(4).as("kind")))
+    def event(week: Column, kind: Int) = struct(
+      Seq(week.as("week_beginning"), lit(kind).as("kind")) ++ flag.map(_.as("flag")): _*)
+    val events = Seq(
+      event(weekStart(rd), 1),
+      event(weekStart(ret), 2),
+      event(when(ret.isNotNull, weekStart(greatest(rd, ret))), 3)) ++
+      asOf.map(d => event(
+        when(ret.isNull, weekStart(greatest(rd, lit(java.sql.Date.valueOf(d))))), 4))
+    val kinds = (Seq("rented", "returned", "closed") ++ asOf.map(_ => "open_spine"))
+      .zipWithIndex.map { case (k, i) => (k, col("kind") === i + 1) }
     val aggs =
-      Seq(
-        count(when(col("kind") === 1, 1)).as("n_rented"),
-        count(when(col("kind") === 2, 1)).as("n_returned"),
-        count(when(col("kind") === 3, 1)).as("n_closed")) ++
-      asOf.toSeq.map(_ => count(when(col("kind") === 4, 1)).as("n_open_spine"))
+      kinds.map { case (k, is) => count(when(is, 1)).as(s"n_$k") } ++
+      flag.toSeq.flatMap(_ =>
+        kinds.map { case (k, is) => count(when(is && col("flag"), 1)).as(s"f_$k") })
     rental
-      .select(explode(array(base ++ spineEvt: _*)).as("e"))
-      .select(col("e.week_beginning").as("week_beginning"), col("e.kind").as("kind"))
+      .select(explode(array(events: _*)).as("e"))
+      .select(col("e.*"))
       .filter(col("week_beginning").isNotNull)
       .groupBy(col("week_beginning"))
       .agg(aggs.head, aggs.tail: _*)
@@ -114,7 +121,7 @@ object WeeklySummary {
     * the result is then semi-joined back to `requested`. Extra activity
     * weeks (returns-only, spine-extension) contribute 0 to both
     * cumulative sums, so their presence never changes a requested row. */
-  private def statsFromCounts(counts: DataFrame, weeks: DataFrame): DataFrame = {
+  private[graft] def statsFromCounts(counts: DataFrame, weeks: DataFrame): DataFrame = {
     val c = counts.select(
       col("week_beginning"), col("n_rented"), col("n_returned"), col("n_closed"))
     val allWeeks = weeks.select(col("week_beginning"))
@@ -185,10 +192,10 @@ object WeeklySummary {
     * (reference etl:216-268 as one plan) — FUSED to a single source scan.
     *
     * The exploded (week, kind) events of [[weekCounts]] additionally
-    * carry an `old` flag (`last_update ≤ t`), so ONE week-keyed
+    * carry the flag `last_update ≤ t` (old), so ONE week-keyed
     * aggregation yields both the old-state counts and the full counts.
     * Everything downstream is week-cardinality arithmetic:
-    *   - old spine + cumulative stats ← the `o_*` columns;
+    *   - old spine + cumulative stats ← the flagged `f_*` columns;
     *   - the affected-week set ← count DIFFERENCES (a week gained a
     *     delta rental/return exactly when its full count exceeds its old
     *     count — no second scan to derive the delta's weeks);
@@ -210,48 +217,25 @@ object WeeklySummary {
     * [[graft.incremental.Upsert.merge]]. */
   private[graft] def upsertRoundParts(rental: DataFrame, t: java.sql.Timestamp,
       asOf: LocalDate): (DataFrame, DataFrame) = {
-    val rd = to_date(col("rental_date"))
-    val ret = to_date(col("return_date"))
-    val old = (col("last_update") <= lit(t)).as("old")
-    val evts = Seq(
-      struct(weekStart(rd).as("week_beginning"), lit(1).as("kind"), old),
-      struct(weekStart(ret).as("week_beginning"), lit(2).as("kind"), old),
-      struct(when(ret.isNotNull, weekStart(greatest(rd, ret))).as("week_beginning"),
-        lit(3).as("kind"), old),
-      struct(when(ret.isNull, weekStart(greatest(rd, lit(java.sql.Date.valueOf(asOf)))))
-        .as("week_beginning"), lit(4).as("kind"), old))
     // Week-cardinality after the aggregation; localCheckpoint so the four
     // downstream consumers (old spine, old stats, affected set, incoming
     // stats) reuse the one materialized pass instead of re-scanning.
-    val counts = rental
-      .select(explode(array(evts: _*)).as("e"))
-      .select(col("e.week_beginning").as("week_beginning"), col("e.kind").as("kind"),
-        col("e.old").as("old"))
-      .filter(col("week_beginning").isNotNull)
-      .groupBy(col("week_beginning"))
-      .agg(
-        count(when(col("kind") === 1 && col("old"), 1)).as("o_rented"),
-        count(when(col("kind") === 2 && col("old"), 1)).as("o_returned"),
-        count(when(col("kind") === 3 && col("old"), 1)).as("o_closed"),
-        count(when(col("kind") === 4 && col("old"), 1)).as("o_open_spine"),
-        count(when(col("kind") === 1, 1)).as("n_rented"),
-        count(when(col("kind") === 2, 1)).as("n_returned"),
-        count(when(col("kind") === 3, 1)).as("n_closed"))
+    val counts = weekCounts(rental, Some(asOf), Some(col("last_update") <= lit(t)))
       .localCheckpoint()
     val oldCounts = counts.select(col("week_beginning"),
-      col("o_rented").as("n_rented"), col("o_returned").as("n_returned"),
-      col("o_closed").as("n_closed"))
+      col("f_rented").as("n_rented"), col("f_returned").as("n_returned"),
+      col("f_closed").as("n_closed"))
     val oldSpine = counts
       .agg(
-        min(when(col("o_rented") > 0, col("week_beginning"))).as("min_week"),
-        max(when(col("o_returned") > 0 || col("o_open_spine") > 0,
+        min(when(col("f_rented") > 0, col("week_beginning"))).as("min_week"),
+        max(when(col("f_returned") > 0 || col("f_open_spine") > 0,
           col("week_beginning"))).as("max_week"))
       .select(explode(
         sequence(col("min_week"), col("max_week"), expr("INTERVAL 7 DAYS")))
         .as("week_beginning"))
     val oldSummary = statsFromCounts(oldCounts, oldSpine)
     val affected = counts
-      .filter(col("n_rented") > col("o_rented") || col("n_returned") > col("o_returned"))
+      .filter(col("n_rented") > col("f_rented") || col("n_returned") > col("f_returned"))
       .select(col("week_beginning"))
     val incoming = statsFromCounts(
       counts.select(col("week_beginning"), col("n_rented"), col("n_returned"),

@@ -160,4 +160,87 @@ class IncrementalSpec extends AnyFunSuite {
       .select(col("outstanding_rentals_at_week_end")).head().getLong(0)
     assert(truthAt == 0)
   }
+
+  test("a processed run reads the source twice, a no-op run once") {
+    // a non-deterministic counting filter on a parquet source: every
+    // pass over the source runs it once per row, and nothing can cache
+    // or fold it away
+    val path = s"${freshDir()}/rental.parquet"
+    log.write.parquet(path)
+    val rows = log.count()
+    val scanned = spark.sparkContext.longAccumulator("rental rows scanned")
+    val counting = udf(() => { scanned.add(1); true }).asNondeterministic()
+    val source = spark.read.parquet(path).filter(counting())
+    def passes(mode: ConsistencyMode, dir: String): Long = {
+      scanned.reset()
+      IncrementalWeeklySummary.run(spark, source, dir, mode, now)
+      assert(scanned.value % rows == 0, s"partial pass: ${scanned.value} rows of $rows")
+      scanned.value / rows
+    }
+    val dir = freshDir()
+    assert(passes(ConsistencyMode.Faithful, dir) === 2, "processed run")
+    assert(passes(ConsistencyMode.Faithful, dir) === 1, "no-op rerun")
+    assert(passes(ConsistencyMode.Strict, freshDir()) <= 2, "strict run")
+  }
+
+  /** An sf directory whose `Tables.rental` view holds `orders`, each
+    * (o_orderkey, o_orderstatus, o_orderdate) with one lineitem shipped
+    * two days after the order. */
+  private def sfDir(orders: Seq[(java.lang.Long, String, String)]): String = {
+    val s = spark
+    import s.implicits._
+    val dir = freshDir()
+    val o = orders.toDF("o_orderkey", "o_orderstatus", "o_orderdate")
+      .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
+    o.write.parquet(s"$dir/orders.parquet")
+    o.select(col("o_orderkey").as("l_orderkey"),
+      (col("o_orderdate") + expr("INTERVAL 2 DAYS")).as("l_shipdate"))
+      .write.parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  private def withGate[A](gate: String)(body: => A): A = {
+    sys.props("SPARK_GRAFT_DQ_GATE") = gate
+    try body
+    finally {
+      sys.props.remove("SPARK_GRAFT_DQ_GATE")
+      spark.sql("DROP VIEW IF EXISTS weekly_rental_summary")
+      spark.sql("DROP VIEW IF EXISTS etl_watermarks")
+      spark.sql("DROP TABLE IF EXISTS etl_run_log")
+    }
+  }
+
+  test("DQ gate=fail: a null rental_id aborts the embedded main before any state change") {
+    val clean = Seq[(java.lang.Long, String, String)](
+      (1L, "F", "2024-01-02"), (2L, "O", "2024-01-10"))
+    val state = freshDir()
+    withGate("fail") {
+      IncrementalRun.main(Array(sfDir(clean), state))
+      val table = IncrementalWeeklySummary.summaryTable(spark, state)
+      val (version, wm) = (table.currentVersion, IncrementalWeeklySummary.watermark(spark, state))
+      assert(version.isDefined && RunLog.read(spark, state).count() === 1)
+      // a newer order with a null key: a delta to process, but a
+      // REQUIRED completeness check fails
+      val dirty = sfDir(clean :+ ((null, "O", "2024-01-20")))
+      val e = intercept[GraftSession.RunFailed](IncrementalRun.main(Array(dirty, state)))
+      assert(e.code === 2)
+      assert(table.currentVersion === version)
+      assert(IncrementalWeeklySummary.watermark(spark, state) === wm)
+      assert(RunLog.read(spark, state).count() === 1)
+      // warn reports the same failure and processes the delta
+      sys.props("SPARK_GRAFT_DQ_GATE") = "warn"
+      IncrementalRun.main(Array(dirty, state))
+      assert(table.currentVersion.get > version.get)
+      assert(RunLog.read(spark, state).count() === 2)
+    }
+  }
+
+  test("an unknown DQ gate value errors instead of degrading to warn") {
+    val state = freshDir()
+    val e = withGate("wran") {
+      intercept[RuntimeException](IncrementalRun.main(Array(sfDir(Seq((1L, "O", "2024-01-02"))), state)))
+    }
+    assert(e.getMessage.contains("SPARK_GRAFT_DQ_GATE must be warn|fail|off"))
+    assert(!IncrementalWeeklySummary.summaryTable(spark, state).exists)
+  }
 }

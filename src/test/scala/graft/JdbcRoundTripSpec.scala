@@ -14,9 +14,8 @@ import TestSpark._
 /** End-to-end JDBC round trip over embedded Derby — the full Airflow
   * deployment shape (source DB → incremental pipeline → rollup DB) that
   * the DAG wires via env vars, exercised in-process: rental rows live
-  * in a REAL database, the pipeline reads them over `spark.read.jdbc`
-  * with the watermark delta predicate pushed to the remote scan, and
-  * the summary upserts back over JDBC. Asserts the JDBC-sourced run
+  * in a REAL database, the pipeline reads them over `spark.read.jdbc`,
+  * and the summary upserts back over JDBC. Asserts the JDBC-sourced run
   * converges to the same state as the parquet-sourced run. */
 class JdbcRoundTripSpec extends AnyFunSuite {
 
