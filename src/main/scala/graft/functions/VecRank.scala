@@ -83,8 +83,9 @@ case class CentroidRank(left: Expression, right: Expression,
   * common prefix (VecDot), `bit = dot >= 0` (false for NaN, as the
   * `when` was), bucket = OR of `1L << plane`. A NULL vector yields NULL
   * (null-safe eval; posexplode drops the row) where the old column form
-  * emitted bucket-0 rows — degenerate-input divergence documented per
-  * the r19 advisory, absent from the engine's data. */
+  * emitted bucket-0 rows — a null vector is a missing embedding, not a
+  * zero vector, so it lands in no bucket (ScaleGuardSpec pins this and
+  * [[CentroidRank]]'s null rank). */
 case class LshBuckets(child: Expression, planes: Int, dims: Int, tables: Int)
     extends UnaryExpression {
   require(planes > 0 && dims > 0 && tables > 0, "bad LSH geometry")

@@ -5,6 +5,7 @@ import java.util.ConcurrentModificationException
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 
 /** Minimal manifest-based table format: snapshot-isolated reads, an
@@ -201,7 +202,13 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * min/max alone cannot say whether a range-contained file's rows all
     * satisfy a predicate that nulls fail. */
   private final case class ColStat(kind: String,
-      min: Option[String], max: Option[String], nulls: Option[Long])
+      min: Option[String], max: Option[String], nulls: Option[Long]) {
+    /** (kind, min, max) when the column has orderable recorded bounds. */
+    def range: Option[(String, String, String)] = (kind, min, max) match {
+      case (k, Some(mn), Some(mx)) if k != "opaque" => Some((k, mn, mx))
+      case _ => None
+    }
+  }
 
   /** One immutable data file: table-relative path + row count + the
     * KEY's [[ColStat]] (inlined on the `f` line), plus secondary stats
@@ -664,23 +671,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * so rows outside the range in a boundary-overlapping file are
     * filtered (and the scan sees a pushable filter for its row
     * groups). */
-  def readRange(lo: Option[Any], hi: Option[Any]): DataFrame = {
-    val m = requireManifest
-    val (loE, hiE) = (lo.flatMap(ordEncode), hi.flatMap(ordEncode))
-    val entries = m.entries.filter { e =>
-      (e.kind, e.min, e.max) match {
-        case ("opaque", _, _) => true
-        case (k, Some(fMin), Some(fMax)) =>
-          // file ∩ [lo,hi] ≠ ∅ ⇔ fMin ≤ hi ∧ fMax ≥ lo (missing bound ⇒ no
-          // constraint on that side; unencodable bound ⇒ conservative keep)
-          hiE.forall(h => !ordLt(k, h, fMin)) && loE.forall(l => !ordLt(k, fMax, l))
-        case _ => true
-      }
-    }
-    val df = readEntries(m, entries)
-    val bounded = lo.map(l => col(key) >= lit(l)).toSeq ++ hi.map(h => col(key) <= lit(h))
-    bounded.reduceOption(_ && _).map(df.filter).getOrElse(df)
-  }
+  def readRange(lo: Option[Any], hi: Option[Any]): DataFrame = readWhere(key, lo, hi)
 
   /** Backfill secondary [min,max] stats onto the CURRENT snapshot's
     * files WITHOUT rewriting them — retroactive [[readWhere]] adoption
@@ -753,26 +744,14 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * (written before it was tracked, or by a non-tracking handle) are
     * conservatively kept, so correctness never depends on stats
     * coverage. The exact predicate is applied on top (pushed into the
-    * scan's row groups). `column == key` delegates to [[readRange]].
-    * Skipping sharpness follows the key clustering — see the
-    * [[statsColumns]] note. */
+    * scan's row groups). The key column prunes on its `f`-line bounds
+    * ([[readRange]]). Skipping sharpness follows the key clustering —
+    * see the [[statsColumns]] note. */
   def readWhere(column: String, lo: Option[Any], hi: Option[Any]): DataFrame = {
-    if (column == key) return readRange(lo, hi)
     val m = requireManifest
     require(m.schema.fieldNames.contains(column),
       s"no column $column in table schema ${m.schema.fieldNames.mkString(", ")}")
-    val (loE, hiE) = (lo.flatMap(ordEncode), hi.flatMap(ordEncode))
-    val entries = m.entries.filter { e =>
-      e.stats.get(m.physOf(column)) match {
-        case Some(ColStat(k, Some(fMin), Some(fMax), _)) =>
-          hiE.forall(h => !ordLt(k, h, fMin)) && loE.forall(l => !ordLt(k, fMax, l))
-        // all-null file (known): no row can satisfy a bounded predicate
-        case Some(ColStat(_, None, None, Some(n))) if n == e.rows =>
-          lo.isEmpty && hi.isEmpty
-        case _ => true // no stats recorded for this column: keep
-      }
-    }
-    val df = readEntries(m, entries)
+    val df = readEntries(m, survivors(m, m.entries, between(m.physOf(column), lo, hi)))
     val bounded = lo.map(l => col(column) >= lit(l)).toSeq ++
       hi.map(h => col(column) <= lit(h))
     bounded.reduceOption(_ && _).map(df.filter).getOrElse(df)
@@ -824,7 +803,8 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     require(m.schema.fieldNames.contains(column),
       s"no column $column in table schema ${m.schema.fieldNames.mkString(", ")}")
     val (loE, hiE) = (lo.flatMap(ordEncode), hi.flatMap(ordEncode))
-    // half-encodable bound (e.g. NaN): no manifest reasoning is safe
+    // a bound that does not encode (e.g. NaN) leaves containment
+    // unprovable; disjointness stays sound (the prover keeps on it)
     val encodable = lo.forall(_ => loE.isDefined) && hi.forall(_ => hiE.isDefined)
     // timestamp encodings FLOOR to the millisecond, so equal encodings
     // do not prove order between sub-ms values: "contained" (counted
@@ -836,30 +816,27 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       case TimestampType | TimestampNTZType => false
       case _ => true
     }
-    def statsOf(e: Entry): Option[ColStat] =
-      if (column == key) Some(ColStat(e.kind, e.min, e.max, e.nulls))
-      else e.stats.get(m.physOf(column))
+    def contained(k: String, fMin: String, fMax: String): Boolean =
+      if (exactEnc)
+        loE.forall(l => !ordLt(k, fMin, l)) && hiE.forall(h => !ordLt(k, h, fMax))
+      else
+        loE.forall(l => ordLt(k, l, fMin)) && hiE.forall(h => ordLt(k, fMax, h))
+    val phys = m.physOf(column)
+    // the unbounded count is COUNT(column): an all-null file proves 0
+    val preds = between(phys, lo, hi) match {
+      case Nil => Seq(sources.IsNotNull(phys))
+      case ps => ps
+    }
     var served = 0L
     val toScan = Seq.newBuilder[Entry]
-    m.entries.foreach { e =>
-      statsOf(e) match {
-        case _ if !encodable => toScan += e
-        case Some(ColStat(k, Some(fMin), Some(fMax), nOpt)) if k != "opaque" =>
-          val disjoint = hiE.exists(h => ordLt(k, h, fMin)) ||
-            loE.exists(l => ordLt(k, fMax, l))
-          val contained =
-            if (exactEnc)
-              loE.forall(l => !ordLt(k, fMin, l)) && hiE.forall(h => !ordLt(k, h, fMax))
-            else
-              loE.forall(l => ordLt(k, l, fMin)) && hiE.forall(h => ordLt(k, fMax, h))
-          // a deletion vector only REMOVES rows, so disjointness still
-          // proves 0 — but "contained" can no longer be served from the
-          // manifest (masked rows would count); the scan applies the DV
-          if (disjoint) () // contributes 0 — nulls fail the predicate too
-          else if (contained && nOpt.isDefined && e.dv.isEmpty) served += e.rows - nOpt.get
-          else toScan += e
-        // all-null file with a known count: 0 rows match any predicate
-        case Some(ColStat(_, None, None, Some(n))) if n == e.rows => ()
+    // a deletion vector only REMOVES rows, so disjointness still proves
+    // 0 — but "contained" can no longer be served from the manifest
+    // (masked rows would count); the scan applies the DV
+    survivors(m, m.entries, preds).foreach { e =>
+      statOf(m, e, phys) match {
+        case Some(st @ ColStat(_, _, _, Some(n))) if encodable && e.dv.isEmpty &&
+            st.range.exists { case (k, fMin, fMax) => contained(k, fMin, fMax) } =>
+          served += e.rows - n
         case _ => toScan += e
       }
     }
@@ -896,22 +873,19 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     val m = requireManifest
     require(m.schema.fieldNames.contains(column),
       s"no column $column in table schema ${m.schema.fieldNames.mkString(", ")}")
-    def statsOf(e: Entry): Option[ColStat] =
-      if (column == key) Some(ColStat(e.kind, e.min, e.max, e.nulls))
-      else e.stats.get(m.physOf(column))
+    val phys = m.physOf(column)
     // split: files with orderable bounds / provably all-null / unknown.
     // A deletion-vectored file's recorded extreme may be masked, so it
     // neither votes in the election nor gets skipped — always a scan
     // candidate (readEntries applies its vector); except a physically
     // all-null file, which stays all-null under any deletion.
-    val bounded = m.entries.flatMap(e => statsOf(e) match {
-      case Some(ColStat(k, Some(mn), Some(mx), _)) if k != "opaque" && e.dv.isEmpty =>
-        Some((e, k, mn, mx))
+    val bounded = m.entries.flatMap(e => statOf(m, e, phys).flatMap(_.range) match {
+      case Some((k, mn, mx)) if e.dv.isEmpty => Some((e, k, mn, mx))
       case _ => None
     })
-    val unknown = m.entries.filter(e => statsOf(e) match {
+    val unknown = m.entries.filter(e => statOf(m, e, phys) match {
       case Some(ColStat(_, None, None, Some(n))) if n == e.rows => false // all-null
-      case Some(ColStat(k, Some(_), Some(_), _)) if k != "opaque" => e.dv.isDefined
+      case Some(st) if st.range.isDefined => e.dv.isDefined
       case _ => true
     })
     val candidates: Seq[Entry] =
@@ -1178,68 +1152,50 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       entries: Seq[Entry]): org.apache.spark.sql.sources.BaseRelation = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    var statted = 0
-    val slices = entries.map { e =>
-      // manifest-recorded byte length → FileStatus from driver
-      // arithmetic; entries from pre-length manifests degrade to the
-      // one-stat-RPC path (mtime is unused by the scan: the parquet
-      // read plans off length + path only)
-      val st = e.bytes match {
-        case Some(len) =>
-          new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L,
-            fs.makeQualified(new Path(s"$dir/${e.path}")))
-        case None =>
-          statted += 1
-          fs.getFileStatus(new Path(s"$dir/${e.path}"))
-      }
-      // the key's bounds ride under its PHYSICAL column name (the plan
-      // below is over the physical schema, so pushed-filter attribute
-      // names match), beside any secondary stats — one uniform
-      // per-column bounds map; stats keys are physical already
-      val keyBounds: Map[String, (String, String, String)] =
-        (e.kind, e.min, e.max) match {
-          case (k, Some(mn), Some(mx)) if k != "opaque" =>
-            Map(m.physOf(key) -> ((k, mn, mx)))
-          case _ => Map.empty
-        }
-      val statBounds = e.stats.collect {
-        case (c, ColStat(k, Some(mn), Some(mx), _)) => c -> ((k, mn, mx))
-      }
-      val nullCounts = e.nulls.map(m.physOf(key) -> _).toMap ++
-        e.stats.collect { case (c, ColStat(_, _, _, Some(n))) => c -> n }
-      GraftFileIndex.Slice(st, keyBounds ++ statBounds, e.rows, nullCounts)
-    }
-    val index = new GraftFileIndex(new Path(dir), slices, ordLt)
+    val files = entries.map(e => e -> statusOf(e))
+    // the plan is over the PHYSICAL schema, so the pushed filters name
+    // physical columns — the prover's own vocabulary
+    val index = new GraftFileIndex(new Path(dir), files.map(_._2),
+      filters => files.collect { case (e, st) if !filters.exists(disjoint(_, m, e)) => st })
     lastScanIndex = index
-    lastScanStatted = statted
+    lastScanStatted = entries.count(_.bytes.isEmpty)
     HadoopFsRelation(index, StructType(Nil), m.physSchema, None,
       new ParquetFileFormat(), Map.empty[String, String])(spark)
+  }
+
+  /** An entry's FileStatus from its manifest-recorded byte length —
+    * driver arithmetic, no RPC (mtime is unused: the parquet read plans
+    * off length + path only). Entries from pre-length manifests degrade
+    * to one getFileStatus each. */
+  private def statusOf(e: Entry): org.apache.hadoop.fs.FileStatus = e.bytes match {
+    case Some(len) =>
+      new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L,
+        fs.makeQualified(new Path(s"$dir/${e.path}")))
+    case None => fs.getFileStatus(new Path(s"$dir/${e.path}"))
   }
 
   /** Everything the NATIVE DSv2 columnar batch scan needs, or None when
     * this snapshot cannot be served by a bare parquet scan (it carries
     * deletion vectors — their sidecar anti-join needs the masked
     * relation route). The entries are pruned HERE, against the pushed
-    * v2 source filters, with the same per-file [min,max]/null-count
-    * proofs the Catalyst FileIndex route uses — so the catalog's
-    * columnar rung keeps manifest file skipping without a planner
-    * FileIndex in the loop. FileStatuses come from manifest-recorded
-    * byte lengths (driver arithmetic, no per-file RPC). */
+    * v2 source filters, by the same [[disjoint]] proof every other read
+    * route uses — so the catalog's columnar rung keeps manifest file
+    * skipping without a planner FileIndex in the loop. FileStatuses come
+    * from manifest-recorded byte lengths (driver arithmetic, no per-file
+    * RPC). */
   private[graft] def batchScanParts(version: Option[Long],
-      filters: Array[org.apache.spark.sql.sources.Filter])
+      filters: Array[sources.Filter])
       : Option[SnapshotTable.BatchParts] = {
     val m = manifestAt(version)
     if (m.entries.exists(_.dv.isDefined)) return None
-    def statusOf(e: Entry): org.apache.hadoop.fs.FileStatus = e.bytes match {
-      case Some(len) =>
-        new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L,
-          fs.makeQualified(new Path(s"$dir/${e.path}")))
-      case None => fs.getFileStatus(new Path(s"$dir/${e.path}"))
+    // pushed and runtime filters name LOGICAL columns; the prover reads
+    // physical ones. Both the static prune and the runtime re-prune
+    // record their count in lastBatchKept.
+    def keep(logical: Array[sources.Filter]): Seq[org.apache.hadoop.fs.FileStatus] = {
+      val kept = survivors(m, m.entries, logical.toSeq.flatMap(GraftFilters.renamed(_, m.colmap)))
+      lastBatchKept = kept.size
+      kept.map(statusOf)
     }
-    def keep(all: Array[org.apache.spark.sql.sources.Filter]): Seq[Entry] =
-      m.entries.filter(e => !all.exists(f => sourceDisjoint(f, m, e)))
-    val kept = keep(filters)
-    lastBatchKept = kept.size
     // columns a filter can prune files on: the key (bounded on every
     // `f` line) plus any column some entry carries stats for —
     // advertised to Spark's runtime-filtering rule in LOGICAL names
@@ -1247,12 +1203,12 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     val prunable = (Seq(key) ++
       m.entries.flatMap(_.stats.keys).distinct.flatMap(physToLogical.get)).distinct
     Some(SnapshotTable.BatchParts(
-      m.physSchema, m.colmap, kept.map(statusOf), prunable,
-      extra => keep(filters ++ extra).map(statusOf)))
+      m.physSchema, m.colmap, keep(filters), prunable, extra => keep(filters ++ extra)))
   }
 
-  /** Files the most recent [[batchScanParts]] kept — the columnar
-    * route's pruning spec seam. -1 until it runs. */
+  /** Files the most recent [[batchScanParts]] prune kept — static or
+    * the runtime re-prune of its scan — the columnar route's pruning
+    * spec seam. -1 until it runs. */
   private[graft] var lastBatchKept: Int = -1
 
   /** Operational facts about a resolved snapshot, from manifest
@@ -1309,21 +1265,8 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
           m.schema.fieldNames.contains(nr.fieldNames.head) => Some(nr.fieldNames.head)
         case _ => None
       }
-    // per-entry (bounds, nulls) view of one logical column — the key's
-    // ride the `f` line, secondary stats ride `s` lines
-    def boundsOf(e: Entry, logical: String): Option[(String, String, String)] = {
-      val c = m.physOf(logical)
-      if (c == m.physOf(key)) (e.kind, e.min, e.max) match {
-        case (k, Some(mn), Some(mx)) if k != "opaque" => Some((k, mn, mx))
-        case _ => None
-      } else e.stats.get(c).collect {
-        case ColStat(k, Some(mn), Some(mx), _) => (k, mn, mx)
-      }
-    }
-    def nullsOf(e: Entry, logical: String): Option[Long] = {
-      val c = m.physOf(logical)
-      if (c == m.physOf(key)) e.nulls else e.stats.get(c).flatMap(_.nulls)
-    }
+    def statsOf(e: Entry, logical: String): Option[ColStat] =
+      statOf(m, e, m.physOf(logical))
     def decode(enc: String, dt: DataType): Option[Any] = dt match {
       case ByteType => Some(BigDecimal(enc).toByte)
       case ShortType => Some(BigDecimal(enc).toShort)
@@ -1342,7 +1285,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       if (dt == TimestampType || dt == TimestampNTZType) return None
       var best: Option[(String, String)] = None // (kind, enc)
       m.entries.foreach { e =>
-        boundsOf(e, logical) match {
+        statsOf(e, logical).flatMap(_.range) match {
           case Some((k, mn, mx)) =>
             val cand = if (wantMin) mn else mx
             best = best match {
@@ -1354,7 +1297,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
           case None =>
             // provably all-null contributes nothing; anything else is
             // an unknowable extreme — refuse
-            if (!nullsOf(e, logical).contains(e.rows)) return None
+            if (!statsOf(e, logical).exists(_.nulls.contains(e.rows))) return None
         }
       }
       best match {
@@ -1368,7 +1311,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
         colOf(c.column).flatMap { l =>
           if (anyDv) None
           else {
-            val perFile = m.entries.map(e => nullsOf(e, l).map(n => e.rows - n))
+            val perFile = m.entries.map(e => statsOf(e, l).flatMap(_.nulls).map(n => e.rows - n))
             if (perFile.forall(_.isDefined)) Some(perFile.flatten.sum) else None
           }
         }
@@ -1379,44 +1322,58 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     if (values.forall(_.isDefined)) Some(values.toSeq.map(_.get)) else None
   }
 
-  /** Entry-level pruning from a PUSHED v2 source filter — the
-    * `sources.Filter` twin of [[GraftFileIndex]]'s Catalyst
-    * `provesDisjoint`: true only when the filter PROVES no row of the
-    * entry can satisfy it, off the manifest's encoded [min,max] and
-    * null counts. Attribute names arrive LOGICAL (the query's) and
-    * translate through the column mapping; anything unprovable keeps
-    * the file (Spark re-evaluates every filter on the rows, so this is
-    * a pure optimization). */
-  private def sourceDisjoint(f: org.apache.spark.sql.sources.Filter,
-      m: Manifest, e: Entry): Boolean = {
+  /** THE per-file stats view: one column's [[ColStat]] for one
+    * manifest entry, by PHYSICAL name — the key's ride its `f` line,
+    * every other column's an `s` line. Pruning, manifest-served counts,
+    * the extreme-file election and served aggregates all read here. */
+  private def statOf(m: Manifest, e: Entry, phys: String): Option[ColStat] =
+    if (phys == m.physOf(key)) Some(ColStat(e.kind, e.min, e.max, e.nulls))
+    else e.stats.get(phys)
+
+  /** `lo <= phys <= hi` as source filters; a None side is unbounded. */
+  private def between(phys: String, lo: Option[Any], hi: Option[Any]): Seq[sources.Filter] =
+    lo.map(sources.GreaterThanOrEqual(phys, _)).toSeq ++ hi.map(sources.LessThanOrEqual(phys, _))
+
+  /** The entries no filter proves [[disjoint]] — every read route's
+    * manifest file prune. */
+  private def survivors(m: Manifest, entries: Seq[Entry],
+      filters: Seq[sources.Filter]): Seq[Entry] =
+    entries.filter(e => !filters.exists(disjoint(_, m, e)))
+
+  /** THE pruning proof, shared by every read route (the v1 file index,
+    * the catalog's columnar scan and its runtime re-prune, readRange,
+    * readWhere, countWhere): true only when `f` PROVES no row of entry
+    * `e` can satisfy it, off the entry's encoded [min,max] and null
+    * counts ([[statOf]]). Attribute names are PHYSICAL. Literals encode
+    * through [[ordEncode]] — timestamps floor to the millisecond the
+    * stats were encoded at, and every comparison is strict, so sub-ms
+    * literals stay conservative. Anything unprovable keeps the file:
+    * every caller applies the exact predicate to the rows, so pruning
+    * never changes a result. */
+  private def disjoint(f: sources.Filter, m: Manifest, e: Entry): Boolean = {
     import org.apache.spark.sql.sources._
-    def boundsOf(logical: String): Option[(String, String, String)] = {
-      val c = m.physOf(logical)
-      if (c == m.physOf(key)) (e.kind, e.min, e.max) match {
-        case (k, Some(mn), Some(mx)) if k != "opaque" => Some((k, mn, mx))
-        case _ => None
-      } else e.stats.get(c).collect {
-        case ColStat(k, Some(mn), Some(mx), _) => (k, mn, mx)
-      }
-    }
-    def nullsOf(logical: String): Option[Long] = {
-      val c = m.physOf(logical)
-      if (c == m.physOf(key)) e.nulls else e.stats.get(c).flatMap(_.nulls)
-    }
+    def stat(a: String): Option[ColStat] = statOf(m, e, a)
+    def nullsOf(a: String): Option[Long] = stat(a).flatMap(_.nulls)
+    // an all-null file records a null count but no bounds: no VALUE
+    // comparison can match it
     def allNull(a: String): Boolean = nullsOf(a).contains(e.rows)
     // file max < v (no row can be >= v); all-null columns prove too
     def maxBelow(a: String, v: Any): Boolean = allNull(a) ||
-      boundsOf(a).exists { case (k, _, mx) =>
+      stat(a).flatMap(_.range).exists { case (k, _, mx) =>
         ordEncode(v).exists(lo => ordLt(k, mx, lo)) }
     // file min > v (no row can be <= v)
     def minAbove(a: String, v: Any): Boolean = allNull(a) ||
-      boundsOf(a).exists { case (k, mn, _) =>
+      stat(a).flatMap(_.range).exists { case (k, mn, _) =>
         ordEncode(v).exists(hi => ordLt(k, hi, mn)) }
     f match {
-      case And(l, r) => sourceDisjoint(l, m, e) || sourceDisjoint(r, m, e)
-      case Or(l, r) => sourceDisjoint(l, m, e) && sourceDisjoint(r, m, e)
+      case And(l, r) => disjoint(l, m, e) || disjoint(r, m, e)
+      case Or(l, r) => disjoint(l, m, e) && disjoint(r, m, e)
+      // null predicates prove from the recorded NULL COUNT alone; an
+      // unknown count (old manifest) proves nothing
       case IsNull(a) => nullsOf(a).contains(0L)
       case IsNotNull(a) => allNull(a)
+      // null-safe equality: a null literal matches exactly the null
+      // rows, a non-null one exactly what EqualTo matches
       case EqualNullSafe(a, null) => nullsOf(a).contains(0L)
       case EqualNullSafe(a, v) => maxBelow(a, v) || minAbove(a, v)
       case EqualTo(a, v) if v != null => maxBelow(a, v) || minAbove(a, v)
@@ -1426,11 +1383,12 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       case LessThanOrEqual(a, v) => minAbove(a, v)
       case In(a, vs) if vs.nonEmpty =>
         vs.forall(v => v != null && (maxBelow(a, v) || minAbove(a, v)))
-      // prefix: every match sits >= P in byte order, so fileMax < P is
-      // disjoint; fileMin > P without carrying P as a prefix puts
-      // fileMin above every possible match (see GraftFileIndex)
+      // prefix P on a string column: every match sits >= P in byte
+      // order, so fileMax < P is disjoint; and when fileMin > P WITHOUT
+      // carrying P as a prefix, the first differing byte sits inside
+      // P's length and exceeds it, putting fileMin above every match
       case StringStartsWith(a, p) => allNull(a) ||
-        boundsOf(a).exists { case (kind, mnB64, mxB64) =>
+        stat(a).flatMap(_.range).exists { case (kind, mnB64, mxB64) =>
           kind == "str" && {
             val dec = java.util.Base64.getDecoder
             val pb = p.getBytes("UTF-8")
@@ -1511,7 +1469,9 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     case _ => "opaque"
   }
 
-  /** Driver-side canonical encoding of a collected key value: a plain
+  /** THE canonical order encoding — of collected stats values and of
+    * every literal a pruning proof compares against them (pushed filter
+    * values arrive as the same JVM types): a plain
     * decimal string for the "num" kind (dates → epoch day, timestamps →
     * epoch micros — exact, unlike lexicographic ISO strings), Base64
     * UTF-8 for "str" (binary-collation order, matching Spark's default
@@ -1527,8 +1487,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     // Instant (java8 datetime API) compares against Timestamp-collected
     // stats in the SAME floored domain — an unfloored Instant encoding
     // could sit above a floored file max that truly covers it, wrongly
-    // pruning the file (and GraftFileIndex.enc floors pushed literals
-    // on the same contract)
+    // pruning the file
     case t: java.sql.Timestamp => Some(BigDecimal(t.getTime * 1000L).toString)
     case t: java.time.Instant =>
       // nano/1e6 = whole ms within the (always non-negative) nano-of-
@@ -2497,20 +2456,12 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       return commit(m.version, "optimize", m.schema, stage(ranged, m.colmap),
         m.tag.getOrElse(""), m.colmap, m.retired)
     }
-    var statted = 0
     // deletion-vectored files always join the rewrite set: compaction
     // is where merge-on-read debt is repaid (the masked read below
     // applies the vectors; the restaged files carry none)
-    val (small, big) = m.entries.partition { e =>
-      e.dv.isDefined || {
-        val len = e.bytes.getOrElse {
-          statted += 1
-          fs.getFileStatus(new Path(s"$dir/${e.path}")).getLen
-        }
-        len < smallBytes
-      }
-    }
-    lastOptimizeStatted = statted
+    val (small, big) = m.entries.partition(e =>
+      e.dv.isDefined || statusOf(e).getLen < smallBytes)
+    lastOptimizeStatted = m.entries.count(e => e.dv.isEmpty && e.bytes.isEmpty)
     if (small.size <= 1 && !small.exists(_.dv.isDefined)) return m.version
     commit(m.version, "optimize", m.schema,
       big ++ stage(clustered(readEntries(m, small)), m.colmap),
@@ -2987,25 +2938,22 @@ object SnapshotTable {
 
 /** The manifest-backed [[org.apache.spark.sql.execution.datasources.FileIndex]]
   * behind [[SnapshotTable.scan]]: Spark's planner hands `listFiles` the
-  * data filters it pushed toward the scan, and each file survives only
-  * if no filter PROVES it disjoint from the file's recorded per-column
-  * [min,max] — key bounds and secondary stats uniformly. The proof
-  * walks And/Or/comparison/In shapes over (attribute, literal) pairs;
-  * anything else proves nothing (conservative keep), and Spark still
-  * evaluates every filter on the rows, so pruning is a pure
-  * optimization. Literals encode into the manifest's canonical order
-  * domain (decimal strings for numerics, base64 UTF-8 for strings;
-  * timestamps FLOOR to the millisecond the stats themselves were
-  * encoded at, keeping the comparison conservative for sub-ms
-  * literals). */
+  * data filters it pushed toward the scan; they translate to
+  * `sources.Filter`s exactly as Spark translates pushdown for any data
+  * source, and `keep` — the table's one pruning proof
+  * (`SnapshotTable.disjoint`, the same one the catalog's columnar scan,
+  * readRange and readWhere use) — returns the files no filter rules
+  * out. An untranslatable filter proves nothing (conservative keep),
+  * and Spark still evaluates every filter on the rows, so pruning is a
+  * pure optimization. */
 private[graft] final class GraftFileIndex(
     root: org.apache.hadoop.fs.Path,
-    slices: Seq[GraftFileIndex.Slice],
-    ordLt: (String, String, String) => Boolean)
+    files: Seq[org.apache.hadoop.fs.FileStatus],
+    keep: Seq[org.apache.spark.sql.sources.Filter] => Seq[org.apache.hadoop.fs.FileStatus])
   extends org.apache.spark.sql.execution.datasources.FileIndex {
 
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions._
+  import org.apache.spark.sql.catalyst.expressions.Expression
   import org.apache.spark.sql.execution.datasources.PartitionDirectory
 
   /** Files the planner's filters kept on the most recent `listFiles` —
@@ -3026,128 +2974,14 @@ private[graft] final class GraftFileIndex(
     Seq(root, new org.apache.hadoop.fs.Path(root,
       "_graft_inserts_not_supported_use_df.write.format_graft-snapshot"))
   override def partitionSchema: StructType = StructType(Nil)
-  override def sizeInBytes: Long = slices.map(_.status.getLen).sum
-  override def inputFiles: Array[String] = slices.map(_.status.getPath.toString).toArray
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+  override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
   override def refresh(): Unit = () // snapshot-pinned: immutable file set
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = slices.filter(s => !dataFilters.exists(f => provesDisjoint(f, s)))
+    val kept = keep(dataFilters.flatMap(org.apache.spark.sql.graft.GraftSqlShim.translateFilter))
     lastListedFiles = kept.size
-    Seq(PartitionDirectory(InternalRow.empty, kept.map(_.status).toArray))
+    Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
   }
-
-  /** Encode a pushed literal into the manifest's order domain; None =
-    * unencodable (no pruning from this comparison). */
-  private def enc(value: Any, dt: DataType): Option[String] = (value, dt) match {
-    case (null, _) => None
-    case (v: java.lang.Number, ByteType | ShortType | IntegerType | LongType |
-        FloatType | DoubleType | DateType) =>
-      scala.util.Try(BigDecimal(v.toString).toString).toOption
-    case (d: org.apache.spark.sql.types.Decimal, _: DecimalType) =>
-      Some(d.toJavaBigDecimal.toString)
-    case (micros: java.lang.Long, TimestampType | TimestampNTZType) =>
-      // stats encoded timestamps at ms-floor (SnapshotTable.ordEncode):
-      // floor the literal the same way so floor<floor still implies <
-      Some(BigDecimal(micros - java.lang.Math.floorMod(micros.longValue, 1000L)).toString)
-    case (s: org.apache.spark.unsafe.types.UTF8String, StringType) =>
-      Some(java.util.Base64.getEncoder.encodeToString(s.getBytes))
-    case _ => None
-  }
-
-  /** True only when `f` PROVES the file's bounds cannot satisfy it. */
-  private def provesDisjoint(f: Expression, s: GraftFileIndex.Slice): Boolean = {
-    val bounds = s.bounds
-    f match {
-    case And(l, r) => provesDisjoint(l, s) || provesDisjoint(r, s)
-    case Or(l, r) => provesDisjoint(l, s) && provesDisjoint(r, s)
-    // null predicates prove from the recorded NULL COUNT alone:
-    // IsNull needs a null row (none when nulls == 0), IsNotNull a
-    // non-null one (none when every row is null). Unknown count (old
-    // manifest) proves nothing.
-    case IsNull(a: AttributeReference) => s.nulls.get(a.name).contains(0L)
-    case IsNotNull(a: AttributeReference) => s.nulls.get(a.name).contains(s.rows)
-    // null-safe equality: a non-null literal matches exactly the rows
-    // plain EqualTo matches (null rows fail both), a null literal
-    // matches exactly the null rows
-    case EqualNullSafe(a: AttributeReference, Literal(null, _)) =>
-      s.nulls.get(a.name).contains(0L)
-    case EqualNullSafe(Literal(null, _), a: AttributeReference) =>
-      s.nulls.get(a.name).contains(0L)
-    case EqualNullSafe(a: AttributeReference, Literal(v, dt)) =>
-      maxBelow(s, a.name, v, dt) || minAbove(s, a.name, v, dt)
-    case EqualNullSafe(Literal(v, dt), a: AttributeReference) =>
-      maxBelow(s, a.name, v, dt) || minAbove(s, a.name, v, dt)
-    // prefix predicate on a string column: every match m satisfies
-    // m >= P (byte order), so fileMax < P is disjoint; and when
-    // fileMin > P WITHOUT carrying P as a prefix, the first differing
-    // byte sits inside P's length and exceeds it, putting fileMin
-    // above every possible match — disjoint from below
-    case StartsWith(a: AttributeReference,
-        Literal(p: org.apache.spark.unsafe.types.UTF8String, StringType)) =>
-      allNull(s, a.name) ||
-      bounds.get(a.name).exists { case (kind, mnB64, mxB64) =>
-        kind == "str" && {
-          val dec = java.util.Base64.getDecoder
-          val pb = p.getBytes
-          val mn = dec.decode(mnB64); val mx = dec.decode(mxB64)
-          def lt(x: Array[Byte], y: Array[Byte]) =
-            java.util.Arrays.compareUnsigned(x, y) < 0
-          def hasPrefix(x: Array[Byte]) = x.length >= pb.length &&
-            java.util.Arrays.equals(x, 0, pb.length, pb, 0, pb.length)
-          lt(mx, pb) || (lt(pb, mn) && !hasPrefix(mn))
-        }
-      }
-    // a >= v / a > v : disjoint when file max < v (conservative: > uses >=)
-    case GreaterThanOrEqual(a: AttributeReference, Literal(v, dt)) => maxBelow(s, a.name, v, dt)
-    case GreaterThan(a: AttributeReference, Literal(v, dt)) => maxBelow(s, a.name, v, dt)
-    case LessThanOrEqual(Literal(v, dt), a: AttributeReference) => maxBelow(s, a.name, v, dt)
-    case LessThan(Literal(v, dt), a: AttributeReference) => maxBelow(s, a.name, v, dt)
-    // a <= v / a < v : disjoint when file min > v
-    case LessThanOrEqual(a: AttributeReference, Literal(v, dt)) => minAbove(s, a.name, v, dt)
-    case LessThan(a: AttributeReference, Literal(v, dt)) => minAbove(s, a.name, v, dt)
-    case GreaterThanOrEqual(Literal(v, dt), a: AttributeReference) => minAbove(s, a.name, v, dt)
-    case GreaterThan(Literal(v, dt), a: AttributeReference) => minAbove(s, a.name, v, dt)
-    case EqualTo(a: AttributeReference, Literal(v, dt)) =>
-      maxBelow(s, a.name, v, dt) || minAbove(s, a.name, v, dt)
-    case EqualTo(Literal(v, dt), a: AttributeReference) =>
-      maxBelow(s, a.name, v, dt) || minAbove(s, a.name, v, dt)
-    case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      vs.forall { case Literal(v, dt) =>
-        maxBelow(s, a.name, v, dt) || minAbove(s, a.name, v, dt)
-      }
-    case _ => false
-  } }
-
-  /** Every row of the slice is null in column c — no VALUE comparison
-    * can match (an all-null file records a null count but no orderable
-    * bounds, so min/max reasoning alone would never prune it). */
-  private def allNull(s: GraftFileIndex.Slice, c: String): Boolean =
-    s.nulls.get(c).contains(s.rows)
-
-  /** file max < v for column c (⇒ no row can be ≥ v); an all-null
-    * column proves too. */
-  private def maxBelow(s: GraftFileIndex.Slice,
-      c: String, v: Any, dt: DataType): Boolean =
-    allNull(s, c) || s.bounds.get(c).exists { case (kind, _, mx) =>
-      enc(v, dt).exists(lo => ordLt(kind, mx, lo)) }
-
-  /** file min > v for column c (⇒ no row can be ≤ v); an all-null
-    * column proves too. */
-  private def minAbove(s: GraftFileIndex.Slice,
-      c: String, v: Any, dt: DataType): Boolean =
-    allNull(s, c) || s.bounds.get(c).exists { case (kind, mn, _) =>
-      enc(v, dt).exists(hi => ordLt(kind, hi, mn)) }
-}
-
-private[graft] object GraftFileIndex {
-  /** One live data file: its status plus per-column encoded bounds
-    * (column → (kind, minEnc, maxEnc)) — the key's under its own
-    * column name, secondary stats beside it — the file's row count,
-    * and per-column NULL counts where the manifest recorded them
-    * (absent on pre-null-tracking manifests: null predicates then
-    * prove nothing for that file). */
-  final case class Slice(status: org.apache.hadoop.fs.FileStatus,
-      bounds: Map[String, (String, String, String)],
-      rows: Long = 0L, nulls: Map[String, Long] = Map.empty)
 }

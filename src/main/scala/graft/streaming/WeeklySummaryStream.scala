@@ -4,7 +4,6 @@ import java.sql.{Date, Timestamp}
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -29,9 +28,10 @@ import org.apache.spark.sql.types._
   *     state table (additive, idempotent per micro-batch commit) — the
   *     `ON CONFLICT DO UPDATE` upsert analog (etl:249-267).
   *   - `outstanding_rentals_at_week_end` stays a read-time cumulative
-  *     window over the count state ([[summary]]), identical math to
-  *     [[graft.ops.WeeklySummary.statsForWeeks]] — cumulative state is
-  *     never stored, so per-week counts remain additively mergeable.
+  *     window over the count state ([[summary]]), computed by the batch
+  *     library's own [[graft.ops.WeeklySummary.statsFromCounts]] —
+  *     cumulative state is never stored, so per-week counts remain
+  *     additively mergeable.
   */
 object WeeklySummaryStream {
 
@@ -159,69 +159,25 @@ object WeeklySummaryStream {
         sum(col("dRented")).cast("long").as("n_rented"),
         sum(col("dReturned")).cast("long").as("n_returned"),
         sum(col("dClosed")).cast("long").as("n_closed"))
-    // COST GATE (the bloom-arm pattern): below SmallStateRows the whole
-    // state is one small job — a full rewrite is cheaper than the merge
+    // the whole state is week-grain (one row per active week), so each
+    // micro-batch rewrites it in one small job — cheaper than the merge
     // machinery's fixed per-commit cost (touched-file read, stats pass)
-    // and measured so at week cardinality (drain 15.5 s rewrite vs
-    // 20.6 s merge-always at sf0.1). Past it, the FILE-PRUNED merge arm
-    // takes over: work ∝ the batch's touched weeks, never ∝ the state.
-    // The row count is free — it rides the current manifest.
-    val stateRows = if (tbl.exists) tbl.history.last._5 else 0L
-    if (!tbl.exists || stateRows < SmallStateRows) {
-      val existing =
-        if (tbl.exists) tbl.read()
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], countsSchema)
-      val merged = existing.unionByName(agg)
-        .groupBy("week_beginning")
-        .agg(
-          sum("n_rented").cast("long").as("n_rented"),
-          sum("n_returned").cast("long").as("n_returned"),
-          sum("n_closed").cast("long").as("n_closed"))
-        .filter(col("n_rented") =!= 0 || col("n_returned") =!= 0 || col("n_closed") =!= 0)
-      tbl.create(merged, tag = batchId.toString)
-    } else {
-      // the merge source is (existing rows for the touched weeks) +
-      // (this batch's deltas), summed per week. The touched week set is
-      // batch-bounded (collected to the driver as an isin() literal so
-      // the parquet scan prunes files/row-groups by week stats); every
-      // untouched week's file carries forward by manifest reference. A
-      // week whose counts cancel to zero REMAINS as a zero row (MERGE
-      // replaces, it cannot delete inside the same atomic commit — and
-      // the batch-id tag must ride ONE commit); [[summary]] filters
-      // zero rows read-side, so the spine bounds are unaffected.
-      // the aggregated batch feeds TWO actions (the touched-week collect
-      // and the merge source) — checkpoint the batch-sized frame once
-      // instead of re-aggregating the micro-batch per action
-      val aggStable = agg.localCheckpoint()
-      val weeks = aggStable.select("week_beginning").collect().map(_.getDate(0))
-      if (weeks.nonEmpty) {
-        val touched = tbl.read()
-          .filter(col("week_beginning").isin(weeks.map(w => lit(w)): _*))
-        val src = touched.unionByName(aggStable)
-          .groupBy("week_beginning")
-          .agg(
-            sum("n_rented").cast("long").as("n_rented"),
-            sum("n_returned").cast("long").as("n_returned"),
-            sum("n_closed").cast("long").as("n_closed"))
-        tbl.merge(src, tag = batchId.toString)
-      } else tbl.setTag(batchId.toString) // empty batch: mark applied atomically
-    }
+    // at this cardinality (drain 15.5 s rewrite vs 20.6 s merge at sf0.1)
+    val existing =
+      if (tbl.exists) tbl.read()
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], countsSchema)
+    val merged = existing.unionByName(agg)
+      .groupBy("week_beginning")
+      .agg(
+        sum("n_rented").cast("long").as("n_rented"),
+        sum("n_returned").cast("long").as("n_returned"),
+        sum("n_closed").cast("long").as("n_closed"))
+      .filter(col("n_rented") =!= 0 || col("n_returned") =!= 0 || col("n_closed") =!= 0)
+    tbl.create(merged, tag = batchId.toString)
     tbl.retire(keepLast = 3)
     tbl.vacuum()
-    // the merge arm accretes one batch-sized file set per micro-batch;
-    // past 64 live files fold the small ones back into right-sized
-    // clustered files (content-identical, batch-id tag carried — a
-    // crash around the maintenance commit replays safely)
-    if (tbl.history.last._4 > 64) tbl.optimize()
   }
-
-  /** Below this, a micro-batch commit rewrites the whole counts state
-    * (one trivial job); at or above it, the file-pruned merge arm
-    * engages. See the cost-gate note in [[mergeBatch]]. A var only as
-    * a test seam — the spec lowers it to pin the merge arm's result
-    * equality without building a 100k-week state. */
-  private[graft] var SmallStateRows: Long = 100000L
 
   /** Read-time summary over the maintained counts: contiguous week spine
     * from min to max active week, cumulative outstanding — the same
@@ -229,34 +185,16 @@ object WeeklySummaryStream {
   def summary(spark: SparkSession, stateDir: String): DataFrame = {
     val tbl = new graft.incremental.SnapshotTable(
       spark, s"$stateDir/weekly_counts", "week_beginning")
-    val counts = (
+    // fully-retracted weeks never reach the state (mergeBatch drops
+    // all-zero rows), so the spine spans exactly the contributing weeks
+    val counts =
       if (tbl.exists) tbl.read()
       else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], countsSchema))
-      // the merge sink leaves fully-retracted weeks as zero rows (MERGE
-      // replaces, never deletes mid-commit); they carry no contribution
-      // and must not stretch the spine bounds
-      .filter(col("n_rented") =!= 0 || col("n_returned") =!= 0 || col("n_closed") =!= 0)
-    val bounds = counts.agg(
-      min(col("week_beginning")).as("lo"), max(col("week_beginning")).as("hi"))
-    val spine = bounds
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], countsSchema)
+    val spine = counts
+      .agg(min(col("week_beginning")).as("lo"), max(col("week_beginning")).as("hi"))
       .filter(col("lo").isNotNull)
       .select(explode(sequence(col("lo"), col("hi"), expr("INTERVAL 7 DAYS"))).as("week_beginning"))
-    // Single-partition window is intentional: week-grain input — see the
-    // matching note in WeeklySummary.statsFromCounts.
-    val joined = spine.join(broadcast(counts), Seq("week_beginning"), "left")
-    val cum = Window.orderBy("week_beginning")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nRented = coalesce(col("n_rented"), lit(0L))
-    val nReturned = coalesce(col("n_returned"), lit(0L))
-    val nClosed = coalesce(col("n_closed"), lit(0L))
-    joined.select(
-      col("week_beginning"),
-      nRented.as("newly_rented_during_week"),
-      nReturned.as("returned_rentals_during_week"),
-      (nRented - nReturned).as("net_change_in_outstanding"),
-      (sum(nRented).over(cum) - sum(nClosed).over(cum))
-        .as("outstanding_rentals_at_week_end"))
-      .orderBy("week_beginning")
+    graft.ops.WeeklySummary.statsFromCounts(counts, spine)
   }
 }

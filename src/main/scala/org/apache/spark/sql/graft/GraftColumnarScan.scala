@@ -45,8 +45,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     IN-subquery filter at EXECUTION time — `fact JOIN dim` re-prunes
   *     the manifest's files against the dim keys that actually
   *     survived, the DSv2 twin of dynamic partition pruning. `refilter`
-  *     re-runs the SAME per-entry min/max/bloom-free proofs the static
-  *     prune used, on the driver, against manifest stats only. */
+  *     re-runs the table's one pruning proof (`SnapshotTable.disjoint`,
+  *     the same one the static prune and the v1 file index use) on the
+  *     driver, against manifest stats only, and records its kept count
+  *     in the table's `lastBatchKept`. */
 final class GraftColumnarScan private (
     spark: classic.SparkSession,
     physData: StructType,
@@ -101,18 +103,11 @@ final class GraftColumnarScan private (
   override def filter(predicates: Array[
       org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     val v1 = org.apache.spark.sql.internal.connector.PredicateUtils.toV1(predicates)
-    if (v1.nonEmpty) {
-      files = refilter(v1)
-      GraftColumnarScan.lastRuntimeKept = files.size
-    }
+    if (v1.nonEmpty) files = refilter(v1)
   }
 }
 
 object GraftColumnarScan {
-  /** Files the most recent runtime [[GraftColumnarScan.filter]] call
-    * kept — spec seam for the dynamic-pruning proof. -1 until one runs. */
-  @volatile var lastRuntimeKept: Int = -1
-
   /** Build the columnar scan. `physData`/`physRead` carry the files'
     * PHYSICAL column names (what parquet holds); `logicalRead` the same
     * positions under the query's logical names; `pushedPhys` the

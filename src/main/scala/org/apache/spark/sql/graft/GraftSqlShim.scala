@@ -95,4 +95,15 @@ object GraftSqlShim {
   def normalizeFloating(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** A pushed Catalyst data filter as the `sources.Filter` Spark hands
+    * any v1 data source — `DataSourceStrategy.translateFilter` is
+    * `protected[sql]`. Top-level columns only; None when the shape has
+    * no source form (And needs both sides, as in Spark's own pushdown).
+    * The manifest file index prunes through it with the same proof the
+    * catalog's source-filter route uses. */
+  def translateFilter(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = false)
 }

@@ -462,10 +462,10 @@ class GraftCatalogSpec extends AnyFunSuite {
     // dynamic-pruning rule to inject the selective join side
     assert(rt.filterAttributes().map(_.describe()).contains("k"))
     // two keys in one file's range: the runtime re-prune must keep <4 files
-    org.apache.spark.sql.graft.GraftColumnarScan.lastRuntimeKept = -1
+    tbl.lastBatchKept = -1
     rt.filter(Array(org.apache.spark.sql.graft.GraftSqlShim.inPredicate(
       "k", Seq(5L, 17L), org.apache.spark.sql.types.LongType)))
-    val kept = org.apache.spark.sql.graft.GraftColumnarScan.lastRuntimeKept
+    val kept = tbl.lastBatchKept
     assert(kept >= 1 && kept < 4,
       s"an IN(5,17) runtime filter should keep 1 of 4 key-clustered files, kept $kept")
     // and the shrunken scan still plans and serves (the partitions come

@@ -16,7 +16,8 @@ import graft.functions.{TextExprs, TopK, VecDot, VecRank, VectorFns}
   *    claim) and must fan when below parallelism;
   *  - [[graft.functions.LshBuckets]] / CentroidRank kernels must equal
   *    the column formulations they replaced on their identity domain
-  *    (finite inputs, ties, HALF_UP boundaries, ±Inf);
+  *    (finite inputs, ties, HALF_UP boundaries, ±Inf), and a null
+  *    vector yields no bucket rows and a null rank;
   *  - [[graft.functions.TopKWhere]]'s buffer merge must be
   *    split-invariant (merge of any partition split ≡ sequential
   *    reduce) with the admission gate applied at reduce time.
@@ -125,6 +126,26 @@ final class ScaleGuardSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[Any](1).map(_.toString)).toMap
     assert(kernel == column,
       s"kernel/column centroid ranking diverged:\n kernel=$kernel\n column=$column")
+  }
+
+  test("null vector: LshBuckets emits no bucket rows and CentroidRank a null rank (decided semantics)") {
+    val s = spark
+    import s.implicits._
+    TextExprs.register(s)
+    // the kernels are null-safe: a null vector is a missing embedding,
+    // not a zero vector, so it lands in no bucket and ranks against no
+    // centroid
+    val df = Seq((1L, Option(Seq(0.5, -1.0)), 1.0), (2L, None, 1.0)).toDF("id", "vd", "nrm")
+    val buckets = df.select(col("id"),
+      posexplode(VecRank.lshBuckets(col("vd"), 3, 2, 2)))
+      .collect().map(_.getLong(0)).toSeq
+    assert(buckets == Seq(1L, 1L), s"a null vector must emit no bucket rows: $buckets")
+    assert(df.filter(col("id") === 2L)
+      .select(VecRank.lshBuckets(col("vd"), 3, 2, 2)).head().isNullAt(0))
+    val ranks = df.select(col("id"),
+      VecRank.centroidRank(col("vd"), col("nrm"), Seq(1 -> Array(1.0, 0.0))).as("r"))
+      .collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
+    assert(ranks == Map(1L -> false, 2L -> true), s"null vector rank: $ranks")
   }
 
   test("TopKWhere: merge is split-invariant and the gate admits at reduce time") {

@@ -802,6 +802,71 @@ class SnapshotTableSpec extends AnyFunSuite {
             .reduceOption(_ && _).getOrElse(col("score").isNotNull)).count())
   }
 
+  test("route agreement: scan(), the columnar batch prune and readRange/readWhere keep the same files and rows") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.expressions.{Expression, And => CAnd}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
+    val s = spark
+    import s.implicits._
+    val tbl = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(8),
+      statsColumns = Seq("score", "note", "src", "ts"))
+    // key-clustered; score tracks the key, note is null on the low keys,
+    // src is a key-correlated string, ts a key-correlated timestamp whose
+    // values sit 500 µs past a millisecond (the stats floor to the ms)
+    val t0 = 1640995200000000L // 2022-01-01T00:00:00Z in micros
+    tbl.create((1L to 400L).map(i =>
+        (i, i * 2, if (i <= 80) None else Some(i * 3), f"s${i / 40}%02d"))
+      .toDF("k", "score", "note", "src")
+      .withColumn("ts", timestamp_micros(lit(t0) + col("k") * 1000000L + 500L)))
+    val nFiles = tbl.read().inputFiles.length
+    assert(nFiles >= 6)
+    // one microsecond past row 300's timestamp: same millisecond as its
+    // file's recorded max, so that file must be kept, and row 300 fails
+    val tsBound = new java.sql.Timestamp((t0 + 300L * 1000000L) / 1000L)
+    tsBound.setNanos(tsBound.getNanos + 501000)
+    val twenty = (101L to 120L).map(lit)
+    // the source filters Spark pushes for a predicate: the optimized
+    // plan's conjuncts (a >10-value IN is an InSet by then), translated
+    def pushed(p: Column): Array[org.apache.spark.sql.sources.Filter] = {
+      def conj(e: Expression): Seq[Expression] = e match {
+        case CAnd(l, r) => conj(l) ++ conj(r)
+        case o => Seq(o)
+      }
+      tbl.read().filter(p).queryExecution.optimizedPlan
+        .collect { case f: LFilter => conj(f.condition) }.flatten
+        .flatMap(org.apache.spark.sql.graft.GraftSqlShim.translateFilter).toArray
+    }
+    val cases: Seq[(String, Column, Option[DataFrame])] = Seq(
+      ("key range", col("k") >= 100L && col("k") <= 150L,
+        Some(tbl.readRange(Some(100L), Some(150L)))),
+      ("stats range", col("score") >= 400L && col("score") <= 500L,
+        Some(tbl.readWhere("score", Some(400L), Some(500L)))),
+      ("isNull", col("note").isNull, None),
+      ("isNotNull", col("note").isNotNull, None),
+      ("<=>", col("note") <=> 600L, Some(tbl.readWhere("note", Some(600L), Some(600L)))),
+      ("2-key IN", col("k").isin(5L, 395L), None),
+      ("20-key IN", col("k").isin(twenty: _*), None),
+      ("startsWith", col("src").startsWith("s09"), None),
+      ("sub-ms timestamp", col("ts") >= lit(tsBound), Some(tbl.readWhere("ts", Some(tsBound), None))))
+    cases.foreach { case (name, p, reader) =>
+      val expected = tbl.read().filter(p)
+      assert(expected.count() > 0, s"$name: the predicate should match rows")
+      val v1 = tbl.scan().filter(p); val index = tbl.lastScanIndex
+      assertSameRows(v1, expected)
+      val parts = tbl.batchScanParts(None, pushed(p)).get
+      assert(tbl.lastBatchKept == index.lastListedFiles,
+        s"$name: columnar kept ${tbl.lastBatchKept}, scan() listed ${index.lastListedFiles}")
+      assert(index.lastListedFiles < nFiles, s"$name: nothing pruned of $nFiles files")
+      assertSameRows(spark.read.schema(tbl.schema)
+        .parquet(parts.files.map(_.getPath.toString): _*).filter(p), expected)
+      reader.foreach { df =>
+        assert(df.inputFiles.length == index.lastListedFiles,
+          s"$name: dedicated reader opened ${df.inputFiles.length}, scan() ${index.lastListedFiles}")
+        assertSameRows(df, expected)
+      }
+    }
+  }
+
   test("scan() null/prefix/null-safe predicates prune from null counts and string bounds") {
     val s = spark
     import s.implicits._

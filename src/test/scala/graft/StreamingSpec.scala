@@ -84,33 +84,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(at0110 == 1)
   }
 
-  test("the file-pruned merge arm converges identically to the rewrite arm (cost gate)") {
-    // mergeBatch cost-gates on state rows: below SmallStateRows a
-    // micro-batch rewrites the whole (tiny) counts table; above, it
-    // MERGEs only the touched weeks' files. Lower the gate so the
-    // merge arm runs at test scale and pin result equality against the
-    // rewrite arm on the same log — including the late-retraction
-    // batch, whose fully-cancelled weeks stay as zero rows under merge
-    // and must be invisible in the summary.
-    val baseA = Files.createTempDirectory("graft-stream-ga").toString
-    val baseB = Files.createTempDirectory("graft-stream-gb").toString
-    writeLog(s"$baseA/log"); writeLog(s"$baseB/log")
-    WeeklySummaryStream.start(spark, s"$baseA/log", s"$baseA/state", s"$baseA/ckpt")
-      .awaitTermination()
-    val saved = WeeklySummaryStream.SmallStateRows
-    WeeklySummaryStream.SmallStateRows = 0L // force the merge arm past batch 0
-    try
-      WeeklySummaryStream.start(spark, s"$baseB/log", s"$baseB/state", s"$baseB/ckpt")
-        .awaitTermination()
-    finally WeeklySummaryStream.SmallStateRows = saved
-    val viaMerge = new graft.incremental.SnapshotTable(
-      spark, s"$baseB/state/weekly_counts", "week_beginning")
-    assert(viaMerge.history.map(_._3).contains("merge"),
-      s"merge arm did not engage: ${viaMerge.history}")
-    assert(collectSorted(WeeklySummaryStream.summary(spark, s"$baseB/state")) ==
-      collectSorted(WeeklySummaryStream.summary(spark, s"$baseA/state")))
-  }
-
   test("replayed micro-batch does not double-apply (batch-id dedup)") {
     val base = Files.createTempDirectory("graft-stream3").toString
     val logDir = s"$base/log"; val stateDir = s"$base/state"; val ckpt = s"$base/ckpt"
