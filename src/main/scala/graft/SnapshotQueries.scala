@@ -192,8 +192,8 @@ private[graft] object SnapshotQueries {
         clusterPartitions = Some(8), deleteVectorMaxRows = 1000L)
       tbl.create(docs)
       tbl.delete(docs.filter(col("doc_id") % 501 === 3).select("doc_id"))
-      require(tbl.lastDeleteRewrites <= 0, // 0 = pure DV; -1 = nothing matched
-        s"DV forget rewrote ${tbl.lastDeleteRewrites} files — merge-on-read path not taken")
+      require(tbl.lastRewrites <= 0, // 0 = pure DV; -1 = nothing matched
+        s"DV forget rewrote ${tbl.lastRewrites} files — merge-on-read path not taken")
       val vn = "corpus_sql_dv_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       s.sql(s"CREATE TEMPORARY VIEW $vn USING `graft-snapshot` " +
         s"OPTIONS (path '$scratch/store', `key` 'doc_id')")
@@ -568,8 +568,8 @@ private[graft] object SnapshotQueries {
       tbl.create(docs)
       // a scattered sparse forget: every 501st id across the key domain
       tbl.delete(docs.filter(col("doc_id") % 501 === 3).select("doc_id"))
-      require(tbl.lastDeleteRewrites <= 0, // 0 = pure DV; -1 = nothing matched (tiny sf)
-        s"DV forget rewrote ${tbl.lastDeleteRewrites} files — merge-on-read path not taken")
+      require(tbl.lastRewrites <= 0, // 0 = pure DV; -1 = nothing matched (tiny sf)
+        s"DV forget rewrote ${tbl.lastRewrites} files — merge-on-read path not taken")
       tbl.optimize(smallBytes = 1L) // materialize the vectors away
       materializeAndClean(tbl.read(), scratch)
     })

@@ -1150,7 +1150,7 @@ object Soak {
       val after = tbl.countRows()
       assert(after == nRows - nDoomed,
         s"DV forget row count drifted: $after vs ${nRows - nDoomed}")
-      StreamDv(drained, streamWall, tbl.lastDeleteRewrites, dvWall,
+      StreamDv(drained, streamWall, tbl.lastRewrites, dvWall,
         tbl.history.last._4, nRows)
     }
     val runStreamDv = sys.env.get("SPARK_GRAFT_ONLY")

@@ -94,6 +94,8 @@ import org.apache.spark.sql.types._
   * stale base) is handled by the protocol itself and spec-pinned.
   *
   * == MERGE ==
+  * [[merge]], [[delete]] and [[applyDelta]] are one keyed write
+  * ([[keyedWrite]]) with an upsert side, a delete side, or both.
   * Copy-on-write at file grain: files that cannot hold any key of the
   * source batch carry forward BY REFERENCE; touched files are read,
   * rows whose key the source replaces are anti-joined out, and
@@ -121,13 +123,15 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     deleteVectorMaxRows: Long = 0L) {
 
   /** Opt-in MERGE-ON-READ deletes (deletion-vector-lite): when > 0, a
-    * [[delete]] whose doomed keys are few records a per-file DELETION
-    * VECTOR — a parquet sidecar of doomed keys referenced by a `d`
-    * manifest line — instead of rewriting the carrier file. Reads apply
-    * the sidecar as an anti-join; [[optimize]] materializes vectors
-    * away; a file accumulating more than `deleteVectorMaxRows` masked
-    * rows (or losing ALL its rows) falls back to the copy-on-write
-    * rewrite. At 100 TB this turns a GDPR-style scattered forget from
+    * keyed write whose doomed keys are few ([[delete]], and the delete
+    * side of [[applyDelta]] on files no upsert key reaches) records a
+    * per-file DELETION VECTOR — a parquet sidecar of doomed keys
+    * referenced by a `d` manifest line — instead of rewriting the
+    * carrier file (a file any upsert key reaches always rewrites).
+    * Reads apply the sidecar as an anti-join; [[optimize]] materializes
+    * vectors away; a file accumulating more than `deleteVectorMaxRows`
+    * masked rows (or losing ALL its rows) falls back to the
+    * copy-on-write rewrite. At 100 TB this turns a GDPR-style scattered forget from
     * "rewrite every carrier file" into "write a KB-sized key list" —
     * the same rung Delta-class formats call deletion vectors, re-derived
     * minimally (whole-key sidecars, not row-index bitmaps: the sidecar
@@ -1522,8 +1526,9 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
   private[graft] var pruneRangeBuckets: Int = 64
 
   /** Per-file overlap test against the source batch's KEY SET — the
-    * copy-on-write prune [[merge]] and [[delete]] partition entries
-    * with. Two precision tiers, both batch-bounded:
+    * prune [[keyedWrite]]'s uncollected route partitions entries with
+    * ([[exactKeyPruner]] serves the collected route). Two precision
+    * tiers, both batch-bounded:
     *
     *   - ≤ [[pruneSetCap]] distinct keys: collect them, encode, sort; a file
     *     is touched iff a binary search finds at least one batch key
@@ -1633,34 +1638,31 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
 
   /** ONE-JOB batch key profile (guide §5: every separate action is a
     * full driver round-trip — plan, codegen, schedule, collect): the
-    * batch's distinct keys with their upsert multiplicity, gathered in
-    * a single `groupBy(key)` job, serve everything [[merge]] /
-    * [[applyDelta]] / [[delete]] previously paid SEPARATE jobs for —
-    * the key-uniqueness guard (`upRows` vs `upDistinct`), the
-    * touched-file pruner (`pts`), applyDelta's DV split (`upPts`), its
-    * del-only sidecar key set (`delOnly`), and the survivors
-    * anti-join's build side ([[localKeyFrame]] over `pts`). `None` ⇒
-    * the set overflows [[pruneSetCap]], the batch's key type needs a
-    * cast, the key kind is opaque, or a key is unencodable — callers
-    * then run the r19 per-purpose jobs instead (value-identical, just
-    * more round-trips; big batches amortize them). */
+    * distinct keys of a keyed write's upsert and delete sides (either
+    * may be absent) with their upsert multiplicity, gathered in a
+    * single `groupBy(key)` job, serve everything [[keyedWrite]] would
+    * otherwise pay SEPARATE jobs for — the key-uniqueness guard
+    * (`upRows` vs `upDistinct`), the touched-file pruner (`pts`), the
+    * deletion-vector split (`upPts`), the doomed sidecar key set
+    * (`delOnly`), and the survivors anti-join's build side
+    * ([[localKeyFrame]] over `pts`). `None` ⇒ the set overflows
+    * [[pruneSetCap]], a side's key type needs a cast, the key kind is
+    * opaque, or a key is unencodable — [[keyedWrite]] then runs its
+    * uncollected route (value-identical, just more round-trips; big
+    * batches amortize them). */
   private final case class BatchKeys(upRows: Long, upDistinct: Long,
       pts: Array[(String, Any)], upPts: Array[(String, Any)],
       delOnly: Array[Any])
 
-  private def batchKeys(up: DataFrame, del: Option[DataFrame],
+  private def batchKeys(up: Option[DataFrame], del: Option[DataFrame],
       tableKeyType: DataType): Option[BatchKeys] = {
     if (kindOf(tableKeyType) == "opaque") return None
     // the no-cast gate keeps the combined counts exactly the separate
     // jobs' counts: the guard counted PRE-cast distinct keys while the
     // pruner counted post-cast — only an identity cast makes them one
-    if (up.schema(key).dataType != tableKeyType ||
-        del.exists(_.schema(key).dataType != tableKeyType)) return None
-    val tagged = del match {
-      case Some(d) => up.select(col(key), lit(1L).as("__up"))
-        .unionByName(d.select(col(key), lit(0L).as("__up")))
-      case None => up.select(col(key), lit(1L).as("__up"))
-    }
+    if ((up ++ del).exists(_.schema(key).dataType != tableKeyType)) return None
+    val tagged = (up.map(_.select(col(key), lit(1L).as("__up"))) ++
+      del.map(_.select(col(key), lit(0L).as("__up")))).reduce(_ unionByName _)
     val g = tagged.groupBy(col(key)).agg(sum(col("__up")).as("__c"))
       .limit(pruneSetCap.toInt + 1).collect()
     if (g.length > pruneSetCap) return None
@@ -2517,6 +2519,23 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     deleted.toSeq
   }
 
+  /** Keyed MERGE (upsert): rows of `source` replace table rows with an
+    * equal key; the rest insert — exactly the reference's ON CONFLICT
+    * DO UPDATE, and result-identical to [[Upsert.merge]] over the same
+    * frames. Only files whose key range can intersect the source's are
+    * rewritten; `source` must be key-unique (two source rows with one
+    * key would be an ambiguous update — rejected loudly, like
+    * Postgres's "cannot affect row a second time"). An empty source
+    * commits nothing (see [[keyedWrite]]).
+    *
+    * `expectedVersion` pins the snapshot the caller derived `source`
+    * from (compare-and-swap): if the table has advanced past it by
+    * commit time, the merge throws instead of silently overwriting the
+    * interloper's rows. */
+  def merge(source: DataFrame, expectedVersion: Option[Long] = None,
+      tag: String = ""): Long =
+    keyedWrite("merge", Some(source), None, expectedVersion, tag)
+
   /** Keyed DELETE: drop every row whose key appears in `keys` — the
     * right-to-be-forgotten primitive a training-corpus store owes its
     * sources (remove these doc_ids everywhere, atomically, without
@@ -2532,67 +2551,133 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * followed by retiring pre-delete manifests + [[vacuum]] — the same
     * two-step every snapshot table format has. */
   def delete(keys: DataFrame, expectedVersion: Option[Long] = None,
-      tag: String = ""): Long = {
+      tag: String = ""): Long =
+    keyedWrite("delete", None, Some(keys), expectedVersion, tag)
+
+  /** Combined upsert + delete in ONE atomic commit — what a change-feed
+    * consumer ([[SnapshotSync]]) needs: applying a feed as separate
+    * delete and merge commits exposes an intermediate version with the
+    * deletes applied but the adds missing. One copy-on-write pass over
+    * the union of both key sets: touched files drop rows keyed by
+    * `deleteKeys` OR replaced by `upserts`, survivors ∪ upserts land as
+    * new files. A key present in BOTH lands as its upsert (the upsert
+    * wins). Same key-uniqueness, evolution, and CAS contracts as
+    * [[merge]]; on a `deleteVectorMaxRows` handle, files only the
+    * delete side touches take deletion vectors like [[delete]]'s — the
+    * CDC-mirror stream's scattered per-batch deletes stop paying
+    * copy-on-write. An empty delta advances only the tag. */
+  def applyDelta(upserts: DataFrame, deleteKeys: DataFrame,
+      expectedVersion: Option[Long] = None, tag: String = ""): Long =
+    keyedWrite("delta", Some(upserts), Some(deleteKeys), expectedVersion, tag)
+
+  /** Data files the most recent keyed write ([[merge]], [[delete]],
+    * [[applyDelta]]) rewrote — 0 when it only inserted or took deletion
+    * vectors, the spec/soak seam for "a scattered forget rewrites
+    * nothing". -1 until a keyed write commits. */
+  private[graft] var lastRewrites: Int = -1
+
+  /** The ONE keyed write behind [[merge]] (upserts only), [[delete]]
+    * (delete keys only) and [[applyDelta]] (both), committed as `op`:
+    *
+    *   1. one [[batchKeys]] job profiles both sides (an absent side adds
+    *      nothing to it); past its reach the uncollected route runs the
+    *      per-purpose jobs instead — the upsert side's guard counts, the
+    *      [[keyPruner]] over the key union, the doomed-set count;
+    *   2. the upsert side must be key-unique;
+    *   3. files no batch key can reach carry forward by reference;
+    *   4. on a `deleteVectorMaxRows` handle, touched files no UPSERT key
+    *      can reach go through [[deletionVectorPlan]] with the doomed
+    *      keys (delete keys the upserts do not replace) when there are
+    *      at most `deleteVectorMaxRows` of them; upsert-touched files
+    *      always rewrite (the upsert replaces rows);
+    *   5. rewritten files' survivors ∪ upserts stage range-clustered
+    *      and commit with the carried and vectored entries.
+    *
+    * A write with no upsert rows that rewrites and vectors nothing (and
+    * evolves no schema) commits nothing: it returns the current version,
+    * or records a new `tag` alone — the cursor-bearing no-op a
+    * change-feed consumer applies across a rewrite-only interval. */
+  private def keyedWrite(op: String, upserts: Option[DataFrame],
+      deleteKeys: Option[DataFrame], expectedVersion: Option[Long], tag: String): Long = {
     val m = resolveForWrite(expectedVersion)
-    require(keys.schema.fieldNames.contains(key),
-      s"delete keys must carry the table key column $key")
-    val ks = keys.select(col(key)).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    deleteKeys.foreach(d => require(d.schema.fieldNames.contains(key),
+      s"${if (upserts.isDefined) "applyDelta " else ""}delete keys must carry " +
+        s"the table key column $key"))
+    val schema = upserts.fold(m.schema)(u => evolveSchema(m, u.schema))
+    val keyType = schema(key).dataType
+    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val up = upserts.map(_.persist(disk))
+    val del = deleteKeys.map(_.select(col(key)).persist(disk))
     try {
-      val keyType = m.schema(key).dataType
-      // ONE job: pruner key set + DV sidecar set + its count
-      val bk = batchKeys(ks, None, keyType)
-      val pruned = bk match {
+      val bk = batchKeys(up, del, keyType)
+      val nUpRows = up.fold(0L) { u =>
+        val (rows, distinct) = bk match {
+          case Some(b) => (b.upRows, b.upDistinct)
+          case None =>
+            val r = u.agg(count(lit(1)), count_distinct(col(key))).collect()(0)
+            (r.getLong(0), r.getLong(1))
+        }
+        if (rows != distinct) throw new IllegalArgumentException(
+          s"${if (del.isDefined) "applyDelta upserts carry" else "merge source carries"} " +
+            s"${rows - distinct} duplicate $key keys — an upsert batch must be key-unique")
+        rows
+      }
+      // an empty upsert side is absent from here on: it prunes, splits
+      // and stages nothing, so it must cost no job
+      val liveUp = up.filter(_ => nUpRows > 0)
+      val upKeys = liveUp.map(_.select(col(key)))
+      val affected = (upKeys ++ del).reduceOption(_ unionByName _)
+      val (touched, untouched) = m.entries.partition(bk match {
         case Some(b) => exactKeyPruner(b.pts, kindOf(keyType), keyType)
-        case None => keyPruner(ks, keyType)
+        case None => affected.fold((_: Entry) => false)(keyPruner(_, keyType))
+      })
+      val split = del match {
+        case Some(d) if deleteVectorMaxRows > 0 && touched.nonEmpty =>
+          val (upTouched, delOnly) = upKeys.fold((Seq.empty[Entry], touched)) { uk =>
+            touched.partition(bk match {
+              case Some(b) => exactKeyPruner(b.upPts, kindOf(keyType), keyType)
+              case None => keyPruner(uk, keyType)
+            })
+          }
+          // the doomed set: delete keys no upsert replaces (the upsert
+          // wins), table-typed so sidecars compare as the key type; a set
+          // over the per-file cap would bloat every sidecar it unions
+          // into, so those files rewrite instead
+          val plan = if (delOnly.isEmpty) None else bk match {
+            case Some(b) =>
+              if (b.delOnly.isEmpty || b.delOnly.length > deleteVectorMaxRows) None
+              else Some(deletionVectorPlan(m, delOnly, localKeyFrame(b.delOnly, keyType)))
+            case None =>
+              val typed = d.select(col(key).cast(keyType)).na.drop(Seq(key)).distinct()
+              val doomed = upKeys.fold(typed)(uk =>
+                typed.join(uk.select(col(key).cast(keyType)), Seq(key), "left_anti"))
+                .persist(disk)
+              try {
+                val n = doomed.count()
+                if (n == 0 || n > deleteVectorMaxRows) None
+                else Some(deletionVectorPlan(m, delOnly, doomed))
+              } finally doomed.unpersist(blocking = false)
+          }
+          plan.fold(DvPlan(Nil, Nil, touched))(p => p.copy(cow = upTouched ++ p.cow))
+        case _ => DvPlan(Nil, Nil, touched)
       }
-      val (touched, untouched) = m.entries.partition(pruned)
-      // empty key set (keyPruner touches nothing) or no file can hold a
-      // doomed key: nothing to remove — return the current version (or
-      // record the tag) instead of rewriting the table to delete nothing
-      if (touched.isEmpty)
+      if (nUpRows == 0 && split.cow.isEmpty && split.dvd.isEmpty && schema == m.schema)
         return if (tag.nonEmpty && !m.tag.contains(tag)) setTag(tag) else m.version
-      def antiKeys: DataFrame = bk match {
-        case Some(b) => localKeyFrame(b.pts.map(_._2), keyType)
-        case None => ks
-      }
-      def copyOnWrite(): Long = {
-        lastDeleteRewrites = touched.size
-        val survivors = readEntries(m, touched).join(antiKeys, Seq(key), "left_anti")
-        commit(m.version, "delete", m.schema,
-          untouched ++ stage(clustered(survivors), m.colmap), tag, m.colmap, m.retired)
-      }
-      if (deleteVectorMaxRows <= 0) return copyOnWrite()
-      // MERGE-ON-READ branch (see deleteVectorMaxRows): type-normalize
-      // the batch (sidecar keys must compare as the TABLE's key type)
-      // and gate on its size — a batch bigger than the per-file cap
-      // would bloat every sidecar it unions into; rewriting is the
-      // better trade there anyway
-      def vectored(ksT: DataFrame): Long = {
-        val plan = deletionVectorPlan(m, touched, ksT)
-        if (plan.hitNothing)
-          return if (tag.nonEmpty && !m.tag.contains(tag)) setTag(tag) else m.version
-        lastDeleteRewrites = plan.cow.size
-        val rewritten =
-          if (plan.cow.isEmpty) Nil
-          else stage(clustered(readEntries(m, plan.cow).join(ksT, Seq(key), "left_anti")),
-            m.colmap)
-        commit(m.version, "delete", m.schema,
-          untouched ++ plan.carry ++ plan.dvd ++ rewritten, tag, m.colmap, m.retired)
-      }
-      bk match {
-        case Some(b) =>
-          if (b.pts.length == 0 || b.pts.length > deleteVectorMaxRows) copyOnWrite()
-          else vectored(localKeyFrame(b.pts.map(_._2), keyType))
-        case None =>
-          val ksT = ks.select(col(key).cast(keyType)).na.drop(Seq(key)).distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val kCount = ksT.count()
-            if (kCount == 0 || kCount > deleteVectorMaxRows) copyOnWrite()
-            else vectored(ksT)
-          } finally ksT.unpersist(blocking = false)
-      }
-    } finally ks.unpersist(blocking = false)
+      lastRewrites = split.cow.size
+      val fresh =
+        if (split.cow.isEmpty && nUpRows == 0) Nil // pure-DV: stage no empty dir
+        else {
+          // rewritten files read with the EVOLVED schema: a just-added
+          // column comes back null for pre-evolution rows. Reaching here
+          // means upsert rows or touched files, so some key side exists
+          val antiKeys = bk.fold(affected.get)(b => localKeyFrame(b.pts.map(_._2), keyType))
+          val survivors = readEntries(m, schema, split.cow).join(antiKeys, Seq(key), "left_anti")
+          stage(clustered(liveUp.fold(survivors)(u =>
+            survivors.unionByName(u.select(schema.fieldNames.map(col): _*)))), m.colmap)
+        }
+      commit(m.version, op, schema, untouched ++ split.carry ++ split.dvd ++ fresh,
+        tag, m.colmap, m.retired)
+    } finally (up ++ del).foreach(_.unpersist(blocking = false))
   }
 
   /** The merge-on-read split of `entries` against a (table-typed,
@@ -2601,9 +2686,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * fresh deletion vector (sidecars written here), `cow` must rewrite
     * (over the accumulated cap, or emptied outright — an emptied file's
     * rewrite stages nothing, dropping the file). */
-  private final case class DvPlan(carry: Seq[Entry], dvd: Seq[Entry], cow: Seq[Entry]) {
-    def hitNothing: Boolean = dvd.isEmpty && cow.isEmpty
-  }
+  private final case class DvPlan(carry: Seq[Entry], dvd: Seq[Entry], cow: Seq[Entry])
 
   private def deletionVectorPlan(m: Manifest, entries: Seq[Entry],
       ksT: DataFrame): DvPlan = {
@@ -2657,11 +2740,6 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     DvPlan(falsePos, dvdNew, cow)
   }
 
-  /** Data files the most recent [[delete]] rewrote — 0 on a pure
-    * deletion-vector delete, the spec/soak seam for "a scattered forget
-    * rewrites nothing". -1 until delete() commits. */
-  private[graft] var lastDeleteRewrites: Int = -1
-
   /** Write a doomed-key set as ONE parquet part file under `data/` and
     * return its table-relative path — a single FILE (not a directory)
     * so [[vacuum]]'s referenced-set bookkeeping covers sidecars exactly
@@ -2676,179 +2754,6 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
         s"deletion-vector write at $out produced no part file"))
     s"$rel/$part"
   }
-
-  /** Keyed MERGE (upsert): rows of `source` replace table rows with an
-    * equal key; the rest insert — exactly the reference's ON CONFLICT
-    * DO UPDATE, and result-identical to [[Upsert.merge]] over the same
-    * frames. Only files whose key range can intersect the source's are
-    * rewritten; `source` must be key-unique (two source rows with one
-    * key would be an ambiguous update — rejected loudly, like
-    * Postgres's "cannot affect row a second time").
-    *
-    * `expectedVersion` pins the snapshot the caller derived `source`
-    * from (compare-and-swap): if the table has advanced past it by
-    * commit time, the merge throws instead of silently overwriting the
-    * interloper's rows. */
-  def merge(source: DataFrame, expectedVersion: Option[Long] = None,
-      tag: String = ""): Long = {
-    val m = resolveForWrite(expectedVersion)
-    val evolved = evolveSchema(m, source.schema)
-    val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val keyType = evolved(key).dataType
-      // ONE job: uniqueness guard + pruner key set (+ cache warm-up)
-      val bk = batchKeys(src, None, keyType)
-      val nDup = bk match {
-        case Some(b) => b.upRows - b.upDistinct
-        case None =>
-          val b = src.agg(count(lit(1)), count_distinct(col(key))).collect()(0)
-          b.getLong(0) - b.getLong(1)
-      }
-      if (nDup != 0)
-        throw new IllegalArgumentException(
-          s"merge source carries $nDup duplicate $key " +
-            "keys — an upsert batch must be key-unique")
-      val (touched, untouched) = m.entries.partition(bk match {
-        case Some(b) => exactKeyPruner(b.pts, kindOf(keyType), keyType)
-        case None => keyPruner(src.select(col(key)), keyType)
-      })
-      // touched files are read with the EVOLVED schema: any
-      // just-added column comes back null for pre-evolution rows
-      val antiKeys = bk match {
-        case Some(b) => localKeyFrame(b.pts.map(_._2), keyType)
-        case None => src.select(col(key))
-      }
-      val survivors = readEntries(m, evolved, touched)
-        .join(antiKeys, Seq(key), "left_anti")
-      val fresh = stage(
-        clustered(survivors.unionByName(src.select(evolved.fieldNames.map(col): _*))),
-        m.colmap)
-      commit(m.version, "merge", evolved, untouched ++ fresh, tag, m.colmap, m.retired)
-    } finally src.unpersist(blocking = false)
-  }
-
-  /** Combined upsert + delete in ONE atomic commit — what a change-feed
-    * consumer ([[SnapshotSync]]) needs: applying a feed as separate
-    * delete and merge commits exposes an intermediate version with the
-    * deletes applied but the adds missing. One copy-on-write pass over
-    * the union of both key sets (same [[keyPruner]] file pruning):
-    * touched files drop rows keyed by `deleteKeys` OR replaced by
-    * `upserts`, survivors ∪ upserts land as new files. A key present in
-    * BOTH lands as its upsert (the upsert wins). Same key-uniqueness,
-    * evolution, and CAS contracts as [[merge]]. On a
-    * `deleteVectorMaxRows` handle, files only the delete side touches
-    * take DELETION VECTORS instead of rewrites (see the constructor
-    * note) — the CDC-mirror stream's scattered per-batch deletes stop
-    * paying copy-on-write. */
-  def applyDelta(upserts: DataFrame, deleteKeys: DataFrame,
-      expectedVersion: Option[Long] = None, tag: String = ""): Long = {
-    val m = resolveForWrite(expectedVersion)
-    require(deleteKeys.schema.fieldNames.contains(key),
-      s"applyDelta delete keys must carry the table key column $key")
-    val evolved = evolveSchema(m, upserts.schema)
-    val up = upserts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val del = deleteKeys.select(col(key)).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val keyType = evolved(key).dataType
-      // ONE job over up ∪ del: uniqueness guard + pruner key set + DV
-      // split set + del-only sidecar keys (+ cache warm-up)
-      val bk = batchKeys(up, Some(del), keyType)
-      val (nUpRows, nDup) = bk match {
-        case Some(b) => (b.upRows, b.upRows - b.upDistinct)
-        case None =>
-          val b = up.agg(count(lit(1)), count_distinct(col(key))).collect()(0)
-          (b.getLong(0), b.getLong(0) - b.getLong(1))
-      }
-      if (nDup != 0)
-        throw new IllegalArgumentException(
-          s"applyDelta upserts carry $nDup duplicate $key " +
-            "keys — an upsert batch must be key-unique")
-      lazy val affected = up.select(col(key)).unionByName(del)
-      val (touched, untouched) = m.entries.partition(bk match {
-        case Some(b) => exactKeyPruner(b.pts, kindOf(keyType), keyType)
-        case None => keyPruner(affected, keyType)
-      })
-      // empty delta (no upserts, nothing to delete): advance only the
-      // tag — the cursor-bearing no-op a change-feed consumer applies
-      // across a rewrite-only source interval — instead of staging an
-      // empty file set and committing a contentless "delta" version
-      if (nUpRows == 0 && touched.isEmpty)
-        return if (tag.nonEmpty && !m.tag.contains(tag)) setTag(tag) else m.version
-      // MERGE-ON-READ deletes inside the delta (deleteVectorMaxRows
-      // handles): a file only the DELETE side can touch takes a
-      // deletion vector instead of a rewrite — the CDC-mirror shape,
-      // where every micro-batch carries a few scattered deletes beside
-      // its upserts and copy-on-write would rewrite a carrier file per
-      // doomed key per batch. A file any UPSERT key can reach must
-      // rewrite regardless (the upsert replaces rows), so the split is
-      // upsert-touched → COW, delete-only-touched → the same DV plan /
-      // cap / fallbacks as delete(). Keys in BOTH halves are never
-      // doomed (upsert wins): they are excluded from the sidecar set,
-      // and the pruner guarantees their carrier files sit in the
-      // upsert-touched (rewritten) partition.
-      var dvCarry = Seq.empty[Entry]
-      var dvdNew = Seq.empty[Entry]
-      var cowTouched = touched
-      if (deleteVectorMaxRows > 0 && touched.nonEmpty) bk match {
-        case Some(b) =>
-          // the DV split and the del-only sidecar set come straight
-          // from the collected profile — zero additional jobs
-          val (upTouched, delOnly) = touched.partition(
-            exactKeyPruner(b.upPts, kindOf(keyType), keyType))
-          if (delOnly.nonEmpty && b.delOnly.length > 0 &&
-              b.delOnly.length <= deleteVectorMaxRows) {
-            val plan = deletionVectorPlan(m, delOnly,
-              localKeyFrame(b.delOnly, keyType))
-            // plan.cow (over-cap/emptied) files are delete-only; the
-            // shared survivors anti-join below removes exactly their
-            // doomed rows
-            dvCarry = plan.carry
-            dvdNew = plan.dvd
-            cowTouched = upTouched ++ plan.cow
-          }
-        case None =>
-          val (upTouched, delOnly) = touched.partition(
-            keyPruner(up.select(col(key)), keyType))
-          if (delOnly.nonEmpty) {
-            val ksT = del.select(col(key).cast(keyType)).na.drop(Seq(key)).distinct()
-              .join(up.select(col(key).cast(keyType)), Seq(key), "left_anti")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val kCount = ksT.count()
-              if (kCount > 0 && kCount <= deleteVectorMaxRows) {
-                val plan = deletionVectorPlan(m, delOnly, ksT)
-                dvCarry = plan.carry
-                dvdNew = plan.dvd
-                cowTouched = upTouched ++ plan.cow
-              }
-            } finally ksT.unpersist(blocking = false)
-          }
-      }
-      lastDeltaRewrites = cowTouched.size
-      // a pure-DV delta (no upserts, every delete vectored) stages
-      // nothing — don't write an empty orphan dir
-      val fresh =
-        if (cowTouched.isEmpty && nUpRows == 0) Nil
-        else {
-          val antiKeys = bk match {
-            case Some(b) => localKeyFrame(b.pts.map(_._2), keyType)
-            case None => affected.distinct()
-          }
-          val survivors = readEntries(m, evolved, cowTouched)
-            .join(antiKeys, Seq(key), "left_anti")
-          stage(clustered(
-            survivors.unionByName(up.select(evolved.fieldNames.map(col): _*))), m.colmap)
-        }
-      commit(m.version, "delta", evolved,
-        untouched ++ dvCarry ++ dvdNew ++ fresh, tag, m.colmap, m.retired)
-    } finally { up.unpersist(blocking = false); del.unpersist(blocking = false) }
-  }
-
-  /** Data files the most recent [[applyDelta]] rewrote — the spec seam
-    * for "a CDC batch's scattered deletes ride deletion vectors".
-    * -1 until applyDelta commits. */
-  private[graft] var lastDeltaRewrites: Int = -1
 
   /** The optimistic-concurrency retry loop the commit protocol's
     * lost-update check demands, packaged: derive the merge source FROM

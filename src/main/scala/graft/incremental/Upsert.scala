@@ -1,21 +1,15 @@
 package graft.incremental
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Keyed upsert ("INSERT … ON CONFLICT (key) DO UPDATE", reference
   * etl_script_incremental_pandas.py:249-267) over immutable storage:
   * the incoming rows win on key collision, untouched rows survive.
   *
-  * Two equivalent formulations (SURVEY.md S5/J4):
-  *  - [[merge]]: left-anti join — preferred when `incoming` is small
-  *    relative to `existing` (one shuffle or broadcast of the delta's
-  *    keys; at scale combine with partition-overwrite of only the
-  *    partitions the delta touches).
-  *  - [[mergeByVersion]]: union + row_number dedup by a version column —
-  *    preferred when merging many delta batches at once (compacts N
-  *    versions per key in one window pass).
+  * A left-anti join (SURVEY.md S5/J4): one shuffle or broadcast of
+  * the delta's keys, so it suits an `incoming` small relative to
+  * `existing`; [[SnapshotTable.merge]] is the file-pruned store twin.
   */
 object Upsert {
 
@@ -23,14 +17,4 @@ object Upsert {
   def merge(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
     existing.join(incoming.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(incoming)
-
-  /** Latest row per key by `version` (descending) across both frames. */
-  def mergeByVersion(existing: DataFrame, incoming: DataFrame,
-      keys: Seq[String], version: String): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(version).desc)
-    existing.unionByName(incoming)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
 }

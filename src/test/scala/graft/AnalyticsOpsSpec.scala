@@ -73,7 +73,7 @@ class AnalyticsOpsSpec extends AnyFunSuite {
 
   test("blocked fuzzy join finds within-block near names and never crosses blocks") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("fuzzy").toString
+    val dir = TestSpark.tempDir("fuzzy").toString
     import s.implicits._
     Seq(
       (1L, "red bolt", "Brand#1", "X", 5, 1.0),

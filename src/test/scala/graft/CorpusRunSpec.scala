@@ -11,7 +11,7 @@ import TestSpark._
 class CorpusRunSpec extends AnyFunSuite {
 
   test("CorpusRun publishes a gated corpus with consistent lineage artifacts") {
-    val out = java.nio.file.Files.createTempDirectory("graft-corpus").toString
+    val out = TestSpark.tempDir("graft-corpus").toString
     CorpusRun.main(Array("/root/testdata/sf0.001", out))
     val report = spark.read.parquet(s"$out/report.parquet")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -61,7 +61,7 @@ class CorpusRunSpec extends AnyFunSuite {
   }
 
   test("CorpusForget erases docs from the store, its history, and every re-derived export") {
-    val out = java.nio.file.Files.createTempDirectory("graft-corpus-fgt").toString
+    val out = TestSpark.tempDir("graft-corpus-fgt").toString
     CorpusRun.main(Array("/root/testdata/sf0.001", out))
     val store = new graft.incremental.SnapshotTable(spark, s"$out/corpus", "doc_id")
     val doomed = store.read().select("doc_id").orderBy("doc_id")
@@ -70,7 +70,7 @@ class CorpusRunSpec extends AnyFunSuite {
     // a downstream replica holds its own copy of the doomed text: the
     // mirror must be erased by the same invocation, or the forget has a
     // replication hole
-    val mirOut = java.nio.file.Files.createTempDirectory("graft-corpus-fgt-mir").toString
+    val mirOut = TestSpark.tempDir("graft-corpus-fgt-mir").toString
     val mirror = new graft.incremental.SnapshotTable(spark, s"$mirOut/corpus", "doc_id")
     graft.incremental.SnapshotSync.sync(store, mirror, "doc_id")
     assert(mirror.read().filter(col("doc_id").isin(doomed.map(Long.box): _*)).count() == 3)
@@ -115,7 +115,7 @@ class CorpusRunSpec extends AnyFunSuite {
     // the shared session must exist first: a run with none to reuse
     // owns its session and exits the JVM on the gate failure
     assert(!spark.sparkContext.isStopped)
-    val out = java.nio.file.Files.createTempDirectory("graft-corpus-psi").toString
+    val out = TestSpark.tempDir("graft-corpus-psi").toString
     sys.props("SPARK_GRAFT_PSI_MAX") = "-1" // every split's PSI is >= 0
     val e =
       try intercept[GraftSession.RunFailed](CorpusRun.main(Array("/root/testdata/sf0.001", out)))
@@ -128,7 +128,7 @@ class CorpusRunSpec extends AnyFunSuite {
   }
 
   test("gated excise + cluster splitter: extra stage, rewritten text, zero split leakage") {
-    val out = java.nio.file.Files.createTempDirectory("graft-corpus-ex").toString
+    val out = TestSpark.tempDir("graft-corpus-ex").toString
     sys.props("SPARK_GRAFT_EXCISE") = "1"
     sys.props("SPARK_GRAFT_SPLIT") = "cluster"
     try CorpusRun.main(Array("/root/testdata/sf0.001", out))
@@ -159,7 +159,7 @@ class CorpusRunSpec extends AnyFunSuite {
 
   test("accumulate mode: delta batches merge into a growing corpus store; exports cover the union") {
     val base = "/root/testdata/sf0.001"
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def tmp(p: String) = TestSpark.tempDir(p).toString
     val b1Dir = tmp("graft-acc-b1"); val b2Dir = tmp("graft-acc-b2")
     Tables.documents(spark, base).filter(col("doc_id") < 250)
       .write.parquet(s"$b1Dir/documents.parquet")
@@ -251,7 +251,7 @@ class CorpusRunSpec extends AnyFunSuite {
   test("sweep CAS: a commit landing mid-analysis forces a re-derive — no fresh row deleted off a stale set") {
     val s = spark
     import s.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-sweep-cas").toString
+    val out = TestSpark.tempDir("graft-sweep-cas").toString
     val store = new graft.incremental.SnapshotTable(spark, s"$out/corpus", "doc_id")
     val longText = (1 to 60).map(i => s"tok$i").mkString(" ")
     def docs(rows: (Long, String, Double)*) =
@@ -287,7 +287,7 @@ class CorpusRunSpec extends AnyFunSuite {
 
   test("indexed admission over id-ordered batches equals the batch funnel; re-runs are no-ops") {
     val base = "/root/testdata/sf0.001"
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def tmp(p: String) = TestSpark.tempDir(p).toString
     def keptIds(out: String): Set[Long] =
       spark.read.parquet(s"$out/kept").select("doc_id")
         .collect().map(_.getLong(0)).toSet

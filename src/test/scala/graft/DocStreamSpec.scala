@@ -110,7 +110,7 @@ class DocStreamSpec extends AnyFunSuite {
   test("foreachBatch indexed ingest sees a mid-stream absorb: re-crawls of a just-absorbed batch are rejected") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-live").toString
+    val dir = TestSpark.tempDir("graft-ingest-live").toString
     val idx = new graft.incremental.IngestIndex(spark, dir)
     idx.build(Seq((100L, good1.toUpperCase + "  ")).toDF("doc_id", "text"))
     val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -155,7 +155,7 @@ class DocStreamSpec extends AnyFunSuite {
     // (fresh docs) -> absorb slice B between micro-batches -> batch 1
     // (re-crawls of B, new ids) rejected in full. The main THROWS on
     // divergence when embedded, so reaching the asserts is the check.
-    val dir = java.nio.file.Files.createTempDirectory("graft-sing-spec").toString
+    val dir = TestSpark.tempDir("graft-sing-spec").toString
     StreamingIngestRun.main(Array("/root/testdata/sf0.001", dir))
     val admitted = spark.read.parquet(s"$dir/admitted")
     assert(admitted.count() > 0, "batch 0 must admit the fresh quality docs")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -73,8 +71,8 @@ class ExportOpsSpec extends AnyFunSuite {
 
   test("writeShards: re-export is row-identical, shards partition the corpus, h-sorted files") {
     val n = 4
-    val dir1 = Files.createTempDirectory("graft_shards1").toString
-    val dir2 = Files.createTempDirectory("graft_shards2").toString
+    val dir1 = TestSpark.tempDir("graft_shards1").toString
+    val dir2 = TestSpark.tempDir("graft_shards2").toString
     ExportOps.writeShards(docs, dir1, n)
     ExportOps.writeShards(docs, dir2, n)
     val r1 = spark.read.parquet(dir1)

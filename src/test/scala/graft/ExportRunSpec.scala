@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import TestSpark._
@@ -13,7 +11,7 @@ class ExportRunSpec extends AnyFunSuite {
 
   test("export run: written tree consistent with manifest, re-export deterministic") {
     spark // ensure the shared session exists (embeddable-main protocol)
-    val dir = Files.createTempDirectory("graft_export_run").toString
+    val dir = TestSpark.tempDir("graft_export_run").toString
     ExportRun.main(Array("/root/testdata/sf0.001", dir, "4"))
     val written = spark.read.parquet(s"$dir/shards")
     assert(written.count() == Tables.documents(spark, "/root/testdata/sf0.001").count())

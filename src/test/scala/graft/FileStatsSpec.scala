@@ -64,7 +64,7 @@ final class FileStatsSpec extends AnyFunSuite {
   }
 
   test("inline write-time stats are adopted and byte-identical to the read-back pass") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fstats").toString
+    val base = TestSpark.tempDir("graft-fstats").toString
     val docs = corpus(0 until 500)
     val upserts = corpus(450 until 520).withColumn("score", col("score") + 1.0)
 
@@ -102,7 +102,7 @@ final class FileStatsSpec extends AnyFunSuite {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-fstats-empty").toString
+    val dir = TestSpark.tempDir("graft-fstats-empty").toString
     val docs = corpus(0 until 50)
     // LIMIT 0 over a real frame, and a LocalRelation-backed empty frame
     val t1 = tableAt(s"$dir/t1")
@@ -146,7 +146,7 @@ final class FileStatsSpec extends AnyFunSuite {
       assert(dup.getMessage.contains("2 duplicate doc_id"))
       t
     }
-    val base = java.nio.file.Files.createTempDirectory("graft-bkeys").toString
+    val base = TestSpark.tempDir("graft-bkeys").toString
     val a = run(s"$base/a", 100000L) // combined one-job profile
     val b = run(s"$base/b", 3L)      // forced overflow: r19 fallback jobs
     val (ra, rb) = (TestSpark.collectSorted(a.read()).map(_.mkString("|")),
@@ -157,15 +157,15 @@ final class FileStatsSpec extends AnyFunSuite {
       b.countWhere("n_chars", Some(100L), Some(300L)))
     // the combined path kept the DV promise: scattered deletes beside
     // upserts did not rewrite every touched file
-    assert(a.lastDeleteRewrites == 0,
-      s"combined-profile DV delete rewrote ${a.lastDeleteRewrites} files")
+    assert(a.lastRewrites == 0,
+      s"combined-profile DV delete rewrote ${a.lastRewrites} files")
   }
 
   test("NaN max degrades that column's bounds in both arms the same way") {
     // a file whose score max is NaN records NO score bounds (ordEncode
     // refuses NaN) but keeps its exact null count — behavior inherited
     // from r19; this pins that the inline path reproduces it
-    val dir = java.nio.file.Files.createTempDirectory("graft-fstats-nan").toString
+    val dir = TestSpark.tempDir("graft-fstats-nan").toString
     val s = spark
     import s.implicits._
     val df = Seq((1L, Double.NaN), (2L, 5.0), (3L, Double.NegativeInfinity))

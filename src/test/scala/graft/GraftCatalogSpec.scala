@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +18,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   GraftSession.install(spark)
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-cat").toString
+    TestSpark.tempDir("graft-cat").toString
 
   private def kv(rows: (Long, String)*): DataFrame = {
     val s = spark

@@ -63,7 +63,7 @@ class IncrementalPropertySpec extends AnyFunSuite {
         }
       }
       val log = rentalDf(versions)
-      val dir = Files.createTempDirectory("graft-prop").toString
+      val dir = TestSpark.tempDir("graft-prop").toString
       val orderedCuts = (cuts.map(c => new Timestamp(base + c * day)) :+
         new Timestamp(base + 250 * day)).sortBy(_.getTime)
       orderedCuts.foreach { t =>
@@ -212,8 +212,8 @@ class IncrementalPropertySpec extends AnyFunSuite {
           .map(back => RentalVersion(r.id, rd, Some(at(back)), lu(back)))
           .orElse(Option.when(r.day <= cut)(RentalVersion(r.id, rd, None, lu(r.day))))
       })
-      val (dirRef, dirNew) = (Files.createTempDirectory("graft-eq-ref").toString,
-        Files.createTempDirectory("graft-eq-new").toString)
+      val (dirRef, dirNew) = (TestSpark.tempDir("graft-eq-ref").toString,
+        TestSpark.tempDir("graft-eq-new").toString)
       // the repeated last cut is a no-op rerun
       val runCuts = cuts.sorted ++ Seq(250, 250)
       runCuts.zipWithIndex.foreach { case (cut, i) =>
@@ -265,7 +265,7 @@ class IncrementalPropertySpec extends AnyFunSuite {
         }
       }
       val log = rentalDf(versions)
-      val dir = Files.createTempDirectory("graft-crash").toString
+      val dir = TestSpark.tempDir("graft-crash").toString
       val t1 = new Timestamp(base + 70 * day)
       val t2 = new Timestamp(base + 250 * day)
       val now = ts("2030-01-01 00:00:00")
@@ -322,7 +322,7 @@ class IncrementalPropertySpec extends AnyFunSuite {
     val log = rentalDf(Seq(
       RentalVersion(1, new Timestamp(base + 10 * day), None, new Timestamp(base + 10 * day)),
       RentalVersion(2, new Timestamp(base + 100 * day), None, new Timestamp(base + 100 * day))))
-    val dir = Files.createTempDirectory("graft-runlog").toString
+    val dir = TestSpark.tempDir("graft-runlog").toString
     val t1 = new Timestamp(base + 70 * day)
     val t2 = new Timestamp(base + 250 * day)
     val r1 = IncrementalWeeklySummary.run(spark, sourceAsOf(log, t1), dir,
@@ -347,7 +347,7 @@ class IncrementalPropertySpec extends AnyFunSuite {
       val rdTs = new Timestamp(base + rd * day)
       RentalVersion(id, rdTs, None, rdTs)
     }
-    val dir = Files.createTempDirectory("graft-ddl").toString
+    val dir = TestSpark.tempDir("graft-ddl").toString
     IncrementalWeeklySummary.run(spark, rentalDf(versions), dir,
       now = ts("2030-01-01 00:00:00"))
     RunLog.append(spark, dir,

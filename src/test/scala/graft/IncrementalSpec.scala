@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -21,7 +20,7 @@ class IncrementalSpec extends AnyFunSuite {
   private val now = ts("2030-01-01 00:00:00")
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-inc").toString
+    TestSpark.tempDir("graft-inc").toString
 
   /** Summary columns comparable to snapshot output (drop audit column). */
   private def comparable(summary: DataFrame): DataFrame =

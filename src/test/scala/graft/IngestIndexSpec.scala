@@ -24,7 +24,7 @@ class IngestIndexSpec extends AnyFunSuite {
   private lazy val delta = docs.filter(col("doc_id") % 10 === 0)
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-ingest").toString
+    TestSpark.tempDir("graft-ingest").toString
 
   private def rows(df: DataFrame): Set[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSet

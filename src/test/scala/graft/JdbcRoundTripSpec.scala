@@ -20,7 +20,7 @@ import TestSpark._
 class JdbcRoundTripSpec extends AnyFunSuite {
 
   System.setProperty("derby.system.home",
-    java.nio.file.Files.createTempDirectory("graft-derby-rt").toString)
+    TestSpark.tempDir("graft-derby-rt").toString)
 
   private val url = "jdbc:derby:memory:graftRoundTrip;create=true"
 
@@ -51,8 +51,8 @@ class JdbcRoundTripSpec extends AnyFunSuite {
     assert(fromJdbc.count() === 3)
 
     val now = ts("2030-01-01 00:00:00")
-    val dirJdbc = java.nio.file.Files.createTempDirectory("graft-rt-jdbc").toString
-    val dirDf = java.nio.file.Files.createTempDirectory("graft-rt-df").toString
+    val dirJdbc = TestSpark.tempDir("graft-rt-jdbc").toString
+    val dirDf = TestSpark.tempDir("graft-rt-df").toString
     IncrementalWeeklySummary.run(spark, fromJdbc, dirJdbc, now = now)
     IncrementalWeeklySummary.run(spark, versioned, dirDf, now = now)
 

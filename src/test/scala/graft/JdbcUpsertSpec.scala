@@ -22,7 +22,7 @@ class JdbcUpsertSpec extends AnyFunSuite {
 
   // Keep Derby's log out of the repo root.
   System.setProperty("derby.system.home",
-    java.nio.file.Files.createTempDirectory("graft-derby").toString)
+    TestSpark.tempDir("graft-derby").toString)
 
   private val url = "jdbc:derby:memory:graftUpsert;create=true"
 

@@ -53,7 +53,7 @@ class ObservabilitySpec extends AnyFunSuite {
 
   test("drain appends to parquet and empties the buffer; re-drain appends") {
     val m = GraftQueryMetrics.register(spark)
-    val path = java.nio.file.Files.createTempDirectory("graft-obs").toString + "/metrics"
+    val path = TestSpark.tempDir("graft-obs").toString + "/metrics"
     try {
       Tables.orders(spark, dir).limit(3).collect()
       eventually() { m.captured.headOption }

@@ -34,7 +34,7 @@ class PlanSpec extends AnyFunSuite {
     // projection still prunes the read schema
     val s = spark
     import s.implicits._
-    val scratch = java.nio.file.Files.createTempDirectory("graft-planscan").toString
+    val scratch = TestSpark.tempDir("graft-planscan").toString
     val tbl = new graft.incremental.SnapshotTable(s, scratch, "k",
       clusterPartitions = Some(4), statsColumns = Seq("score"))
     tbl.create((1L to 400L).map(i => (i, s"v$i", i * 2, s"pad$i"))

@@ -31,7 +31,7 @@ final class ScaleGuardSpec extends AnyFunSuite {
   test("Par.fanned: plan no-op when scan partitions >= parallelism, fans when below") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-fanguard").toString
+    val dir = TestSpark.tempDir("graft-fanguard").toString
     (1L to 5000L).map(i => (i, s"doc-$i-${i * 2654435761L}%09d"))
       .toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(dir)
     val df = s.read.parquet(dir)

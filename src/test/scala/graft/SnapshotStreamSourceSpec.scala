@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +20,7 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
   private val legacyProvider = "org.apache.spark.sql.graft.SnapshotChangeFeedProvider"
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-feedsrc").toString
+    TestSpark.tempDir("graft-feedsrc").toString
 
   private def kv(rows: (Long, String)*): DataFrame = {
     val s = spark
@@ -536,7 +534,7 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
   test("Trigger.AvailableNow drains to the head captured at start across rate-limited batches, then stops — a mid-drain commit stays for the next run") {
     import org.apache.spark.sql.streaming.Trigger
     val dir = freshDir()
-    val ckpt = Files.createTempDirectory("graft-drain-ckpt").toString
+    val ckpt = TestSpark.tempDir("graft-drain-ckpt").toString
     val tbl = new SnapshotTable(spark, dir, "k")
     tbl.create(kv(1L -> "a"))  // v0 — the startingVersion=0 base
     tbl.merge(kv(2L -> "b"))   // v1

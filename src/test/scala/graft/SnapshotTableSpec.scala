@@ -20,7 +20,7 @@ import TestSpark._
 class SnapshotTableSpec extends AnyFunSuite {
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-snaptable").toString
+    TestSpark.tempDir("graft-snaptable").toString
 
   private def kv(rows: (Long, String)*): DataFrame = {
     val s = spark
@@ -1208,22 +1208,39 @@ class SnapshotTableSpec extends AnyFunSuite {
     // query formulation — a prune that ever skips a truly-overlapping
     // file breaks this equality. Raw ScalaCheck with fixed seeds, like
     // IncrementalPropertySpec (the scalatest bridge isn't cached).
+    // The handle shape cycles through every combination of deletion
+    // vectors (cap 3: small delete sides vector, bigger ones rewrite),
+    // a 64-bit key bloom, and Int-typed delete keys against the Long
+    // key (the uncollected cast route); each trial then checks an
+    // applyDelta step against anti-join-then-Upsert.merge.
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val s = spark
     import s.implicits._
+    val keysGen = (sizes: Seq[Int]) =>
+      Gen.oneOf(sizes).flatMap(Gen.listOfN(_, Gen.chooseNum(1, 400)))
+        .map(_.distinct.map(_.toLong))
     val layoutGen = for {
       n <- Gen.chooseNum(30, 300) // table keys 1..n
       files <- Gen.chooseNum(2, 12)
       bkeys <- Gen.nonEmptyListOf(Gen.chooseNum(1, 400)) // batch may miss the table
-      dkeys <- Gen.listOf(Gen.chooseNum(1, 400))
+      dkeys <- keysGen(Seq(0, 1, 2, 3, 8, 40))
+      ukeys <- keysGen(Seq(0, 1, 3, 20))
+      xkeys <- keysGen(Seq(0, 1, 2, 3, 30))
       cap <- Gen.oneOf(100000, 3) // exact tier and forced sub-range tier
-    } yield (n, files, bkeys.distinct.map(_.toLong), dkeys.distinct.map(_.toLong), cap)
-    for (trial <- 1 to 6) {
-      val (n, files, bkeys, dkeys, cap) =
+    } yield (n, files, bkeys.distinct.map(_.toLong), dkeys, ukeys, xkeys, cap)
+    for (trial <- 1 to 12) {
+      val (n, files, bkeys, dkeys, ukeys, xkeys, cap) =
         layoutGen.pureApply(Gen.Parameters.default, Seed(42L + trial))
-      val tbl = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(files))
+      val dvMax = if (trial % 2 == 0) 3L else 0L
+      val bloom = if ((trial / 2) % 2 == 1) 64 else 0
+      val intKeys = (trial / 4) % 2 == 1
+      val shape = s"trial $trial (cap=$cap dv=$dvMax bloom=$bloom int=$intKeys)"
+      val tbl = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(files),
+        keyBloomBits = bloom, deleteVectorMaxRows = dvMax)
       tbl.pruneSetCap = cap
+      val keyFrame = (ks: Seq[Long]) =>
+        if (intKeys) ks.map(_.toInt).toDF("k") else ks.toDF("k")
       val existing = (1L to n.toLong).map(i => (i, s"v$i")).toDF("k", "v")
       tbl.create(existing)
       val batch = bkeys.map(k => (k, s"B$k")).toDF("k", "v")
@@ -1232,10 +1249,17 @@ class SnapshotTableSpec extends AnyFunSuite {
       if (dkeys.nonEmpty) {
         val expect = collectSorted(
           tbl.read().join(dkeys.toDF("k"), Seq("k"), "left_anti"))
-        tbl.delete(dkeys.toDF("k"))
+        tbl.delete(keyFrame(dkeys))
         assert(collectSorted(tbl.read()) == expect,
-          s"trial $trial: delete diverged (deleted=$dkeys cap=$cap)")
+          s"$shape: delete diverged (deleted=$dkeys)")
       }
+      val ups = ukeys.map(k => (k, s"U$k")).toDF("k", "v")
+      val expect = collectSorted(Upsert.merge(
+        tbl.read().join(xkeys.toDF("k"), Seq("k"), "left_anti"), ups, Seq("k")))
+      tbl.applyDelta(ups, keyFrame(xkeys))
+      assert(collectSorted(tbl.read()) == expect,
+        s"$shape: applyDelta diverged (upserts=$ukeys deletes=$xkeys)")
+      assert(tbl.countRows() == expect.size, s"$shape: manifest row count drifted")
     }
   }
 
@@ -1501,7 +1525,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val files0 = tbl.filesAt(v0).toSet
     // 1-key delete on a ~100-row file: a deletion vector, not a rewrite
     val v1 = tbl.delete(Seq(7L).toDF("k"))
-    assert(tbl.lastDeleteRewrites == 0, "a 1-key DV delete rewrote data files")
+    assert(tbl.lastRewrites == 0, "a 1-key DV delete rewrote data files")
     assert(tbl.filesAt(v1).toSet == files0, "DV delete changed the data file set")
     assertSameRows(tbl.read(), df.filter(col("k") =!= 7L))
     assert(tbl.countRows() == 399L, "countRows must subtract masked rows")
@@ -1522,14 +1546,14 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(feed == Seq((7L, "delete")), s"DV delete fed $feed")
     // accumulation: another delete on the same file unions its sidecar
     tbl.delete(Seq(8L).toDF("k"))
-    assert(tbl.lastDeleteRewrites == 0)
+    assert(tbl.lastRewrites == 0)
     assert(tbl.countRows() == 397L)
     assertSameRows(tbl.read(), df.filter(!col("k").isin(1L, 7L, 8L)))
     // re-deleting an ALREADY-masked key adds zero to the masked count:
     // the matched pass counts against the file's masked view, or
     // countRows would drift below the rows actually masked
     tbl.delete(Seq(7L, 10L).toDF("k")) // 7 is already masked; only 10 is new
-    assert(tbl.lastDeleteRewrites == 0)
+    assert(tbl.lastRewrites == 0)
     assert(tbl.countRows() == 396L, "re-deleting a masked key double-counted")
     assertSameRows(tbl.read(), df.filter(!col("k").isin(1L, 7L, 8L, 10L)))
     // a merge touching the DV'd file rewrites it MASKED: nothing resurrects
@@ -1548,7 +1572,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val df = (1L to 200L).map(i => (i, s"v$i")).toDF("k", "v")
     tbl.create(df)
     tbl.delete(Seq(5L, 105L).toDF("k"))
-    assert(tbl.lastDeleteRewrites == 0)
+    assert(tbl.lastRewrites == 0)
     // the Catalyst scan applies vectors (clean files pruned relation +
     // masked residue)
     assert(tbl.scan().count() == 198L)
@@ -1657,7 +1681,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       deleteVectorMaxRows = 5L)
     t1.create((1L to 100L).map(i => (i, s"v$i")).toDF("k", "v"))
     t1.delete((1L to 6L).toDF("k"))
-    assert(t1.lastDeleteRewrites > 0, "an over-cap batch must rewrite, not bloat sidecars")
+    assert(t1.lastRewrites > 0, "an over-cap batch must rewrite, not bloat sidecars")
     assertSameRows(t1.read(), (7L to 100L).map(i => (i, s"v$i")).toDF("k", "v"))
     // accumulated cap: per-file masked rows exceed the cap on the THIRD
     // delete → that file rewrites (and its vector clears)
@@ -1666,11 +1690,11 @@ class SnapshotTableSpec extends AnyFunSuite {
       deleteVectorMaxRows = 4L)
     t2.create((1L to 100L).map(i => (i, s"v$i")).toDF("k", "v")) // 2 files of ~50
     t2.delete(Seq(1L, 2L).toDF("k")) // masked 2 ≤ 4: DV
-    assert(t2.lastDeleteRewrites == 0)
+    assert(t2.lastRewrites == 0)
     t2.delete(Seq(3L, 4L).toDF("k")) // masked 4 ≤ 4: DV union
-    assert(t2.lastDeleteRewrites == 0)
+    assert(t2.lastRewrites == 0)
     t2.delete(Seq(5L).toDF("k")) // masked would be 5 > 4: rewrite
-    assert(t2.lastDeleteRewrites == 1)
+    assert(t2.lastRewrites == 1)
     assertSameRows(t2.read(), (6L to 100L).map(i => (i, s"v$i")).toDF("k", "v"))
     // emptied file: every row of one file doomed (under the cap) — the
     // file must DROP, not carry an all-masked vector
@@ -1682,7 +1706,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       .groupBy("f").agg(org.apache.spark.sql.functions.collect_list("k").as("ks"))
       .collect()(0).getSeq[Long](1)
     t3.delete(firstFileKeys.toDF("k"))
-    assert(t3.lastDeleteRewrites == 1, "an emptied file should rewrite (to nothing)")
+    assert(t3.lastRewrites == 1, "an emptied file should rewrite (to nothing)")
     assert(t3.countRows() == 100L - firstFileKeys.size)
     assertSameRows(t3.read(),
       (1L to 100L).filterNot(firstFileKeys.contains).map(i => (i, s"v$i")).toDF("k", "v"))
@@ -1699,8 +1723,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     // the CDC-batch shape: one upsert (touches its carrier file) plus
     // scattered deletes landing in OTHER files
     val v1 = tbl.applyDelta(Seq((5L, "V5")).toDF("k", "v"), Seq(250L, 350L).toDF("k"))
-    assert(tbl.lastDeltaRewrites == 1,
-      s"only the upsert's carrier should rewrite, got ${tbl.lastDeltaRewrites}")
+    assert(tbl.lastRewrites == 1,
+      s"only the upsert's carrier should rewrite, got ${tbl.lastRewrites}")
     assert(tbl.countRows() == 398L)
     assertSameRows(tbl.read().filter(col("k").isin(5L, 250L, 350L)),
       Seq((5L, "V5")).toDF("k", "v"))
@@ -1716,9 +1740,31 @@ class SnapshotTableSpec extends AnyFunSuite {
     // a pure-delete delta on a vectored handle stages NO data files
     val before = tbl.history.last._4
     tbl.applyDelta(df.limit(0), Seq(17L).toDF("k"))
-    assert(tbl.lastDeltaRewrites == 0, "a pure scattered-delete delta must not rewrite")
+    assert(tbl.lastRewrites == 0, "a pure scattered-delete delta must not rewrite")
     assert(tbl.history.last._4 == before, "a pure-DV delta must not add data files")
     assert(tbl.countRows() == 397L)
+  }
+
+  test("no-op keyed writes: delete keys that miss a kept vectored file, or an empty merge, commit nothing") {
+    val s = spark
+    import s.implicits._
+    val tbl = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(1),
+      deleteVectorMaxRows = 5L)
+    val none = Seq.empty[(Long, String)].toDF("k", "v")
+    // keys 1, 3, 5 in one file: key 2 falls inside its range, so the
+    // prune keeps the file, but no row of it is doomed
+    val v0 = tbl.create(Seq(1L, 3L, 5L).map(k => (k, s"v$k")).toDF("k", "v"))
+    val n0 = tbl.history.size
+    assert(tbl.applyDelta(none, Seq(2L).toDF("k")) == v0)
+    assert(tbl.delete(Seq(2L).toDF("k")) == v0)
+    assert(tbl.merge(none) == v0)
+    assert(tbl.currentVersion.contains(v0) && tbl.history.size == n0,
+      s"a keyed write that changed nothing committed: ${tbl.history.map(_._3)}")
+    // a new tag is the only thing such a write records
+    val v1 = tbl.applyDelta(none, Seq(2L).toDF("k"), tag = "cursor-1")
+    assert(tbl.history.map(_._3).last == "tag" && tbl.currentTag.contains("cursor-1"))
+    assert(tbl.merge(none, tag = "cursor-1") == v1)
+    assertSameRows(tbl.read(), Seq(1L, 3L, 5L).map(k => (k, s"v$k")).toDF("k", "v"))
   }
 
   test("format provider batch write: SaveMode semantics, keyed merge option, tag riding") {

@@ -12,7 +12,7 @@ import TestSpark._
 class SourcesSpec extends AnyFunSuite {
 
   test("csv, json, and orc round-trip with explicit schema (no inference)") {
-    val base = Files.createTempDirectory("graft-src").toString
+    val base = TestSpark.tempDir("graft-src").toString
     val df = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "lang", "n_chars")
     df.write.option("header", "true").csv(s"$base/csv")
@@ -28,7 +28,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("jsonl ingest splits good rows from quarantined corrupt lines, losslessly") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+    val dir = TestSpark.tempDir("graft-jsonl").toString
     val lines = Seq(
       """{"doc_id": 1, "text": "hello world"}""",
       """{"doc_id": 2, "text": "ok"}""",
@@ -58,7 +58,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("clustered write yields disjoint per-file key ranges and selective scans skip files") {
-    val base = Files.createTempDirectory("graft-cluster").toString + "/orders"
+    val base = TestSpark.tempDir("graft-cluster").toString + "/orders"
     val orders = Tables.orders(spark, "/root/testdata/sf0.001")
     Sources.clusteredWrite(orders, base, "o_orderdate", numFiles = 8)
 
@@ -91,7 +91,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("z-ordered write localizes BOTH dimensions; 1-D clustering localizes one") {
-    val base = Files.createTempDirectory("graft-zorder").toString
+    val base = TestSpark.tempDir("graft-zorder").toString
     val events = Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("user_id"), col("ts").cast("double").as("tsd"))
 
@@ -127,7 +127,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned sink upsert rewrites only touched partitions") {
-    val base = Files.createTempDirectory("graft-sink").toString + "/summary"
+    val base = TestSpark.tempDir("graft-sink").toString + "/summary"
     val sink = new Sources.PartitionedSink(spark, base, "week_beginning")
     val initial = ops.WeeklySummary.snapshot(
       Tables.rental(spark, "/root/testdata/sf0.001"), SparkEntry.AsOf)
@@ -161,7 +161,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("compaction shrinks file count, preserves rows, and swaps atomically") {
-    val base = Files.createTempDirectory("graft-compact").toString + "/t"
+    val base = TestSpark.tempDir("graft-compact").toString + "/t"
     val df = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "lang", "n_chars")
     df.repartition(20).write.parquet(base) // simulate small-file accretion
@@ -181,7 +181,7 @@ class SourcesSpec extends AnyFunSuite {
   test("partition retention deletes expired years without touching survivors") {
     val orders = Tables.orders(spark, "/root/testdata/sf0.001")
       .select("o_orderkey", "o_orderdate", "o_totalprice")
-    val base2 = Files.createTempDirectory("graft-expire").toString + "/sink"
+    val base2 = TestSpark.tempDir("graft-expire").toString + "/sink"
     val sink2 = new Sources.PartitionedSink(spark, base2, "o_orderkey")
     sink2.upsert(orders, _ => year(col("o_orderdate")))
     val years = spark.read.parquet(base2).select("part_year").distinct()
@@ -245,7 +245,7 @@ class SourcesSpec extends AnyFunSuite {
       } finally writer.close()
     }
 
-    val base = Files.createTempDirectory("graft-events-enc").toString
+    val base = TestSpark.tempDir("graft-events-enc").toString
     val dirs = Seq(
       ("int64_nanos", None, (us: Long) => us * 1000 + 789),
       ("ts_us", Some(LogicalTypeAnnotation.timestampType(false, TimeUnit.MICROS)),
@@ -280,7 +280,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("reading one partition prunes the others (PartitionFilters)") {
-    val base = Files.createTempDirectory("graft-sink2").toString + "/summary"
+    val base = TestSpark.tempDir("graft-sink2").toString + "/summary"
     val sink = new Sources.PartitionedSink(spark, base, "week_beginning")
     sink.upsert(ops.WeeklySummary.snapshot(
       Tables.rental(spark, "/root/testdata/sf0.001"), SparkEntry.AsOf))

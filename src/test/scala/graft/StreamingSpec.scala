@@ -33,7 +33,7 @@ class StreamingSpec extends AnyFunSuite {
   private def writeLog(dir: String): Unit = {
     Files.createDirectories(java.nio.file.Paths.get(dir))
     log.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = Files.createTempDirectory("graft-logseg").toString
+      val tmp = TestSpark.tempDir("graft-logseg").toString
       rentalDf(rows).coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -42,7 +42,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streamed CDC replay converges to the batch snapshot") {
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = TestSpark.tempDir("graft-stream").toString
     val logDir = s"$base/log"; val stateDir = s"$base/state"; val ckpt = s"$base/ckpt"
     writeLog(logDir)
 
@@ -67,7 +67,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("late backdated edit is retracted exactly (no residue weeks)") {
-    val base = Files.createTempDirectory("graft-stream2").toString
+    val base = TestSpark.tempDir("graft-stream2").toString
     val logDir = s"$base/log"; val stateDir = s"$base/state"; val ckpt = s"$base/ckpt"
     writeLog(logDir)
     WeeklySummaryStream.start(spark, logDir, stateDir, ckpt).awaitTermination()
@@ -85,7 +85,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("replayed micro-batch does not double-apply (batch-id dedup)") {
-    val base = Files.createTempDirectory("graft-stream3").toString
+    val base = TestSpark.tempDir("graft-stream3").toString
     val logDir = s"$base/log"; val stateDir = s"$base/state"; val ckpt = s"$base/ckpt"
     writeLog(logDir)
     WeeklySummaryStream.start(spark, logDir, stateDir, ckpt).awaitTermination()

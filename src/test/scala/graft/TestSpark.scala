@@ -8,6 +8,19 @@ import org.apache.spark.sql.functions._
 
 /** One shared local session for all suites (sbt forks one test JVM). */
 object TestSpark {
+  private val scratchTrees = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    scratchTrees.forEach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))))
+
+  /** A fresh directory under the system temp dir for one spec's scratch
+    * tables and outputs; it and everything written under it are deleted
+    * when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    scratchTrees.add(p)
+    p
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -16,7 +29,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+        TestSpark.tempDir("graft-wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

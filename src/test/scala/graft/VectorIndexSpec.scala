@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,7 +30,7 @@ class VectorIndexSpec extends AnyFunSuite {
   }
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-vidx-spec").toString
+    TestSpark.tempDir("graft-vidx-spec").toString
 
   test("probe from the persisted index equals inline annIvf when built over the same corpus") {
     val idx = new VectorIndex(spark, freshDir())
