@@ -434,7 +434,7 @@ private[graft] object SnapshotQueries {
       // on the stream thread, which races the applyDelta below — a slow
       // init would capture v1 and silently drop the interval
       val q = s.readStream
-        .format("org.apache.spark.sql.graft.SnapshotChangeFeedProvider")
+        .format("graft-snapshot")
         .option("path", s"$scratch/store").option("key", "doc_id")
         .option("startingVersion", "0")
         .load()

@@ -4,7 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
@@ -586,19 +585,15 @@ private[graft] final class GraftScan(tbl: SnapshotTable, pinned: Option[Long],
 
   override def readSchema(): StructType = required
 
+  /** Spark calls the relation's no-argument `buildScan()`, so the
+    * pushed filters ride inside the thunk. The relation reports
+    * [[required]] itself: the V1 fallback demands the scan's read
+    * schema exactly, and the catalog declares the key NOT NULL. */
   override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val out = required
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = out
-      override def buildScan(): RDD[Row] = {
-        val filtered = filters.flatMap(GraftFilters.toColumn(_))
-          .foldLeft(tbl.scanAt(pinned))(_ filter _)
-        filtered.select(out.fieldNames.map(col).toIndexedSeq: _*).rdd
-      }
-    }.asInstanceOf[T]
-  }
+      context: SQLContext): T =
+    new GraftMaskedRelation(context.sparkSession, () =>
+      filters.flatMap(GraftFilters.toColumn(_)).foldLeft(tbl.scanAt(pinned))(_ filter _)
+        .select(required.fieldNames.map(col).toIndexedSeq: _*))(required).asInstanceOf[T]
 
   override def description(): String =
     s"graft-snapshot ${pinned.fold("")(v => s"@v$v ")}pushed=[${pushedRender}]"

@@ -33,14 +33,15 @@ import org.apache.spark.sql.types.StructType
   *
   * `inner` is a THUNK pinned to one resolved manifest by the caller —
   * the relation re-derives its plan per `buildScan`, but always over
-  * the same immutable snapshot. */
+  * the same immutable snapshot. `schema` defaults to the thunk's own;
+  * the catalog's V1 scan passes its read schema instead, which Spark
+  * requires verbatim (nullability included). */
 private[graft] final class GraftMaskedRelation(
-    spark: SparkSession, inner: () => DataFrame)
+    spark: SparkSession, inner: () => DataFrame)(
+    override val schema: StructType = inner().schema)
     extends BaseRelation with PrunedFilteredScan with TableScan {
 
   override def sqlContext: SQLContext = spark.sqlContext
-
-  override val schema: StructType = inner().schema
 
   override def buildScan(): RDD[Row] = buildScan(schema.fieldNames, Array.empty)
 

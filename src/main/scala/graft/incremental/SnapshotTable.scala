@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
   * operation, key column, schema JSON), one entry per data file
   * (relative path, row count, key kind, encoded key min/max, key null
   * count, file byte length — the writer records the length at stage
-  * time so [[scan]] and [[optimize]] never getFileStatus per file —
+  * time so no read and no [[optimize]] ever getFileStatus per file —
   * plus one `s` line per tracked SECONDARY stats column: path,
   * column, kind, encoded min/max, null count, feeding [[readWhere]] /
   * [[countWhere]] data skipping and [[scan]] null-predicate
@@ -619,11 +619,9 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
 
   // ---- snapshot reads ----
 
-  /** The latest committed snapshot. */
-  def read(): DataFrame = {
-    val m = requireManifest
-    readEntries(m, m.entries)
-  }
+  /** The latest committed snapshot — the same plan as [[scan]], so a
+    * pushed filter on `read()` prunes manifest files too. */
+  def read(): DataFrame = scanAt(None)
 
   /** The current snapshot's schema — one manifest resolve, zero data
     * files opened (the manifest header carries the schema JSON; callers
@@ -658,11 +656,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * are immutable and commits never delete, so any committed version
     * stays readable (and an in-flight reader of v is unaffected by
     * later commits). */
-  def readVersion(v: Long): DataFrame = {
-    val m = loadManifest(v).getOrElse(
-      throw new IllegalStateException(s"no committed version $v at $dir"))
-    readEntries(m, m.entries)
-  }
+  def readVersion(v: Long): DataFrame = scanAt(Some(v))
 
   /** Key-range read with MANIFEST-level file pruning: only data files
     * whose key [min,max] range can intersect [lo, hi] are handed to
@@ -1090,37 +1084,26 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * re-evaluates every filter on the rows regardless, so pruning can
     * never change results. The returned frame is pinned to the CURRENT
     * snapshot (immutable files + one manifest read), like every other
-    * read. */
+    * read, and is the same plan as [[read]]: both go through
+    * [[readEntries]], where deletion-vectored files read through their
+    * sidecar anti-join beside the clean ones (pushed filters prune
+    * both). */
   def scan(): DataFrame = scanAt(None)
 
   /** [[scan]] pinned to a committed historical version — the DataFrame
     * twin of the format provider's `versionAsOf` option, deletion
     * vectors applied at every version. */
-  def scanAt(version: Option[Long]): DataFrame = scanOf(manifestAt(version))
+  def scanAt(version: Option[Long]): DataFrame = {
+    val m = manifestAt(version)
+    readEntries(m, m.entries)
+  }
 
   private def manifestAt(version: Option[Long]): Manifest =
     version.fold(requireManifest)(v => loadManifest(v).getOrElse(
       throw new IllegalStateException(s"no committed version $v at $dir")))
 
-  private def scanOf(m: Manifest): DataFrame = {
-    val (dvd, clean) = m.entries.partition(_.dv.isDefined)
-    // the file relation plans over PHYSICAL names (what parquet holds);
-    // a mapped snapshot aliases back to logical on top — Catalyst
-    // rewrites pushed predicates through the aliases, so manifest
-    // pruning and row-group pushdown see physical names consistently
-    val raw = spark.baseRelationToDataFrame(relationOf(m, clean))
-    val base =
-      if (m.colmap.isEmpty) raw else raw.toDF(m.schema.fieldNames.toIndexedSeq: _*)
-    if (dvd.isEmpty) base
-    // the merge-on-read residue rides beside the pruned relation as a
-    // masked plain read — unpruned, but bounded by the DV'd file count
-    // and cleared at the next optimize()
-    else base.unionByName(readEntries(m, dvd))
-  }
-
   /** The [[scan]] snapshot as a bare `BaseRelation` — what the BATCH
-    * half of the format provider
-    * (`spark.read.format("graft-snapshot")`, see
+    * half of the format provider (`format("graft-snapshot")`, see
     * [[org.apache.spark.sql.graft.SnapshotTableProvider]]) hands to
     * Spark's DataSource resolution, giving SQL-only users the same
     * manifest-pruned relation without writing a line of Scala.
@@ -1148,34 +1131,42 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     // snapshot needs its logical aliases — neither fits one bare
     // file-backed node, so both take the masked-relation fallback
     if (m.entries.exists(_.dv.isDefined) || m.colmap.nonEmpty)
-      new GraftMaskedRelation(spark, () => scanOf(m))
-    else relationOf(m, m.entries)
+      new GraftMaskedRelation(spark, () => readEntries(m, m.entries))()
+    else relationOf(m, m.schema, m.entries)
   }
 
-  private def relationOf(m: Manifest,
+  /** THE scan planner for manifest entries: a parquet relation over a
+    * [[GraftFileIndex]] of [[statusOf]] FileStatuses — no listing job,
+    * whatever the file count. It plans the PHYSICAL twin of `schema`
+    * (so pushed filters speak the prover's names; a column the files
+    * predate reads null), all nullable as in any parquet read: a
+    * legacy file may hold null keys the schema promises away. */
+  private def relationOf(m: Manifest, schema: StructType,
       entries: Seq[Entry]): org.apache.spark.sql.sources.BaseRelation = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val files = entries.map(e => e -> statusOf(e))
-    // the plan is over the PHYSICAL schema, so the pushed filters name
-    // physical columns — the prover's own vocabulary
-    val index = new GraftFileIndex(new Path(dir), files.map(_._2),
-      filters => files.collect { case (e, st) if !filters.exists(disjoint(_, m, e)) => st })
-    lastScanIndex = index
-    lastScanStatted = entries.count(_.bytes.isEmpty)
-    HadoopFsRelation(index, StructType(Nil), m.physSchema, None,
+    val index = new GraftFileIndex(new Path(dir), files.map(_._2), { filters =>
+      val kept = files.collect { case (e, st) if !filters.exists(disjoint(_, m, e)) => st }
+      lastListedFiles = kept.size
+      kept
+    })
+    HadoopFsRelation(index, StructType(Nil),
+      org.apache.spark.sql.graft.GraftSqlShim.asNullable(m.physSchemaOf(schema)), None,
       new ParquetFileFormat(), Map.empty[String, String])(spark)
   }
 
   /** An entry's FileStatus from its manifest-recorded byte length —
     * driver arithmetic, no RPC (mtime is unused: the parquet read plans
     * off length + path only). Entries from pre-length manifests degrade
-    * to one getFileStatus each. */
+    * to one getFileStatus each, counted in [[statusLookups]]. */
   private def statusOf(e: Entry): org.apache.hadoop.fs.FileStatus = e.bytes match {
     case Some(len) =>
       new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L,
         fs.makeQualified(new Path(s"$dir/${e.path}")))
-    case None => fs.getFileStatus(new Path(s"$dir/${e.path}"))
+    case None =>
+      statusLookups += 1
+      fs.getFileStatus(new Path(s"$dir/${e.path}"))
   }
 
   /** Everything the NATIVE DSv2 columnar batch scan needs, or None when
@@ -1408,26 +1399,27 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     }
   }
 
-  /** The index behind the most recent [[scan]] — spec seam for
-    * asserting how many files the planner's pushed filters kept. */
-  private[graft] var lastScanIndex: GraftFileIndex = null
+  /** Files the planner's pushed filters kept on the most recent
+    * `listFiles` of any index this handle built — whichever read
+    * planned last (a [[scan]], a [[read]], or a write's internal read);
+    * the pruning spec seam. -1 until a read plans. */
+  @volatile private[graft] var lastListedFiles: Int = -1
 
-  /** Entries the most recent [[scan]] had to getFileStatus because
-    * their manifest predates byte-length tracking — spec seam: 0 on a
-    * freshly written table. -1 until scan() runs. */
-  private[graft] var lastScanStatted: Int = -1
-
-  /** Entries the most recent [[optimize]] had to getFileStatus — same
-    * seam as [[lastScanStatted]]. -1 until optimize() runs. */
-  private[graft] var lastOptimizeStatted: Int = -1
+  /** Entries this handle had to getFileStatus because their manifest
+    * predates byte-length tracking — spec seam: stays 0 on a freshly
+    * written table whatever reads, writes or optimizes. Cumulative;
+    * specs delta it. */
+  private[graft] var statusLookups: Long = 0L
 
   /** Entries as their LOGICAL rows: files carrying a deletion vector
     * read through an anti-join against their sidecar's keys (grouped by
     * sidecar — co-committed files share one, and a doomed key is doomed
     * table-wide, so applying the shared sidecar to every member file is
-    * exact). DV-free entries read directly. Every reader, the change
-    * feed's sides, and every copy-on-write survivor computation come
-    * through here, so merge-on-read correctness is one code path. */
+    * exact). DV-free entries read directly. Every reader ([[read]] and
+    * [[scan]] included), the change feed's sides, and every
+    * copy-on-write survivor computation come through here, so
+    * merge-on-read correctness is one code path, and every file set is
+    * planned by [[relationOf]]. */
   private def readEntries(m: Manifest, schema: StructType,
       entries: Seq[Entry]): DataFrame = {
     val (dvd, clean) = entries.partition(_.dv.isDefined)
@@ -1444,23 +1436,24 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
   private def readEntries(m: Manifest, entries: Seq[Entry]): DataFrame =
     readEntries(m, m.schema, entries)
 
-  /** Entries as their PHYSICAL rows — deletion vectors NOT applied.
-    * Only for paths that must see raw files: per-file stats collection
-    * (grouping by input_file_name, which a join would break — and which
-    * excludes DV'd files anyway) and the DV delete's own matched-count
-    * pass. */
+  /** Entries as their PHYSICAL rows — deletion vectors NOT applied —
+    * through the manifest-planned [[relationOf]]. Callers outside
+    * [[readEntries]] are the paths that must see raw files: per-file
+    * stats collection (grouping by input_file_name, which a join would
+    * break — and which excludes DV'd files anyway) and the DV delete's
+    * own matched-count pass. */
   private def readEntriesRaw(m: Manifest, schema: StructType,
       entries: Seq[Entry]): DataFrame =
     if (entries.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else {
-      // files store PHYSICAL names (stable across renames): read with
-      // the physical twin of the requested schema, then alias back to
-      // the logical names — a zero-cost projection when unmapped
-      val phys = m.physSchemaOf(schema)
-      val raw = spark.read.schema(phys).parquet(entries.map(e => s"$dir/${e.path}"): _*)
-      if (phys eq schema) raw else raw.toDF(schema.fieldNames.toIndexedSeq: _*)
+      // files store PHYSICAL names (stable across renames): the relation
+      // plans the physical twin of the requested schema; alias back to
+      // the logical names — Catalyst rewrites pushed predicates through
+      // the aliases, so pruning and row-group pushdown see physical names
+      val raw = spark.baseRelationToDataFrame(relationOf(m, schema, entries))
+      if (m.colmap.isEmpty) raw else raw.toDF(schema.fieldNames.toIndexedSeq: _*)
     }
 
   // ---- key stats: canonical encode / ordered compare ----
@@ -1520,10 +1513,11 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     case _ => false
   }
 
-  /** [[keyPruner]] tier thresholds — `private[graft] var` so a spec can
-    * force the sub-range tier without a 100k-key batch. */
+  /** [[keyPruner]] tier thresholds — the set cap is a `private[graft]
+    * var` so a spec can force the sub-range tier without a 100k-key
+    * batch. */
   private[graft] var pruneSetCap: Long = 100000L
-  private[graft] var pruneRangeBuckets: Int = 64
+  private val pruneRangeBuckets = 64
 
   /** Per-file overlap test against the source batch's KEY SET — the
     * prune [[keyedWrite]]'s uncollected route partitions entries with
@@ -1776,7 +1770,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     toWrite.write.mode("error").parquet(out.toString)
     // byte lengths ride the manifest `f` line: ONE listing of the fresh
     // commit dir (the writer is the one party that knows its files),
-    // so scan() builds FileStatus and optimize() partitions small files
+    // so every read builds FileStatus and optimize() partitions small files
     // from driver arithmetic — never a per-file getFileStatus RPC
     val lenByName: Map[String, Long] =
       fs.listStatus(out).map(s => s.getPath.getName -> s.getLen).toMap
@@ -2463,7 +2457,6 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     // applies the vectors; the restaged files carry none)
     val (small, big) = m.entries.partition(e =>
       e.dv.isDefined || statusOf(e).getLen < smallBytes)
-    lastOptimizeStatted = m.entries.count(e => e.dv.isEmpty && e.bytes.isEmpty)
     if (small.size <= 1 && !small.exists(_.dv.isDefined)) return m.version
     commit(m.version, "optimize", m.schema,
       big ++ stage(clustered(readEntries(m, small)), m.colmap),
@@ -2842,7 +2835,9 @@ object SnapshotTable {
 }
 
 /** The manifest-backed [[org.apache.spark.sql.execution.datasources.FileIndex]]
-  * behind [[SnapshotTable.scan]]: Spark's planner hands `listFiles` the
+  * behind every `SnapshotTable` read ([[SnapshotTable.scan]],
+  * [[SnapshotTable.read]], the ranged and keyed readers, the change
+  * feed's sides, a write's survivor pass): Spark's planner hands `listFiles` the
   * data filters it pushed toward the scan; they translate to
   * `sources.Filter`s exactly as Spark translates pushdown for any data
   * source, and `keep` — the table's one pruning proof
@@ -2850,9 +2845,15 @@ object SnapshotTable {
   * readRange and readWhere use) — returns the files no filter rules
   * out. An untranslatable filter proves nothing (conservative keep),
   * and Spark still evaluates every filter on the rows, so pruning is a
-  * pure optimization. */
+  * pure optimization.
+  *
+  * Equal by (root, set of file paths) — the rule Spark's own
+  * `InMemoryFileIndex` uses — so two reads of the same files plan
+  * `sameResult`: a persisted read serves the next one from the cache,
+  * and exchange reuse sees through separate reads. The files are
+  * immutable, so the same paths always hold the same rows. */
 private[graft] final class GraftFileIndex(
-    root: org.apache.hadoop.fs.Path,
+    private val root: org.apache.hadoop.fs.Path,
     files: Seq[org.apache.hadoop.fs.FileStatus],
     keep: Seq[org.apache.spark.sql.sources.Filter] => Seq[org.apache.hadoop.fs.FileStatus])
   extends org.apache.spark.sql.execution.datasources.FileIndex {
@@ -2860,10 +2861,6 @@ private[graft] final class GraftFileIndex(
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.Expression
   import org.apache.spark.sql.execution.datasources.PartitionDirectory
-
-  /** Files the planner's filters kept on the most recent `listFiles` —
-    * the spec's pruning assertion. -1 until a scan plans. */
-  @volatile private[graft] var lastListedFiles: Int = -1
 
   /** TWO paths on purpose: Spark's v1 `INSERT INTO` path
     * (InsertIntoHadoopFsRelationCommand) would otherwise write parquet
@@ -2886,7 +2883,14 @@ private[graft] final class GraftFileIndex(
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val kept = keep(dataFilters.flatMap(org.apache.spark.sql.graft.GraftSqlShim.translateFilter))
-    lastListedFiles = kept.size
     Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
   }
+
+  private lazy val paths: Set[org.apache.hadoop.fs.Path] = files.map(_.getPath).toSet
+
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftFileIndex => root == o.root && paths == o.paths
+    case _ => false
+  }
+  override def hashCode(): Int = (root, paths).hashCode()
 }

@@ -38,7 +38,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     files while the query resolves LOGICAL names. Batch rows are
   *     positional, so serving the physical-schema scan under a logical
   *     [[readSchema]] is a pure relabeling — the same trick
-  *     `SnapshotTable.scanOf`'s `toDF` does on the v1 route.
+  *     `SnapshotTable.readEntriesRaw`'s `toDF` does on the v1 route.
   *   - RUNTIME FILTERING ([[SupportsRuntimeV2Filtering]]): the scan
   *     advertises the key and stats-covered columns, so Spark's
   *     dynamic-pruning rule injects the selective side of a join as an

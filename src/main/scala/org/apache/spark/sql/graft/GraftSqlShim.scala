@@ -96,6 +96,11 @@ object GraftSqlShim {
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
+  /** Every field nullable, nested ones too — the schema Spark's own
+    * file-source resolution plans a parquet read over (`private[spark]`). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** A pushed Catalyst data filter as the `sources.Filter` Spark hands
     * any v1 data source — `DataSourceStrategy.translateFilter` is
     * `protected[sql]`. Top-level columns only; None when the shape has

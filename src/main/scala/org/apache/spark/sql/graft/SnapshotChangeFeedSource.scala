@@ -186,20 +186,6 @@ final class SnapshotTableProvider extends StreamSourceProvider with StreamSinkPr
       SnapshotChangeFeedSource.normalize(parameters))
 }
 
-/** Source-only alias kept for call sites that predate the sink half —
-  * same options, same semantics as reading through
-  * [[SnapshotTableProvider]]. */
-final class SnapshotChangeFeedProvider extends StreamSourceProvider {
-  private val delegate = new SnapshotTableProvider
-  override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
-      providerName: String, parameters: Map[String, String]): (String, StructType) =
-    delegate.sourceSchema(sqlContext, schema, providerName, parameters)
-  override def createSource(sqlContext: SQLContext, metadataPath: String,
-      schema: Option[StructType], providerName: String,
-      parameters: Map[String, String]): Source =
-    delegate.createSource(sqlContext, metadataPath, schema, providerName, parameters)
-}
-
 /** The write half of [[SnapshotTableProvider]] — see its Sink section.
   * Batch-id tags make replays no-ops; every application path is one
   * atomic SnapshotTable commit. */

@@ -17,7 +17,6 @@ import TestSpark._
 class SnapshotStreamSourceSpec extends AnyFunSuite {
 
   private val provider = "org.apache.spark.sql.graft.SnapshotTableProvider"
-  private val legacyProvider = "org.apache.spark.sql.graft.SnapshotChangeFeedProvider"
 
   private def freshDir(): String =
     TestSpark.tempDir("graft-feedsrc").toString
@@ -37,8 +36,8 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
     val dir = freshDir()
     val tbl = new SnapshotTable(spark, dir, "k")
     tbl.create(kv(1L -> "a", 2L -> "b", 3L -> "c")) // v0 — before the stream: not delivered
-    // read through the source-only legacy alias: same semantics
-    val q = spark.readStream.format(legacyProvider)
+    // read through the registered short name: same provider
+    val q = spark.readStream.format("graft-snapshot")
       .option("path", dir).option("key", "k")
       .option("maxVersionsPerBatch", "1") // one commit per micro-batch
       .load()

@@ -22,6 +22,25 @@ class SnapshotTableSpec extends AnyFunSuite {
   private def freshDir(): String =
     TestSpark.tempDir("graft-snaptable").toString
 
+  /** Files the manifest index handed `df`'s parquet scan: collects once,
+    * then reads the scan node's `numFiles` metric — for reads planned
+    * through a handle the spec does not hold (SQL views, the format
+    * provider), whose `lastListedFiles` it cannot see. */
+  private def listedFiles(df: DataFrame): Long = {
+    val rel = df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.relation
+    }
+    assert(rel.exists {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        h.location.isInstanceOf[graft.incremental.GraftFileIndex]
+      case _ => false
+    }, s"not a manifest-indexed read: $rel")
+    df.collect()
+    df.queryExecution.executedPlan.collectFirst {
+      case sc: org.apache.spark.sql.execution.FileSourceScanExec => sc.metrics("numFiles").value
+    }.get
+  }
+
   private def kv(rows: (Long, String)*): DataFrame = {
     val s = spark
     import s.implicits._
@@ -736,25 +755,24 @@ class SnapshotTableSpec extends AnyFunSuite {
     val nFiles = tbl.read().inputFiles.length
     assert(nFiles >= 4)
     // no predicate: every file listed
-    val q0 = tbl.scan(); val i0 = tbl.lastScanIndex
-    assert(q0.count() == 400 && i0.lastListedFiles == nFiles)
+    val q0 = tbl.scan()
+    assert(q0.count() == 400 && tbl.lastListedFiles == nFiles)
     // a KEY predicate in ordinary query syntax — no readRange call
-    val q1 = tbl.scan().filter(col("k") >= 390L); val i1 = tbl.lastScanIndex
+    val q1 = tbl.scan().filter(col("k") >= 390L)
     assert(q1.count() == 11)
-    assert(i1.lastListedFiles <= 2, s"key pushdown kept ${i1.lastListedFiles} of $nFiles")
+    assert(tbl.lastListedFiles <= 2, s"key pushdown kept ${tbl.lastListedFiles} of $nFiles")
     // a SECONDARY-column predicate — no readWhere call
     val q2 = tbl.scan().filter(col("score") >= 100L && col("score") <= 140L)
-    val i2 = tbl.lastScanIndex
     assertSameRows(q2, (50L to 70L).map(i => (i, s"v$i", i * 2)).toDF("k", "v", "score"))
-    assert(i2.lastListedFiles <= 2, s"stats pushdown kept ${i2.lastListedFiles} of $nFiles")
+    assert(tbl.lastListedFiles <= 2, s"stats pushdown kept ${tbl.lastListedFiles} of $nFiles")
     // IN-lists prune as scattered points (two extremes -> two files)
-    val q3 = tbl.scan().filter(col("k").isin(5L, 395L)); val i3 = tbl.lastScanIndex
+    val q3 = tbl.scan().filter(col("k").isin(5L, 395L))
     assert(q3.count() == 2)
-    assert(i3.lastListedFiles <= 2, s"IN pushdown kept ${i3.lastListedFiles}")
+    assert(tbl.lastListedFiles <= 2, s"IN pushdown kept ${tbl.lastListedFiles}")
     // a predicate on an untracked column proves nothing: conservative
     // full listing, still-exact result (Spark evaluates all filters)
-    val q4 = tbl.scan().filter(col("v") === "v7"); val i4 = tbl.lastScanIndex
-    assert(q4.count() == 1 && i4.lastListedFiles == nFiles)
+    val q4 = tbl.scan().filter(col("v") === "v7")
+    assert(q4.count() == 1 && tbl.lastListedFiles == nFiles)
     // equivalence with the plain read under arbitrary predicates
     assertSameRows(tbl.scan().filter(col("score") < 50L || col("k") === 399L),
       tbl.read().filter(col("score") < 50L || col("k") === 399L))
@@ -848,20 +866,29 @@ class SnapshotTableSpec extends AnyFunSuite {
       ("20-key IN", col("k").isin(twenty: _*), None),
       ("startsWith", col("src").startsWith("s09"), None),
       ("sub-ms timestamp", col("ts") >= lit(tsBound), Some(tbl.readWhere("ts", Some(tsBound), None))))
+    // the full table, read by path: the expected rows come from no
+    // route under test
+    val all = spark.read.schema(tbl.schema).parquet(tbl.read().inputFiles: _*)
     cases.foreach { case (name, p, reader) =>
-      val expected = tbl.read().filter(p)
+      val expected = all.filter(p)
       assert(expected.count() > 0, s"$name: the predicate should match rows")
-      val v1 = tbl.scan().filter(p); val index = tbl.lastScanIndex
-      assertSameRows(v1, expected)
+      val v1 = tbl.scan().filter(p)
+      val scanned = collectSorted(v1); val listed = tbl.lastListedFiles
+      assert(scanned == collectSorted(expected), s"$name: scan() rows differ")
+      val read = tbl.read().filter(p)
+      val readRows = collectSorted(read)
+      assert(tbl.lastListedFiles == listed,
+        s"$name: read() listed ${tbl.lastListedFiles}, scan() $listed")
+      assert(readRows == scanned, s"$name: read() rows differ")
       val parts = tbl.batchScanParts(None, pushed(p)).get
-      assert(tbl.lastBatchKept == index.lastListedFiles,
-        s"$name: columnar kept ${tbl.lastBatchKept}, scan() listed ${index.lastListedFiles}")
-      assert(index.lastListedFiles < nFiles, s"$name: nothing pruned of $nFiles files")
+      assert(tbl.lastBatchKept == listed,
+        s"$name: columnar kept ${tbl.lastBatchKept}, scan() listed $listed")
+      assert(listed < nFiles, s"$name: nothing pruned of $nFiles files")
       assertSameRows(spark.read.schema(tbl.schema)
         .parquet(parts.files.map(_.getPath.toString): _*).filter(p), expected)
       reader.foreach { df =>
-        assert(df.inputFiles.length == index.lastListedFiles,
-          s"$name: dedicated reader opened ${df.inputFiles.length}, scan() ${index.lastListedFiles}")
+        assert(df.inputFiles.length == listed,
+          s"$name: dedicated reader opened ${df.inputFiles.length}, scan() $listed")
         assertSameRows(df, expected)
       }
     }
@@ -881,21 +908,21 @@ class SnapshotTableSpec extends AnyFunSuite {
     val nFiles = tbl.read().inputFiles.length
     assert(nFiles >= 4)
     // IsNull keeps only files that HAVE nulls (the low end)
-    val q1 = tbl.scan().filter(col("score").isNull); val i1 = tbl.lastScanIndex
+    val q1 = tbl.scan().filter(col("score").isNull)
     assert(q1.count() == 80)
-    assert(i1.lastListedFiles <= 4, s"isNull kept ${i1.lastListedFiles} of $nFiles")
+    assert(tbl.lastListedFiles <= 4, s"isNull kept ${tbl.lastListedFiles} of $nFiles")
     // IsNotNull prunes the ALL-null files
-    val q2 = tbl.scan().filter(col("score").isNotNull); val i2 = tbl.lastScanIndex
+    val q2 = tbl.scan().filter(col("score").isNotNull)
     assert(q2.count() == 320)
-    assert(i2.lastListedFiles <= nFiles - 1, s"isNotNull kept ${i2.lastListedFiles}")
+    assert(tbl.lastListedFiles <= nFiles - 1, s"isNotNull kept ${tbl.lastListedFiles}")
     // null-safe equality prunes like EqualTo on the value side
-    val q3 = tbl.scan().filter(col("score") <=> 400L); val i3 = tbl.lastScanIndex
+    val q3 = tbl.scan().filter(col("score") <=> 400L)
     assert(q3.count() == 1)
-    assert(i3.lastListedFiles <= 2, s"eqNullSafe kept ${i3.lastListedFiles}")
+    assert(tbl.lastListedFiles <= 2, s"eqNullSafe kept ${tbl.lastListedFiles}")
     // a string PREFIX predicate prunes off the encoded byte bounds
-    val q4 = tbl.scan().filter(col("src").startsWith("s09")); val i4 = tbl.lastScanIndex
+    val q4 = tbl.scan().filter(col("src").startsWith("s09"))
     assert(q4.count() == 40)
-    assert(i4.lastListedFiles <= 3, s"startsWith kept ${i4.lastListedFiles} of $nFiles")
+    assert(tbl.lastListedFiles <= 3, s"startsWith kept ${tbl.lastListedFiles} of $nFiles")
     // equivalence with the plain read on every shape above
     for (p <- Seq(col("score").isNull, col("score").isNotNull,
         col("score") <=> 400L, col("src").startsWith("s09")))
@@ -1487,11 +1514,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     tbl.create((1L to 200L).map(i => (i, s"v$i")).toDF("k", "v"))
     val nFiles = tbl.read().inputFiles.length
     assert(tbl.scan().count() == 200L)
-    assert(tbl.lastScanStatted == 0,
-      s"scan stat'd ${tbl.lastScanStatted} files despite manifest-recorded lengths")
+    assert(tbl.read().count() == 200L)
+    // a merge reaching every file: its survivor read plans them all
+    tbl.merge((1L to 200L by 10L).map(i => (i, s"w$i")).toDF("k", "v"))
+    assert(tbl.lastRewrites == nFiles)
     tbl.optimize(smallBytes = 1L) // no file is under 1 byte: a pure partition pass
-    assert(tbl.lastOptimizeStatted == 0,
-      s"optimize stat'd ${tbl.lastOptimizeStatted} files despite manifest-recorded lengths")
+    assert(tbl.statusLookups == 0,
+      s"stat'd ${tbl.statusLookups} files despite manifest-recorded lengths")
     // and the recorded lengths agree with the filesystem (scan plans
     // splits off them, so a wrong length would truncate or over-read)
     val fsys = new org.apache.hadoop.fs.Path(dir)
@@ -1510,8 +1539,84 @@ class SnapshotTableSpec extends AnyFunSuite {
     Files.writeString(mf.toPath, doctored)
     new java.io.File(mf.getParentFile, s".${mf.getName}.crc").delete()
     val legacy = new SnapshotTable(spark, dir, "k")
+    val before = legacy.statusLookups
     assert(legacy.scan().count() == 200L)
-    assert(legacy.lastScanStatted == nFiles, "legacy entries should stat once each")
+    assert(legacy.statusLookups - before == doctored.linesIterator.count(_.startsWith("f\t")),
+      "legacy entries should stat once each")
+  }
+
+  /** Descriptions of the Spark jobs `body` starts, seen by a listener
+    * filtering on a job group of its own. A marker job closes the
+    * group: the listener bus delivers in order, so once the marker is
+    * seen every earlier job start has been. */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(Option(p.getProperty("spark.job.description")).getOrElse("")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try {
+        body
+        sc.setJobDescription(marker)
+        sc.parallelize(Seq(1), 1).count()
+      } finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(marker), "listener never saw the marker job")
+    } finally sc.removeSparkListener(listener)
+    seen.toArray(Array.empty[String]).toSeq.filterNot(_ == marker)
+  }
+
+  test("manifest-planned reads: no read or keyed write over more than 32 files runs a file-listing job") {
+    val s = spark
+    import s.implicits._
+    val tbl = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(40))
+    tbl.create((1L to 4000L).map(i => (i, s"v$i")).toDF("k", "v"))
+    val nFiles = tbl.read().inputFiles.length
+    // past Spark's parallel-listing threshold (32 paths): a by-path read
+    // of these files would list them in a Spark job
+    assert(nFiles > 32, s"only $nFiles live files")
+    val upserts = (1L to 4000L by 50L).map(i => (i, s"w$i")).toDF("k", "v")
+    val doomed = (26L to 4000L by 50L).map(Tuple1(_)).toDF("k")
+    val jobs = jobDescriptions {
+      assert(tbl.read().count() == 4000L)
+      assert(tbl.readWhere("k", Some(1L), Some(4000L)).count() == 4000L)
+      assert(tbl.readKeys(upserts.select("k")).count() == 80L)
+      tbl.merge(upserts)
+      assert(tbl.lastRewrites > 32, s"merge rewrote ${tbl.lastRewrites} files")
+      tbl.delete(doomed)
+      assert(tbl.lastRewrites > 32, s"delete rewrote ${tbl.lastRewrites} files")
+    }
+    assert(jobs.nonEmpty, "the job group saw no jobs")
+    val listings = jobs.filter(_.startsWith("Listing leaf files"))
+    assert(listings.isEmpty, s"${listings.size} listing jobs: ${listings.mkString("; ")}")
+    assert(tbl.countRows() == 3920L)
+    assert(tbl.readKeys(upserts.select("k")).filter(col("v").startsWith("w")).count() == 80L)
+  }
+
+  test("a persisted read() serves the next read() of the same snapshot from the cache") {
+    val s = spark
+    import s.implicits._
+    val tbl = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(4))
+    tbl.create((1L to 200L).map(i => (i, s"v$i")).toDF("k", "v"))
+    val first = tbl.read().persist()
+    try {
+      assert(first.count() == 200L)
+      val again = tbl.read()
+      val cached = again.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(cached.nonEmpty, s"second read() planned without the cache:\n${again.queryExecution.withCachedData}")
+      assertSameRows(again, first)
+    } finally first.unpersist(blocking = true)
   }
 
   test("deletion vectors: a sparse forget rewrites ZERO files; reads, counts, bounds, and the feed stay exact") {
@@ -1824,13 +1929,8 @@ class SnapshotTableSpec extends AnyFunSuite {
       // and the predicate still file-skips through the manifest index
       val pruned = spark.sql("SELECT * FROM graft_sql_v WHERE k >= 390")
       assert(pruned.count() == 11)
-      val index = pruned.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.asInstanceOf[graft.incremental.GraftFileIndex]
-      }.head
-      assert(index.lastListedFiles <= 2,
-        s"SQL view read kept ${index.lastListedFiles} of $nFiles files for a tail range")
+      val listed = listedFiles(pruned)
+      assert(listed <= 2, s"SQL view read kept $listed of $nFiles files for a tail range")
     } finally spark.catalog.dropTempView("graft_sql_v")
   }
 
@@ -1900,13 +2000,8 @@ class SnapshotTableSpec extends AnyFunSuite {
       .option("path", dir).option("key", "k").load()
       .filter(col("k") >= 390L)
     assert(filtered.count() == 11)
-    val index = filtered.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.asInstanceOf[graft.incremental.GraftFileIndex]
-    }.head
-    assert(index.lastListedFiles <= 2,
-      s"format read kept ${index.lastListedFiles} of $nFiles files for a tail range")
+    val listed = listedFiles(filtered)
+    assert(listed <= 2, s"format read kept $listed of $nFiles files for a tail range")
     // plan hygiene: the format read is Spark's own parquet scan — the
     // key predicate reaches the scan as a pushed filter and the stages
     // run under whole-stage codegen (the `*(n)` markers)

@@ -70,7 +70,7 @@ class VectorIndexSpec extends AnyFunSuite {
     idx.build(fixture)
     val total = idx.cellsTbl.read().inputFiles.length
     idx.probe(fixture.filter(col("vec_id") === 0L), k = 3, nprobe = 1).collect()
-    val kept = idx.cellsTbl.lastScanIndex.lastListedFiles
+    val kept = idx.cellsTbl.lastListedFiles
     assert(kept >= 1 && kept < total,
       s"nprobe=1 over $total cell files should open a strict subset, opened $kept")
   }
