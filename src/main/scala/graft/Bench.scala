@@ -225,7 +225,7 @@ object Bench {
         val corStore = new graft.incremental.SnapshotTable(spark, s"$corDir/corpus", "doc_id")
         val mirStore = new graft.incremental.SnapshotTable(spark, s"$mirDir/corpus", "doc_id")
         opExec("corpus_mirror_cold")(
-          graft.incremental.SnapshotSync.sync(corStore, mirStore, "doc_id"))
+          graft.incremental.SnapshotSync.sync(corStore, mirStore))
         // warm sync ACROSS a compaction: stage a 5-doc merge + full
         // optimize on the source (untimed), then time the sync — the
         // op-aware feed applies only the merge's churn; the compacted
@@ -237,7 +237,7 @@ object Bench {
           corStore.optimize(smallBytes = Long.MaxValue)
         }
         opExec("corpus_mirror_warm")(
-          graft.incremental.SnapshotSync.sync(corStore, mirStore, "doc_id"))
+          graft.incremental.SnapshotSync.sync(corStore, mirStore))
         // right-to-be-forgotten over the corpus this rep just published:
         // keyed DELETE (file-pruned COW) + retire + vacuum + re-export —
         // the erasure path a corpus store owes its sources, measured
@@ -260,12 +260,12 @@ object Bench {
         // on every feed consumer (the forgotten docs leave the mirror
         // too); feed-path application cost is spec-pinned at unit grain
         opExec("corpus_mirror_refresh")(
-          graft.incremental.SnapshotSync.sync(corStore, mirStore, "doc_id"))
-        // streaming mirror cadence: manifest-file wake-ups drive one
-        // op-aware sync per micro-batch — cold copy, then a
-        // merge+compaction+delete wave applied as ONE delta (the main
-        // convergence-checks itself against a batch sync and fails red
-        // on divergence, StreamingRun conventions)
+          graft.incremental.SnapshotSync.sync(corStore, mirStore))
+        // streaming mirror: the change-feed source drained into a
+        // cdc-mode sink — cold copy, then a merge+compaction+delete wave
+        // applied as ONE delta, plus a rate-limited drain of the same
+        // wave (the main convergence-checks itself against a batch sync
+        // and fails red on divergence, StreamingRun conventions)
         val smirDir = java.nio.file.Files.createTempDirectory("graft-bench-smir").toString
         opExec("streaming_mirror")(StreamingMirrorRun.main(Array(sfDir, smirDir)))
         // indexed-admission twin (SPARK_GRAFT_INGEST_STATE): the cold

@@ -862,14 +862,14 @@ object Soak {
       val mhp = new org.apache.hadoop.fs.Path(mirDir)
       mhp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(mhp, true)
       val mirror = new incremental.SnapshotTable(spark, mirDir, "doc_id")
-      incremental.SnapshotSync.sync(tbl, mirror, "doc_id")
+      incremental.SnapshotSync.sync(tbl, mirror)
       val syncBatch = docs.orderBy(col("doc_id").desc).limit(100)
         .select(col("doc_id"), lit("soak-sync payload").as("text"))
         .localCheckpoint()
       val tsSync = (1 to reps).map { _ =>
         tbl.merge(syncBatch) // same keys each rep: fixed churn
         val t0 = System.nanoTime()
-        incremental.SnapshotSync.sync(tbl, mirror, "doc_id")
+        incremental.SnapshotSync.sync(tbl, mirror)
         (System.nanoTime() - t0) / 1e9
       }.sorted
       assert(mirror.read().count() == nRows, "mirror diverged from source rows")
@@ -882,7 +882,7 @@ object Soak {
       // rewritten table here)
       tbl.optimize(smallBytes = Long.MaxValue)
       val t0o = System.nanoTime()
-      incremental.SnapshotSync.sync(tbl, mirror, "doc_id")
+      incremental.SnapshotSync.sync(tbl, mirror)
       val optSyncWall = (System.nanoTime() - t0o) / 1e9
       assert(mirror.history.last._3 == "tag",
         s"optimize-only sync must advance tag-only, got ${mirror.history.last._3}")
@@ -1456,7 +1456,7 @@ object Soak {
         md ++= f"\nSPARSE adversarial batch on the same tables (2 keys at opposite ends of the id domain — the late-CDC shape): "
         md ++= f"files rewritten ${b.sparseTouched} of ${b.sparseFiles} at 1x -> ${s.sparseTouched} of ${s.sparseFiles} at ${n}x; wall ${b.sparseWall}%.2f s -> ${s.sparseWall}%.2f s. "
         md ++= f"Touched is bounded by the KEY COUNT (≤4 with boundary slack), not the table — a single [min,max]-envelope prune would rewrite ~all ${s.sparseFiles} files here — ${if (snapshotSparseOk) "ok" else "**FAIL**"}.\n"
-        md ++= f"\nChange-feed MIRROR (SnapshotSync over changesBetween): after a fixed 100-doc merge on the source, the warm sync applies the feed in one atomic commit at ${b.syncWall}%.2f s (1x) -> ${s.syncWall}%.2f s (${n}x) — manifest-diff pruning reads only the merge's churn files, so following a 10x table costs the same as following the 1x table for the same churn — ${if (snapshotSyncOk) "ok" else "**FAIL**"}.\n"
+        md ++= f"\nChange-feed MIRROR (SnapshotSync over changesKeyed): after a fixed 100-doc merge on the source, the warm sync applies the feed in one atomic commit at ${b.syncWall}%.2f s (1x) -> ${s.syncWall}%.2f s (${n}x) — manifest-diff pruning reads only the merge's churn files, so following a 10x table costs the same as following the 1x table for the same churn — ${if (snapshotSyncOk) "ok" else "**FAIL**"}.\n"
       case _ =>
     }
     (zcB, zcS) match {
@@ -1473,7 +1473,7 @@ object Soak {
       case _ =>
     }
     depth.foreach { case ((bw, br), (sw, sr)) =>
-      md ++= f"\nRESOLVE AT HISTORY DEPTH (newest-first + validated parse cache): a COLD handle's first read on a 21-version store loaded $br manifest files ($bw%.2f s) and on a 201-version store $sr ($sw%.2f s) — resolve is O(1) in history depth, so a per-trigger streaming getOffset on a deep store costs one listing + at most one parse; the manifest-checkpoint rung stays unnecessary — ${if (depthOk) "ok" else "**FAIL**"}.\n"
+      md ++= f"\nRESOLVE AT HISTORY DEPTH (newest-first + validated parse cache): a COLD handle's first read on a 21-version store loaded $br manifest files ($bw%.2f s) and on a 201-version store $sr ($sw%.2f s) — resolve is O(1) in history depth, so a per-trigger streaming getOffset on a deep store costs at most one listing + one parse; the manifest-checkpoint rung stays unnecessary — ${if (depthOk) "ok" else "**FAIL**"}.\n"
     }
     conc.foreach { case (b, s) =>
       md ++= f"\nCONCURRENT WRITERS (4 uncoordinated Scala threads × 6 ops — merge/delete/optimize interleaved — PLUS one pure-SQL thread issuing 4 MERGE INTO statements through the catalog's row-level DML, every op retried on ConcurrentModificationException, the SQL statements included via their statement-grain CAS pin): ${b.commits} commits with ${b.retries} retried attempts at 1x (${b.wall}%.1f s) and ${s.commits} with ${s.retries} at ${n}x (${s.wall}%.1f s) — parent chain intact, every successful op committed exactly once (unique commit tags; exactly 4 delta commits), and the final content equals a SERIAL REPLAY of the committed ops in commit order — the at-most-one-success protocol holds under real thread interleaving, SQL and Scala writers alike — ${if (concOk) "ok" else "**FAIL**"}.\n"

@@ -1,11 +1,18 @@
 package graft.incremental
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Incremental table replication over the change feed — the consumer
-  * [[SnapshotTable.changesBetween]] exists for, packaged: maintain a
+/** Incremental table replication over the change feed: maintain a
   * MIRROR snapshot table that converges to the source by applying only
   * what changed since the last sync, never by re-copying the table.
+  *
+  * Every mirror applies the KEY-GRAIN feed ([[SnapshotTable.changesKeyed]]
+  * shape: table columns plus `_change_type`) through one function,
+  * [[applyFeed]]: the batch [[sync]] below, the `cdc`-mode stream sink of
+  * [[org.apache.spark.sql.graft.SnapshotTableProvider]] (the online
+  * mirror: `graft-snapshot` feed source into that sink) and any
+  * foreachBatch consumer.
   *
   * The sync CURSOR is the mirror's application tag (the source version
   * it reflects) — one fact riding the mirror's own commit, so a crash
@@ -14,17 +21,13 @@ import org.apache.spark.sql.functions._
   * pipeline's watermark). Re-running a sync whose cursor already equals
   * the source version is a no-op.
   *
-  * One sync = ONE atomic mirror commit: removed-and-not-re-added keys
-  * delete and added rows upsert together ([[SnapshotTable.applyDelta]]
-  * — a single file-pruned copy-on-write pass over both key sets), so
-  * mirror readers only ever observe consistent source versions, never
-  * a half-applied feed. Both halves ride the feed, whose cost is ∝
-  * LOGICAL churn — [[SnapshotTable.changesBetween]] decomposes the
-  * interval at `optimize` commits, so a sync across the routine
-  * compaction an accumulate-mode store auto-triggers reads the merges'
-  * churn, never the compacted mass — a 100 TB mirror follows a trickle
-  * of commits at trickle cost, compaction included. A rewrite-only
-  * interval (optimize and nothing else) yields an empty feed, which
+  * One sync = ONE atomic mirror commit ([[SnapshotTable.applyDelta]]),
+  * so mirror readers only ever observe consistent source versions,
+  * never a half-applied feed. The feed's cost is ∝ LOGICAL churn — the
+  * interval decomposes at `optimize` commits, so a sync across the
+  * routine compaction an accumulate-mode store auto-triggers reads the
+  * merges' churn, never the compacted mass. A rewrite-only interval
+  * (optimize and nothing else) yields an empty feed, which
   * [[SnapshotTable.applyDelta]] applies as a tag-only cursor advance —
   * no contentless data version lands on the mirror. The mirror lags by
   * sync cadence.
@@ -33,8 +36,9 @@ object SnapshotSync {
 
   /** Bring `mirror` up to `source`'s current version. Returns the
     * source version the mirror now reflects. Cold start (mirror absent)
-    * copies the current snapshot once; warm syncs apply the feed. */
-  def sync(source: SnapshotTable, mirror: SnapshotTable, key: String): Long = {
+    * copies the current snapshot once; warm syncs apply the key-grain
+    * feed since the cursor through [[applyFeed]]. */
+  def sync(source: SnapshotTable, mirror: SnapshotTable): Long = {
     val srcV = source.currentVersion.getOrElse(
       throw new IllegalStateException("source table has no committed version"))
     if (!mirror.exists) {
@@ -54,29 +58,40 @@ object SnapshotSync {
     // mirror's own history still references pre-refresh files — a true
     // forget must retire+vacuum the MIRROR too (caller's job, same
     // two-step as the source).
-    val feed0 =
-      try source.changesBetween(cursor, srcV)
+    val feed =
+      try source.changesKeyed(cursor, srcV)
       catch {
         case _: IllegalStateException =>
           mirror.create(source.readVersion(srcV), tag = s"sync:$srcV")
           return srcV
       }
-    val feed = feed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    applyFeed(mirror, feed, s"sync:$srcV")
+    srcV
+  }
+
+  /** Apply one key-grain change feed to `mirror` as ONE atomic
+    * [[SnapshotTable.applyDelta]] commit tagged `tag`: `insert`/`update`
+    * rows upsert, `delete` rows delete their key. A `_commit_version`
+    * rider column is ignored. The feed is persisted once for the two
+    * sides and unpersisted after the commit. An empty feed advances only
+    * the tag. Returns the mirror's version. */
+  def applyFeed(mirror: SnapshotTable, feed: DataFrame, tag: String): Long = {
+    val cached = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val added = feed.filter(col("_change") === "added").drop("_change")
-      val removed = feed.filter(col("_change") === "removed").drop("_change")
-      // keys whose rows only disappeared (true deletes); an update's
-      // removed half is subsumed by its added replacement (applyDelta's
-      // upsert-wins rule)
-      val doomed = removed.select(col(key))
-        .join(added.select(col(key)), Seq(key), "left_anti").distinct()
-      // ONE atomic mirror commit applies the whole feed — deletes and
-      // upserts together ([[SnapshotTable.applyDelta]]), with the new
-      // cursor riding it: mirror readers only ever see source versions,
-      // never a half-applied feed, and a crash re-syncs from the old
-      // cursor idempotently.
-      mirror.applyDelta(added, doomed, tag = s"sync:$srcV")
-      srcV
-    } finally feed.unpersist(blocking = false)
+      val (upserts, deleteKeys) = feedSides(cached, mirror.keyColumn)
+      mirror.applyDelta(upserts, deleteKeys, tag = tag)
+    } finally cached.unpersist(blocking = false)
+  }
+
+  /** A key-grain feed's (upserts, delete keys): rows whose `_change_type`
+    * is not `delete` as table rows, and the `delete` rows' keys. A key in
+    * both sides lands as its upsert ([[SnapshotTable.applyDelta]]'s
+    * upsert-wins rule). */
+  def feedSides(feed: DataFrame, key: String): (DataFrame, DataFrame) = {
+    require(feed.columns.contains("_change_type"),
+      "a change feed wants a _change_type column (insert|update|delete)")
+    val isDelete = col("_change_type") === "delete"
+    (feed.filter(!isDelete).drop("_change_type", "_commit_version"),
+      feed.filter(isDelete).select(col(key)))
   }
 }

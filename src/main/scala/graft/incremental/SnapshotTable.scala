@@ -561,49 +561,30 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     listManifests.iterator
       .collectFirst { case (v, st) if loadValidated(v, st).isDefined => v }
 
-  /** Oldest committed version strictly above `v` — the rate-limited
-    * change feed's fallback cap when a torn-claim gap swallows its
-    * whole arithmetic window: the next batch then spans exactly one
-    * commit instead of aiming at a number that never committed. */
-  def oldestCommittedAbove(v: Long): Option[Long] =
-    listManifests.iterator
-      .collectFirst { case (ver, st) if ver > v && loadValidated(ver, st).isDefined => ver }
-
   /** The change feed's next offer after `offered`, rate-capped at
-    * `maxVersions` and resolved onto the COMMIT LOG, in ONE manifest-dir
-    * listing (this runs on EVERY streaming trigger — three separate
-    * listing helpers here would triple the per-trigger metadata RPCs):
-    * the newest committed version when it sits within the window; else
-    * the largest committed version inside the window; else the next
-    * committed version above `offered` (a window swallowed whole by
-    * torn-claim gaps still advances one commit — gaps are not commits).
-    * None when the table has no committed version. The result may be
-    * ≤ `offered` (nothing new); callers must not regress their cursor. */
+    * `maxVersions` and resolved onto the COMMIT LOG (this runs on EVERY
+    * streaming trigger): the newest committed version when it sits
+    * within the window — [[newestCommitted]], so an idle trigger costs
+    * two `getFileStatus` probes and no listing; else, from one
+    * manifest-dir listing, the largest committed version inside the
+    * window, or the next committed version above `offered` when
+    * torn-claim gaps swallow the whole window (gaps are not commits, and
+    * the feed must still advance one commit). None when the table has
+    * no committed version. The result may be ≤ `offered` (nothing new);
+    * callers must not regress their cursor. */
   def nextFeedOffer(offered: Long, maxVersions: Long): Option[Long] = {
     require(maxVersions >= 1, s"maxVersions must be >= 1, got $maxVersions")
-    val it = listManifests.reverseIterator
-    var newest = Option.empty[Long]
-    var inWindow = Option.empty[Long]
-    var lowestAbove = Option.empty[Long]
-    var done = false
-    while (it.hasNext && !done) {
-      val (v, st) = it.next()
-      // once the newest committed is known, versions at or below the
-      // cursor cannot change any answer — stop descending
-      if (v <= offered && newest.isDefined) done = true
-      else if (loadValidated(v, st).isDefined) {
-        if (newest.isEmpty) newest = Some(v)
-        if (v > offered) {
-          lowestAbove = Some(v) // descending: the last one seen is the smallest
-          // v - offered is non-negative here, so no overflow on an
-          // unbounded (Long.MaxValue) window
-          if (inWindow.isEmpty && v - offered <= maxVersions) inWindow = Some(v)
-        } else done = true
+    newestCommitted.map(_.version).map { newest =>
+      // versions are non-negative, so newest - offered cannot overflow
+      // and an unbounded (Long.MaxValue) window always takes the newest
+      if (newest - offered <= maxVersions) newest
+      else {
+        val above = listManifests.iterator
+          .collect { case (v, st) if v > offered && loadValidated(v, st).isDefined => v }
+          .buffered
+        val next = above.head // non-empty: newest is committed and above offered
+        above.takeWhile(_ - offered <= maxVersions).foldLeft(next)((_, v) => v)
       }
-    }
-    newest.map { cur =>
-      if (cur - offered <= maxVersions) cur
-      else inWindow.orElse(lowestAbove).getOrElse(cur)
     }
   }
 
@@ -1016,11 +997,13 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * changed key with a `_change_type` column — `insert` (post-image),
     * `update` (post-image; the removed/added pair collapsed), `delete`
     * (pre-image) — the CDC shape a downstream consumer applies without
-    * doing its own pair-matching (what [[SnapshotSync]] derives
-    * internally, exposed). Same pruning and rewrite-op awareness as
-    * the row feed. CONTRACT: assumes key-unique snapshots — what
-    * merge/delete/applyDelta maintain; a table fed duplicate keys via
-    * create/append reports those keys at row grain fidelity lost. */
+    * doing its own pair-matching. Every mirror applies it through
+    * [[SnapshotSync.applyFeed]]: the batch [[SnapshotSync.sync]] and, as
+    * the `graft-snapshot` stream source's micro-batches, the `cdc`-mode
+    * sink. Same pruning and rewrite-op awareness as the row feed.
+    * CONTRACT: assumes key-unique snapshots — what merge/delete/
+    * applyDelta maintain; a table fed duplicate keys via create/append
+    * reports those keys at row grain fidelity lost. */
   def changesKeyed(from: Long, to: Long): DataFrame = {
     val feed = changesBetween(from, to)
     val added = feed.filter(col("_change") === "added").drop("_change")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider,
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.incremental.SnapshotTable
+import graft.incremental.{SnapshotSync, SnapshotTable}
 
 /** The snapshot store as a FULL Spark data source — one format string
   * (`graft-snapshot`, via META-INF/services) for batch read, batch
@@ -70,8 +70,9 @@ import graft.incremental.SnapshotTable
   *   - `upsert` (default): keyed MERGE of the batch (first batch
   *     creates the table);
   *   - `cdc`: the batch carries `_change_type` (this source's own feed
-  *     shape, or any CDC frame) — applied as ONE atomic
-  *     upsert+delete (`applyDelta`);
+  *     shape, or any CDC frame) — applied as ONE atomic upsert+delete
+  *     through [[graft.incremental.SnapshotSync.applyFeed]], the
+  *     function every mirror applies its feed with;
   *   - `append`: blind append (event logs; no key semantics).
   * `clusterPartitions` and `statsColumns` (comma-separated) configure
   * the target handle, so a streamed store keeps the same clustering
@@ -223,56 +224,48 @@ private[graft] final class SnapshotTableSink(
   override def addBatch(batchId: Long, data: org.apache.spark.sql.DataFrame): Unit = {
     val t = table
     if (t.exists && lastApplied(t).exists(_ >= batchId)) return // replay: already applied
+    val tag = s"$TagPrefix$batchId"
     // the engine's addBatch frame is single-use; re-wrap its planned
-    // execution as an ordinary batch frame, persisted across the
-    // several actions the application paths run on it
-    val df = GraftSqlShim.rebatch(data)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // execution as an ordinary batch frame
+    val batch = GraftSqlShim.rebatch(data)
+    // an EXISTING cdc-mode table takes the mirrors' one feed application
+    // (one cached copy, one applyDelta); no emptiness probe — an empty
+    // batch lands on applyDelta's empty-delta fast path, setTag(tag)
+    if (mode == "cdc" && t.exists) {
+      SnapshotSync.applyFeed(t, batch, tag)
+      return
+    }
+    // persisted across the several actions the other application paths
+    // run on it
+    val df = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val tag = s"$TagPrefix$batchId"
-      import org.apache.spark.sql.functions.col
-      def payloadSchema(d: org.apache.spark.sql.DataFrame) =
-        if (mode == "cdc") d.drop("_commit_version", "_change_type") else d
+      // a cdc batch's table rows: its upsert side
+      val rows = if (mode == "cdc") SnapshotSync.feedSides(df, key)._1 else df
       // the engine's fresh-start batch 0 (and any replayed no-op) is
       // EMPTY: advance only the cursor tag — never a contentless data
       // commit — or pin the schema with an empty create when the table
-      // does not exist yet. An EXISTING cdc-mode table skips the probe
-      // job outright: applyDelta's own empty-delta fast path lands on
-      // the identical setTag(tag), and its one-job batch profile makes
-      // the emptiness test free — a per-micro-batch job saved
-      if (!(mode == "cdc" && t.exists) && df.isEmpty) {
-        if (!t.exists) t.create(payloadSchema(df), tag)
+      // does not exist yet
+      if (df.isEmpty) {
+        if (!t.exists) t.create(rows, tag)
         else if (!t.currentTag.contains(tag)) t.setTag(tag)
         return
-      }
-      // the keyed modes' FIRST batch goes through create(), which has
-      // no key-semantics of its own — enforce the same key-uniqueness
-      // contract merge/applyDelta enforce on every later batch, so a
-      // duplicate-key batch 0 fails as loudly as a duplicate-key batch
-      // N would, instead of silently seeding a dup-key table every
-      // subsequent keyed op then operates on
-      def requireKeyUnique(d: org.apache.spark.sql.DataFrame): d.type = {
-        SnapshotChangeFeedSource.requireKeyUnique(d, key, s"stream batch $batchId")
-        d
       }
       mode match {
         case "append" =>
           if (t.exists) t.append(df, tag) else t.create(df, tag)
-        case "upsert" =>
-          if (t.exists) t.merge(df, tag = tag) else t.create(requireKeyUnique(df), tag)
-        case "cdc" =>
-          require(df.schema.fieldNames.contains("_change_type"),
-            "cdc mode wants a _change_type column (insert|update|delete)")
-          val payload = df.drop("_commit_version")
-          val ups = payload.filter(col("_change_type") =!= "delete").drop("_change_type")
-          val dels = payload.filter(col("_change_type") === "delete").select(col(key))
-          // first batch == applyDelta against an empty table: every
-          // upsert lands (a same-key delete loses — upsert wins, the
-          // documented applyDelta overlap class) and bare deletes are
-          // no-ops; an anti-join here would silently diverge from what
-          // the identical batch does on an existing table
-          if (t.exists) t.applyDelta(ups, dels, tag = tag)
-          else t.create(requireKeyUnique(ups), tag)
+        case "upsert" if t.exists => t.merge(df, tag = tag)
+        case _ =>
+          // the keyed modes' FIRST batch goes through create(), which has
+          // no key-semantics of its own — enforce the same key-uniqueness
+          // contract merge/applyDelta enforce on every later batch, so a
+          // duplicate-key batch 0 fails as loudly as a duplicate-key
+          // batch N would. A cdc first batch == applyDelta against an
+          // empty table: every upsert lands (a same-key delete loses —
+          // upsert wins) and bare deletes are no-ops; an anti-join here
+          // would silently diverge from what the identical batch does on
+          // an existing table
+          SnapshotChangeFeedSource.requireKeyUnique(rows, key, s"stream batch $batchId")
+          t.create(rows, tag)
       }
       ()
     } finally df.unpersist(blocking = false)
@@ -283,33 +276,36 @@ private[graft] object SnapshotChangeFeedSource {
   def normalize(parameters: Map[String, String]): Map[String, String] =
     parameters.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
 
-  def handle(spark: SparkSession, p: Map[String, String]): SnapshotTable = {
+  /** The table directory and key column the provider options name. The
+    * key option is OPTIONAL on an existing table: every commit records
+    * its key column in the manifest's #key header, so a read needs only
+    * the path (the same resolution the SQL catalog uses); an explicit
+    * option still wins, and is required when a write will create the
+    * table. */
+  private def dirAndKey(spark: SparkSession, p: Map[String, String]): (String, String) = {
     val dir = p.getOrElse("path",
-      throw new IllegalArgumentException("snapshot change feed needs option path=<table dir>"))
-    // the key option is OPTIONAL on an existing table: every commit
-    // records its key column in the manifest's #key header, so a read
-    // needs only the path (the same resolution the SQL catalog uses);
-    // an explicit option still wins (and is required pre-create)
+      throw new IllegalArgumentException("a snapshot table needs option path=<table dir>"))
     val key = p.get("key").orElse(SnapshotTable.keyAt(spark, dir)).getOrElse(
       throw new IllegalArgumentException(
         s"no snapshot table at $dir to read the key column from — pass option " +
           "key=<key column> (required only before the table exists)"))
+    (dir, key)
+  }
+
+  /** A READ handle from provider options (batch scans, the change-feed
+    * source): `monotonicReads`, so successive resolves never go back. */
+  def handle(spark: SparkSession, p: Map[String, String]): SnapshotTable = {
+    val (dir, key) = dirAndKey(spark, p)
     new SnapshotTable(spark, dir, key, monotonicReads = true)
   }
 
   /** A WRITE-configured handle from provider options — shared by the
     * streaming sink and the batch write half, so a table built through
     * either keeps the same clustering, data-skipping stats, key blooms,
-    * and merge-on-read delete policy a Scala-handle-built one would. */
+    * and merge-on-read delete policy a Scala-handle-built one would. Not
+    * `monotonicReads`: a writer must not floor on a retracted version. */
   def configuredHandle(spark: SparkSession, p: Map[String, String]): SnapshotTable = {
-    val dir = p.getOrElse("path",
-      throw new IllegalArgumentException("snapshot write needs option path=<table dir>"))
-    // optional on an existing table (resolved from the manifest #key
-    // header); required when this write will CREATE the table
-    val key = p.get("key").orElse(SnapshotTable.keyAt(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(
-        "snapshot write needs option key=<key column> — no existing table at " +
-          s"$dir to resolve it from (required when the write creates the table)"))
+    val (dir, key) = dirAndKey(spark, p)
     new SnapshotTable(spark, dir, key,
       clusterPartitions = p.get("clusterpartitions").map(_.toInt),
       statsColumns = p.get("statscolumns")
@@ -431,7 +427,8 @@ final class SnapshotChangeFeedSource(
   override val schema: StructType = SnapshotChangeFeedSource.feedSchema(tbl)
 
   override def getOffset: Option[Offset] = {
-    // ONE listing per trigger. The offer lands ON THE COMMIT LOG, not
+    // An idle trigger lists nothing: the head comes from the store's
+    // newest-version resolve. The offer lands ON THE COMMIT LOG, not
     // on raw arithmetic: committed version numbers have permanent gaps
     // (a crashed writer's torn claim), and an offer pointing at a gap
     // would make getBatch fail on a version that does not exist — then
@@ -491,7 +488,7 @@ final class SnapshotChangeFeedSource(
       startOffset: org.apache.spark.sql.connector.read.streaming.Offset,
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
       : org.apache.spark.sql.connector.read.streaming.Offset = {
-    val offer = getOffset // one listing; rate cap + gap resolution as ever
+    val offer = getOffset // rate cap + gap resolution as ever
     drainTo match {
       case None => offer.orNull
       case Some(cap) =>

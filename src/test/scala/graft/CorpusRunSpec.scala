@@ -72,7 +72,7 @@ class CorpusRunSpec extends AnyFunSuite {
     // replication hole
     val mirOut = TestSpark.tempDir("graft-corpus-fgt-mir").toString
     val mirror = new graft.incremental.SnapshotTable(spark, s"$mirOut/corpus", "doc_id")
-    graft.incremental.SnapshotSync.sync(store, mirror, "doc_id")
+    graft.incremental.SnapshotSync.sync(store, mirror)
     assert(mirror.read().filter(col("doc_id").isin(doomed.map(Long.box): _*)).count() == 3)
 
     CorpusForget.main(Array(out, doomed.mkString(","), mirOut))
@@ -83,7 +83,7 @@ class CorpusRunSpec extends AnyFunSuite {
       s"mirror history must be forgotten too: ${mirror.history}")
     // the next sync hits the retention fence (source retired the cursor
     // version), full-refreshes, and feed-following resumes consistent
-    graft.incremental.SnapshotSync.sync(store, mirror, "doc_id")
+    graft.incremental.SnapshotSync.sync(store, mirror)
     assertSameRows(mirror.read(), store.read())
 
     // gone from the store — and from HISTORY: retire(1) dropped the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.incremental.SnapshotTable
+import graft.incremental.{SnapshotSync, SnapshotTable}
 import TestSpark._
 
 /** The SnapshotTable as BOTH ENDS of Structured Streaming
@@ -92,10 +92,7 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
     mirror.create(tbl.read()) // cold copy at the stream's starting version
 
     def applyFeed(batch: DataFrame, batchId: Long): Unit = {
-      val ups = batch.filter(col("_change_type") =!= "delete")
-        .drop("_change_type", "_commit_version")
-      val dels = batch.filter(col("_change_type") === "delete").select("k")
-      if (!batch.isEmpty) mirror.applyDelta(ups, dels, tag = s"batch:$batchId")
+      SnapshotSync.applyFeed(mirror, batch, tag = s"batch:$batchId")
       ()
     }
     def run(): org.apache.spark.sql.streaming.StreamingQuery =

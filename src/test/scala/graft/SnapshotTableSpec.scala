@@ -591,12 +591,12 @@ class SnapshotTableSpec extends AnyFunSuite {
     val src = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(4))
     val mir = new SnapshotTable(spark, freshDir(), "k")
     src.create((1L to 200L).map(i => (i, s"v$i")).toDF("k", "v"))
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     // merge + compaction between syncs: the mirror commit applies
     // exactly the merge's churn, as a real delta
     src.merge(kv(5L -> "FIVE", 201L -> "ins"))
     src.optimize(smallBytes = Long.MaxValue)
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assertSameRows(mir.read(), src.read())
     assert(mir.history.last._3 == "delta")
     // compaction-ONLY interval: the cursor advances as a tag-only
@@ -604,18 +604,18 @@ class SnapshotTableSpec extends AnyFunSuite {
     val mirFiles = mir.read().inputFiles.toSet
     src.optimize(smallBytes = Long.MaxValue)
     src.optimize(smallBytes = Long.MaxValue)
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assert(mir.history.last._3 == "tag",
       s"optimize-only sync committed ${mir.history.last._3}, want tag-only")
     assert(mir.read().inputFiles.toSet == mirFiles, "tag-only sync must not touch data")
     assertSameRows(mir.read(), src.read())
     // cursor advanced: re-sync is a no-op
     val v = mir.currentVersion
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assert(mir.currentVersion == v)
     // feed-following still resumes normally after
     src.merge(kv(7L -> "SEVEN"))
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assertSameRows(mir.read(), src.read())
   }
 
@@ -658,18 +658,18 @@ class SnapshotTableSpec extends AnyFunSuite {
     val mir = new SnapshotTable(spark, freshDir(), "k")
     src.create((1L to 200L).map(i => (i, s"v$i")).toDF("k", "v"))
     // cold sync copies once
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assertSameRows(mir.read(), src.read())
     // update + insert, then sync applies the feed (no recopy)
     src.merge(kv(5L -> "FIVE", 201L -> "added"))
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assertSameRows(mir.read(), src.read())
     // deletes propagate — and a mixed delete+update+insert feed lands
     // as EXACTLY ONE mirror commit (no half-applied intermediate)
     src.delete(Seq(7L, 8L).toDF("k"))
     src.merge(kv(9L -> "NINE", 203L -> "ins"))
     val histBefore = mir.history.size
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assert(mir.history.size == histBefore + 1,
       "a sync must apply its whole feed as one atomic commit")
     assertSameRows(mir.read(), src.read())
@@ -679,32 +679,32 @@ class SnapshotTableSpec extends AnyFunSuite {
     src.merge(kv(10L -> "ten-a"))
     src.merge(kv(10L -> "ten-b", 202L -> "x"))
     src.delete(Seq(202L).toDF("k")) // inserted then deleted between syncs
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assertSameRows(mir.read(), src.read())
     assert(mir.read().filter(col("k") === 10L).select("v").head.getString(0) == "ten-b")
     // re-sync at cursor is a no-op: no new mirror commit
     val v = mir.currentVersion
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assert(mir.currentVersion == v, "no-op sync must not commit")
     // add-column evolution flows through the feed
     src.merge(Seq((1L, "A", Some("en"))).toDF("k", "v", "lang"))
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assertSameRows(mir.read(), src.read())
     // retention fence: the source retiring past the cursor (the forget
     // two-step) forces a full refresh, after which following resumes
     src.delete(Seq(3L).toDF("k"))
     src.retire(keepLast = 1)
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assertSameRows(mir.read(), src.read())
     assert(mir.history.last._3 == "overwrite", "retired cursor must force a full refresh")
     src.merge(Seq((4L, "resumed", Option.empty[String])).toDF("k", "v", "lang"))
-    SnapshotSync.sync(src, mir, "k")
+    SnapshotSync.sync(src, mir)
     assertSameRows(mir.read(), src.read())
     assert(mir.history.last._3 == "delta", "feed-following must resume after the refresh")
     // a mirror not created by sync has no cursor — loud, not silent
     val foreign = new SnapshotTable(spark, freshDir(), "k")
     foreign.create(kv(1L -> "z"))
-    intercept[IllegalStateException](SnapshotSync.sync(src, foreign, "k"))
+    intercept[IllegalStateException](SnapshotSync.sync(src, foreign))
   }
 
   test("secondary column stats: readWhere prunes files on a non-key column; stat-less files stay conservative") {
@@ -1454,6 +1454,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     // catalog route's residual planning tax
     val l0 = reader.manifestListings
     reader.read(); reader.currentVersion; reader.recordedKey
+    // the change feed's per-trigger offer resolves the head the same way
+    assert(reader.nextFeedOffer(30L, 1L).contains(30L))
     assert(reader.manifestListings - l0 == 0,
       s"quiescent repeated resolves listed ${reader.manifestListings - l0} times")
     // a commit by ANOTHER handle lands at version+1 — the fast path's
@@ -1491,11 +1493,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(tbl.currentVersion.contains(3L))
     assert(tbl.committedVersionAtOrBelow(2L).contains(1L), "cap landed on a torn claim")
     assert(tbl.committedVersionAtOrBelow(0L).contains(0L))
-    assert(tbl.oldestCommittedAbove(1L).contains(3L), "next-committed skipped the gap wrong")
     assert(tbl.oldestCommittedVersion.contains(0L))
     assert(tbl.committedVersionAtOrBelow(-1L).isEmpty)
-    assert(tbl.oldestCommittedAbove(3L).isEmpty)
-    // the one-listing trigger resolve, same table (committed 0,1,3; gap 2)
+    // the per-trigger feed offer, same table (committed 0,1,3; gap 2)
     assert(tbl.nextFeedOffer(0L, 10L).contains(3L), "unbounded window offers the head")
     assert(tbl.nextFeedOffer(0L, 1L).contains(1L), "window capped on the commit log")
     assert(tbl.nextFeedOffer(1L, 1L).contains(3L),
