@@ -489,8 +489,8 @@ private[graft] final class StagedReplaceGraftTable(spark: SparkSession,
   * [[build]] picks the route: a DV-free snapshot gets the NATIVE
   * columnar scan ([[org.apache.spark.sql.graft.GraftColumnarScan]] —
   * vectorized parquet batches, whole-stage codegen, zero row
-  * materialization), with manifest file pruning done driver-side
-  * against the translated filters; a snapshot carrying deletion
+  * materialization) over the table's own file index, narrowed by the
+  * translated filters; a snapshot carrying deletion
   * vectors falls back to the [[GraftScan]] `V1Scan` bridge, whose
   * inner masked plan splices the sidecar anti-joins in. */
 private[graft] final class GraftScanBuilder(tbl: SnapshotTable,
@@ -545,18 +545,10 @@ private[graft] final class GraftScanBuilder(tbl: SnapshotTable,
     servedAgg.foreach { case (schema, values) =>
       return new GraftLocalAggScan(schema, values)
     }
-    val translatable = pushedFilters()
-    tbl.batchScanParts(pinned, translatable) match {
+    tbl.batchScanParts(pinned) match {
       case Some(parts) =>
-        val physRead = StructType(required.fields.map(f =>
-          f.copy(name = parts.colmap.getOrElse(f.name, f.name))))
-        val pushedPhys =
-          if (parts.colmap.isEmpty) translatable
-          else translatable.flatMap(GraftFilters.renamed(_, parts.colmap))
-        org.apache.spark.sql.graft.GraftColumnarScan(
-          SparkSession.active, parts.files, parts.physSchema,
-          physRead, required, pushedPhys, parts.prunable, parts.refilter,
-          s"graft-snapshot${pinned.fold("")(v => s" @v$v")}")
+        org.apache.spark.sql.graft.GraftColumnarScan(SparkSession.active, parts,
+          required, pushedFilters(), s"graft-snapshot${pinned.fold("")(v => s" @v$v")}")
       case None => new GraftScan(tbl, pinned, required, filters)
     }
   }
@@ -586,14 +578,13 @@ private[graft] final class GraftScan(tbl: SnapshotTable, pinned: Option[Long],
   override def readSchema(): StructType = required
 
   /** Spark calls the relation's no-argument `buildScan()`, so the
-    * pushed filters ride inside the thunk. The relation reports
-    * [[required]] itself: the V1 fallback demands the scan's read
-    * schema exactly, and the catalog declares the key NOT NULL. */
+    * relation carries the pushed filters. It reports [[required]]
+    * itself: the V1 fallback demands the scan's read schema exactly,
+    * and the catalog declares the key NOT NULL. */
   override def toV1TableScan[T <: BaseRelation with TableScan](
       context: SQLContext): T =
-    new GraftMaskedRelation(context.sparkSession, () =>
-      filters.flatMap(GraftFilters.toColumn(_)).foldLeft(tbl.scanAt(pinned))(_ filter _)
-        .select(required.fieldNames.map(col).toIndexedSeq: _*))(required).asInstanceOf[T]
+    new GraftMaskedRelation(context.sparkSession, () => tbl.scanAt(pinned),
+      filters)(required).asInstanceOf[T]
 
   override def description(): String =
     s"graft-snapshot ${pinned.fold("")(v => s"@v$v ")}pushed=[${pushedRender}]"

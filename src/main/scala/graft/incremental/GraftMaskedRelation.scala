@@ -35,15 +35,17 @@ import org.apache.spark.sql.types.StructType
   * the relation re-derives its plan per `buildScan`, but always over
   * the same immutable snapshot. `schema` defaults to the thunk's own;
   * the catalog's V1 scan passes its read schema instead, which Spark
-  * requires verbatim (nullability included). */
+  * requires verbatim (nullability included), together with the filters
+  * it pushed: Spark calls that scan's relation through the no-argument
+  * `buildScan()`, which applies `pushed` like the two-argument one. */
 private[graft] final class GraftMaskedRelation(
-    spark: SparkSession, inner: () => DataFrame)(
+    spark: SparkSession, inner: () => DataFrame, pushed: Array[Filter] = Array.empty)(
     override val schema: StructType = inner().schema)
     extends BaseRelation with PrunedFilteredScan with TableScan {
 
   override def sqlContext: SQLContext = spark.sqlContext
 
-  override def buildScan(): RDD[Row] = buildScan(schema.fieldNames, Array.empty)
+  override def buildScan(): RDD[Row] = buildScan(schema.fieldNames, pushed)
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
@@ -62,7 +64,7 @@ private[graft] final class GraftMaskedRelation(
   * is always safe — but [[SupportsDelete.canDeleteWhere]]-style callers
   * also use translatability as their "can I express this exactly?"
   * gate, so each mapping here must be EXACT, not approximate. */
-private[graft] object GraftFilters {
+object GraftFilters {
   def toColumn(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))
     case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))

@@ -4,6 +4,7 @@ import java.util.ConcurrentModificationException
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{NoopCache, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
@@ -569,21 +570,23 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * manifest-dir listing, the largest committed version inside the
     * window, or the next committed version above `offered` when
     * torn-claim gaps swallow the whole window (gaps are not commits, and
-    * the feed must still advance one commit). None when the table has
-    * no committed version. The result may be ≤ `offered` (nothing new);
-    * callers must not regress their cursor. */
-  def nextFeedOffer(offered: Long, maxVersions: Long): Option[Long] = {
+    * the feed must still advance one commit). Returned as (offer, head):
+    * the newest committed version the offer resolved rides along, so a
+    * trigger that also reports the table's head resolves it once. None
+    * when the table has no committed version. The offer may be ≤
+    * `offered` (nothing new); callers must not regress their cursor. */
+  def nextFeedOffer(offered: Long, maxVersions: Long): Option[(Long, Long)] = {
     require(maxVersions >= 1, s"maxVersions must be >= 1, got $maxVersions")
     newestCommitted.map(_.version).map { newest =>
       // versions are non-negative, so newest - offered cannot overflow
       // and an unbounded (Long.MaxValue) window always takes the newest
-      if (newest - offered <= maxVersions) newest
+      if (newest - offered <= maxVersions) (newest, newest)
       else {
         val above = listManifests.iterator
           .collect { case (v, st) if v > offered && loadValidated(v, st).isDefined => v }
           .buffered
         val next = above.head // non-empty: newest is committed and above offered
-        above.takeWhile(_ - offered <= maxVersions).foldLeft(next)((_, v) => v)
+        (above.takeWhile(_ - offered <= maxVersions).foldLeft(next)((_, v) => v), newest)
       }
     }
   }
@@ -680,8 +683,8 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       cols.exists(c => e.stats.get(m.physOf(c)).forall(_.nulls.isEmpty)))
     if (todo.isEmpty) return m.version
     val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(col(c)).as(s"__n$i"), max(col(c)).as(s"__x$i"),
-        count(col(c)).as(s"__c$i")) }
+      Seq(count(col(c)).as(s"__c$i"), min(col(c)).as(s"__n$i"),
+        max(col(c)).as(s"__x$i")) }
     val rows = readEntriesRaw(m, m.schema, todo)
       .groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)
@@ -692,13 +695,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       rows.flatMap { r =>
         relByCanon.get(new Path(new java.net.URI(r.getString(0))).toUri.getPath).map { e =>
           e.path -> cols.zipWithIndex.flatMap { case (c, i) =>
-            val (mn, mx) = (ordEncode(r.get(1 + 3 * i)), ordEncode(r.get(2 + 3 * i)))
-            val nulls = Some(e.rows - r.getLong(3 + 3 * i))
-            if (mn.isDefined && mx.isDefined)
-              Some(m.physOf(c) -> ColStat(kindOf(m.schema(c).dataType), mn, mx, nulls))
-            else if (nulls.contains(e.rows)) // all-null file: known, countable
-              Some(m.physOf(c) -> ColStat(kindOf(m.schema(c).dataType), None, None, nulls))
-            else None
+            colStatAt(r, 1 + 3 * i, e.rows, kindOf(m.schema(c).dataType)).map(m.physOf(c) -> _)
           }.toMap
         }
       }.toMap
@@ -1118,25 +1115,33 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     else relationOf(m, m.schema, m.entries)
   }
 
-  /** THE scan planner for manifest entries: a parquet relation over a
-    * [[GraftFileIndex]] of [[statusOf]] FileStatuses — no listing job,
-    * whatever the file count. It plans the PHYSICAL twin of `schema`
-    * (so pushed filters speak the prover's names; a column the files
-    * predate reads null), all nullable as in any parquet read: a
-    * legacy file may hold null keys the schema promises away. */
+  /** THE scan planner for manifest entries: a parquet relation over
+    * the entries' [[indexOf]] — no listing job, whatever the file count.
+    * It plans the PHYSICAL twin of `schema` (so pushed filters speak the
+    * prover's names; a column the files predate reads null), all
+    * nullable as in any parquet read: a legacy file may hold null keys
+    * the schema promises away. */
   private def relationOf(m: Manifest, schema: StructType,
       entries: Seq[Entry]): org.apache.spark.sql.sources.BaseRelation = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    HadoopFsRelation(indexOf(m, entries), StructType(Nil),
+      org.apache.spark.sql.graft.GraftSqlShim.asNullable(m.physSchemaOf(schema)), None,
+      new ParquetFileFormat(), Map.empty[String, String])(spark)
+  }
+
+  /** THE file index over manifest entries, behind every read route —
+    * [[relationOf]]'s relations and the catalog's columnar scan: a
+    * [[GraftFileIndex]] of [[statusOf]] FileStatuses that prunes with
+    * [[disjoint]] against PHYSICAL-name filters and records each kept
+    * count in [[lastListedFiles]]. */
+  private def indexOf(m: Manifest, entries: Seq[Entry]): GraftFileIndex = {
     val files = entries.map(e => e -> statusOf(e))
-    val index = new GraftFileIndex(new Path(dir), files.map(_._2), { filters =>
+    new GraftFileIndex(spark, new Path(dir), files.map(_._2), { filters =>
       val kept = files.collect { case (e, st) if !filters.exists(disjoint(_, m, e)) => st }
       lastListedFiles = kept.size
       kept
     })
-    HadoopFsRelation(index, StructType(Nil),
-      org.apache.spark.sql.graft.GraftSqlShim.asNullable(m.physSchemaOf(schema)), None,
-      new ParquetFileFormat(), Map.empty[String, String])(spark)
   }
 
   /** An entry's FileStatus from its manifest-recorded byte length —
@@ -1152,42 +1157,23 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       fs.getFileStatus(new Path(s"$dir/${e.path}"))
   }
 
-  /** Everything the NATIVE DSv2 columnar batch scan needs, or None when
-    * this snapshot cannot be served by a bare parquet scan (it carries
-    * deletion vectors — their sidecar anti-join needs the masked
-    * relation route). The entries are pruned HERE, against the pushed
-    * v2 source filters, by the same [[disjoint]] proof every other read
-    * route uses — so the catalog's columnar rung keeps manifest file
-    * skipping without a planner FileIndex in the loop. FileStatuses come
-    * from manifest-recorded byte lengths (driver arithmetic, no per-file
-    * RPC). */
-  private[graft] def batchScanParts(version: Option[Long],
-      filters: Array[sources.Filter])
-      : Option[SnapshotTable.BatchParts] = {
+  /** What the NATIVE DSv2 columnar batch scan needs besides the
+    * snapshot's [[indexOf]], or None when this snapshot cannot be served
+    * by a bare parquet scan (it carries deletion vectors — their sidecar
+    * anti-join needs the masked relation route). The scan narrows the
+    * index by its pushed and runtime filters, so the catalog's columnar
+    * rung prunes files through the same index as every other read. */
+  private[graft] def batchScanParts(version: Option[Long]): Option[SnapshotTable.BatchParts] = {
     val m = manifestAt(version)
     if (m.entries.exists(_.dv.isDefined)) return None
-    // pushed and runtime filters name LOGICAL columns; the prover reads
-    // physical ones. Both the static prune and the runtime re-prune
-    // record their count in lastBatchKept.
-    def keep(logical: Array[sources.Filter]): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val kept = survivors(m, m.entries, logical.toSeq.flatMap(GraftFilters.renamed(_, m.colmap)))
-      lastBatchKept = kept.size
-      kept.map(statusOf)
-    }
     // columns a filter can prune files on: the key (bounded on every
     // `f` line) plus any column some entry carries stats for —
     // advertised to Spark's runtime-filtering rule in LOGICAL names
     val physToLogical = m.schema.fieldNames.map(l => m.physOf(l) -> l).toMap
     val prunable = (Seq(key) ++
       m.entries.flatMap(_.stats.keys).distinct.flatMap(physToLogical.get)).distinct
-    Some(SnapshotTable.BatchParts(
-      m.physSchema, m.colmap, keep(filters), prunable, extra => keep(filters ++ extra)))
+    Some(SnapshotTable.BatchParts(indexOf(m, m.entries), m.physSchema, m.colmap, prunable))
   }
-
-  /** Files the most recent [[batchScanParts]] prune kept — static or
-    * the runtime re-prune of its scan — the columnar route's pruning
-    * spec seam. -1 until it runs. */
-  private[graft] var lastBatchKept: Int = -1
 
   /** Operational facts about a resolved snapshot, from manifest
     * arithmetic alone — what the SQL catalog surfaces as table
@@ -1312,15 +1298,17 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
   private def between(phys: String, lo: Option[Any], hi: Option[Any]): Seq[sources.Filter] =
     lo.map(sources.GreaterThanOrEqual(phys, _)).toSeq ++ hi.map(sources.LessThanOrEqual(phys, _))
 
-  /** The entries no filter proves [[disjoint]] — every read route's
-    * manifest file prune. */
+  /** The entries no filter proves [[disjoint]] — the manifest file
+    * prune of the readers that pick their entries before planning
+    * (readRange, readWhere, countWhere). */
   private def survivors(m: Manifest, entries: Seq[Entry],
       filters: Seq[sources.Filter]): Seq[Entry] =
     entries.filter(e => !filters.exists(disjoint(_, m, e)))
 
-  /** THE pruning proof, shared by every read route (the v1 file index,
-    * the catalog's columnar scan and its runtime re-prune, readRange,
-    * readWhere, countWhere): true only when `f` PROVES no row of entry
+  /** THE pruning proof, shared by every read route ([[indexOf]]'s file
+    * index — every planned read, the catalog's columnar scan and its
+    * runtime re-prune included — and readRange, readWhere,
+    * countWhere): true only when `f` PROVES no row of entry
     * `e` can satisfy it, off the entry's encoded [min,max] and null
     * counts ([[statOf]]). Attribute names are PHYSICAL. Literals encode
     * through [[ordEncode]] — timestamps floor to the millisecond the
@@ -1878,16 +1866,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     // both bounds or neither: a half-encoded pair can't order safely
     val ok = mn.isDefined && mx.isDefined
     val colStats = present.zipWithIndex.flatMap { case (c, i) =>
-      val base = 5 + 3 * i
-      val (smn, smx) = (ordEncode(r.get(base + 1)), ordEncode(r.get(base + 2)))
-      val sNulls = Some(rows - r.getLong(base))
-      // an all-null file has no orderable bounds but a fully-known
-      // null count — still prunable by null predicates and countable
-      if (smn.isDefined && smx.isDefined)
-        Some(phys(c) -> ColStat(kindOf(schema(c).dataType), smn, smx, sNulls))
-      else if (sNulls.contains(rows))
-        Some(phys(c) -> ColStat(kindOf(schema(c).dataType), None, None, sNulls))
-      else None
+      colStatAt(r, 5 + 3 * i, rows, kindOf(schema(c).dataType)).map(phys(c) -> _)
     }.toMap
     val bloom =
       if (keyBloomBits == 0) None
@@ -1897,6 +1876,20 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       if (ok) kind else "opaque",
       if (ok) mn else None, if (ok) mx else None, colStats,
       nulls = Some(rows - r.getLong(2)), bloom = bloom, bytes = bytes)
+  }
+
+  /** One column's [[ColStat]] from a file's (non-nulls, min, max)
+    * aggregate at `at`: bounded when both bounds encode; all-null when
+    * every row is null — no orderable bounds, but a fully-known null
+    * count, still prunable by null predicates and countable; else none
+    * (a half-encoded pair can't order safely). */
+  private def colStatAt(r: org.apache.spark.sql.Row, at: Int, rows: Long,
+      kind: String): Option[ColStat] = {
+    val (mn, mx) = (ordEncode(r.get(at + 1)), ordEncode(r.get(at + 2)))
+    val nulls = Some(rows - r.getLong(at))
+    if (mn.isDefined && mx.isDefined) Some(ColStat(kind, mn, mx, nulls))
+    else if (nulls.contains(rows)) Some(ColStat(kind, None, None, nulls))
+    else None
   }
 
   /** Test seam: lets a spec fabricate the PRE-GUARD legacy shape (a
@@ -2794,17 +2787,12 @@ object SnapshotTable {
   final case class Widen(name: String, to: DataType) extends SchemaChange
 
   /** What [[SnapshotTable.batchScanParts]] hands the native columnar
-    * scan: the files' PHYSICAL schema, the column mapping (logical →
-    * physical) for name translation, the manifest-pruned live file
-    * statuses, the LOGICAL columns runtime filters can prune on, and
-    * the driver-side re-prune closure (static pushed filters ∪ runtime
-    * filters → kept statuses). */
+    * scan: the snapshot's unpruned [[GraftFileIndex]], the files'
+    * PHYSICAL schema, the column mapping (logical → physical) for name
+    * translation, and the LOGICAL columns runtime filters can prune on. */
   final case class BatchParts(
-      physSchema: StructType, colmap: Map[String, String],
-      files: Seq[org.apache.hadoop.fs.FileStatus],
-      prunable: Seq[String],
-      refilter: Array[org.apache.spark.sql.sources.Filter] =>
-        Seq[org.apache.hadoop.fs.FileStatus])
+      index: GraftFileIndex, physSchema: StructType,
+      colmap: Map[String, String], prunable: Seq[String])
 
   /** The key column RECORDED at `dir`'s newest committed manifest
     * (`#key` header) — the catalog-resolution probe: a table path alone
@@ -2817,33 +2805,38 @@ object SnapshotTable {
   }
 }
 
-/** The manifest-backed [[org.apache.spark.sql.execution.datasources.FileIndex]]
-  * behind every `SnapshotTable` read ([[SnapshotTable.scan]],
-  * [[SnapshotTable.read]], the ranged and keyed readers, the change
-  * feed's sides, a write's survivor pass): Spark's planner hands `listFiles` the
-  * data filters it pushed toward the scan; they translate to
-  * `sources.Filter`s exactly as Spark translates pushdown for any data
-  * source, and `keep` — the table's one pruning proof
-  * (`SnapshotTable.disjoint`, the same one the catalog's columnar scan,
-  * readRange and readWhere use) — returns the files no filter rules
-  * out. An untranslatable filter proves nothing (conservative keep),
-  * and Spark still evaluates every filter on the rows, so pruning is a
-  * pure optimization.
+/** The manifest-backed file index behind every `SnapshotTable` read:
+  * [[SnapshotTable.scan]], [[SnapshotTable.read]], the ranged and keyed
+  * readers, the change feed's sides, a write's survivor pass, and the
+  * SQL catalog's native columnar scan (Spark's `ParquetScan`, which
+  * takes a [[PartitioningAwareFileIndex]] — hence the base class).
+  * Spark's planner hands `listFiles` the data filters it pushed toward
+  * the scan; they translate to `sources.Filter`s exactly as Spark
+  * translates pushdown for any data source, and `keep` — the table's
+  * one pruning proof (`SnapshotTable.disjoint`) over PHYSICAL names —
+  * returns the files no filter rules out. [[narrowed]] applies the same
+  * prune ahead of planning: the columnar scan's pushed filters, then a
+  * runtime filter's narrower index over static ∪ runtime filters. An
+  * untranslatable filter proves nothing (conservative keep), and Spark
+  * still evaluates every filter on the rows, so pruning is a pure
+  * optimization.
   *
   * Equal by (root, set of file paths) — the rule Spark's own
   * `InMemoryFileIndex` uses — so two reads of the same files plan
   * `sameResult`: a persisted read serves the next one from the cache,
   * and exchange reuse sees through separate reads. The files are
   * immutable, so the same paths always hold the same rows. */
-private[graft] final class GraftFileIndex(
+final class GraftFileIndex(
+    spark: SparkSession,
     private val root: org.apache.hadoop.fs.Path,
     files: Seq[org.apache.hadoop.fs.FileStatus],
     keep: Seq[org.apache.spark.sql.sources.Filter] => Seq[org.apache.hadoop.fs.FileStatus])
-  extends org.apache.spark.sql.execution.datasources.FileIndex {
+  extends PartitioningAwareFileIndex(spark, Map.empty, None, NoopCache) {
 
+  import org.apache.hadoop.fs.{FileStatus, Path}
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.execution.datasources.PartitionDirectory
+  import org.apache.spark.sql.execution.datasources.{PartitionDirectory, PartitionSpec}
 
   /** TWO paths on purpose: Spark's v1 `INSERT INTO` path
     * (InsertIntoHadoopFsRelationCommand) would otherwise write parquet
@@ -2853,12 +2846,22 @@ private[graft] final class GraftFileIndex(
     * relations with UNSUPPORTED_INSERT.MULTI_PATH, so a second
     * self-describing sentinel path turns that silent loss into a loud
     * analysis error naming the right route. Reads never consult
-    * rootPaths — [[listFiles]] serves the scan — so this is
+    * rootPaths — every member below serves from `files` — so this is
     * write-rejection only. */
-  override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
-    Seq(root, new org.apache.hadoop.fs.Path(root,
+  override def rootPaths: Seq[Path] =
+    Seq(root, new Path(root,
       "_graft_inserts_not_supported_use_df.write.format_graft-snapshot"))
-  override def partitionSchema: StructType = StructType(Nil)
+  override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
+  // the base class serves allFiles (and through it listFiles,
+  // inputFiles and sizeInBytes) by looking each rootPath up in
+  // leafDirToChildrenFiles, where a table root resolves zero files:
+  // data files sit under data/<commit-uuid>/. Every such member is
+  // served from the manifest's statuses instead.
+  override def allFiles(): Seq[FileStatus] = files
+  override protected lazy val leafFiles: scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
+    scala.collection.mutable.LinkedHashMap(files.map(f => f.getPath -> f): _*)
+  override protected lazy val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+    files.groupBy(_.getPath.getParent).map { case (d, fs) => d -> fs.toArray }
   override def sizeInBytes: Long = files.map(_.getLen).sum
   override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
   override def refresh(): Unit = () // snapshot-pinned: immutable file set
@@ -2869,7 +2872,13 @@ private[graft] final class GraftFileIndex(
     Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
   }
 
-  private lazy val paths: Set[org.apache.hadoop.fs.Path] = files.map(_.getPath).toSet
+  /** The index over just the files `filters` (PHYSICAL names) keep; its
+    * own listings prune on top of them. */
+  def narrowed(filters: Seq[org.apache.spark.sql.sources.Filter]): GraftFileIndex =
+    if (filters.isEmpty) this
+    else new GraftFileIndex(spark, root, keep(filters), more => keep(filters ++ more))
+
+  private lazy val paths: Set[Path] = files.map(_.getPath).toSet
 
   override def equals(other: Any): Boolean = other match {
     case o: GraftFileIndex => root == o.root && paths == o.paths

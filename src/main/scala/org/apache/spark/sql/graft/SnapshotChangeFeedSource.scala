@@ -424,6 +424,9 @@ final class SnapshotChangeFeedSource(
     * table's head. */
   private var offered: Long = startVersion
 
+  /** The committed head the latest offer resolved. */
+  private var head: Option[Long] = None
+
   override val schema: StructType = SnapshotChangeFeedSource.feedSchema(tbl)
 
   override def getOffset: Option[Offset] = {
@@ -434,7 +437,8 @@ final class SnapshotChangeFeedSource(
     // would make getBatch fail on a version that does not exist — then
     // fail identically on every restart, wedging the stream. See
     // SnapshotTable.nextFeedOffer for the window/gap resolution.
-    val capped = tbl.nextFeedOffer(offered, maxVersionsPerBatch).getOrElse(return None)
+    val (capped, newest) = tbl.nextFeedOffer(offered, maxVersionsPerBatch).getOrElse(return None)
+    head = Some(newest)
     if (capped > offered) offered = capped
     // ALWAYS offer (never gate on startVersion): on recovery this
     // instance's startVersion is the current head, but the engine's
@@ -480,9 +484,13 @@ final class SnapshotChangeFeedSource(
       : org.apache.spark.sql.connector.read.streaming.ReadLimit =
     org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
 
+  /** The head the same trigger's [[latestOffset]] resolved — Spark calls
+    * this right after it, and reads the result only for the query's
+    * progress report (`SourceProgress.latestOffset`), so it re-probes
+    * nothing. */
   override def reportLatestOffset()
       : org.apache.spark.sql.connector.read.streaming.Offset =
-    tbl.currentVersion.map(LongOffset(_)).orNull
+    head.map(LongOffset(_)).orNull
 
   override def latestOffset(
       startOffset: org.apache.spark.sql.connector.read.streaming.Offset,

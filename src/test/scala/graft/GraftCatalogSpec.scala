@@ -411,8 +411,8 @@ class GraftCatalogSpec extends AnyFunSuite {
     val scan = sb.build()
     assert(scan.isInstanceOf[org.apache.spark.sql.graft.GraftColumnarScan],
       s"a DV-free snapshot must take the native columnar route, got ${scan.getClass}")
-    assert(tbl.lastBatchKept >= 1 && tbl.lastBatchKept < 4,
-      s"pushed key range should keep <4 of 4 files, kept ${tbl.lastBatchKept}")
+    assert(tbl.lastListedFiles >= 1 && tbl.lastListedFiles < 4,
+      s"pushed key range should keep <4 of 4 files, kept ${tbl.lastListedFiles}")
   }
 
   test("catalog SELECT plans the native columnar scan (BatchScan + ColumnarToRow + codegen); DV snapshots keep the masked route") {
@@ -460,10 +460,10 @@ class GraftCatalogSpec extends AnyFunSuite {
     // dynamic-pruning rule to inject the selective join side
     assert(rt.filterAttributes().map(_.describe()).contains("k"))
     // two keys in one file's range: the runtime re-prune must keep <4 files
-    tbl.lastBatchKept = -1
+    tbl.lastListedFiles = -1
     rt.filter(Array(org.apache.spark.sql.graft.GraftSqlShim.inPredicate(
       "k", Seq(5L, 17L), org.apache.spark.sql.types.LongType)))
-    val kept = tbl.lastBatchKept
+    val kept = tbl.lastListedFiles
     assert(kept >= 1 && kept < 4,
       s"an IN(5,17) runtime filter should keep 1 of 4 key-clustered files, kept $kept")
     // and the shrunken scan still plans and serves (the partitions come

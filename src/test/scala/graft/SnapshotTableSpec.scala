@@ -866,6 +866,20 @@ class SnapshotTableSpec extends AnyFunSuite {
       ("20-key IN", col("k").isin(twenty: _*), None),
       ("startsWith", col("src").startsWith("s09"), None),
       ("sub-ms timestamp", col("ts") >= lit(tsBound), Some(tbl.readWhere("ts", Some(tsBound), None))))
+    // the files the catalog's columnar scan plans into its input
+    // partitions for `static` pushed filters, after a `runtime` re-prune
+    def columnarFiles(static: Array[org.apache.spark.sql.sources.Filter],
+        runtime: Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
+          Array.empty): Seq[String] = {
+      val sb = new graft.incremental.GraftScanBuilder(tbl, None, tbl.schema)
+      sb.pushFilters(static)
+      val scan = sb.build()
+      if (runtime.nonEmpty) scan
+        .asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering].filter(runtime)
+      scan.toBatch.planInputPartitions().toSeq.flatMap(
+        _.asInstanceOf[org.apache.spark.sql.execution.datasources.FilePartition].files
+          .map(_.filePath.toPath.toString)).distinct
+    }
     // the full table, read by path: the expected rows come from no
     // route under test
     val all = spark.read.schema(tbl.schema).parquet(tbl.read().inputFiles: _*)
@@ -880,18 +894,30 @@ class SnapshotTableSpec extends AnyFunSuite {
       assert(tbl.lastListedFiles == listed,
         s"$name: read() listed ${tbl.lastListedFiles}, scan() $listed")
       assert(readRows == scanned, s"$name: read() rows differ")
-      val parts = tbl.batchScanParts(None, pushed(p)).get
-      assert(tbl.lastBatchKept == listed,
-        s"$name: columnar kept ${tbl.lastBatchKept}, scan() listed $listed")
+      val planned = columnarFiles(pushed(p))
+      assert(planned.size == listed && tbl.lastListedFiles == listed,
+        s"$name: columnar planned ${planned.size} (recorded ${tbl.lastListedFiles}), " +
+          s"scan() listed $listed")
       assert(listed < nFiles, s"$name: nothing pruned of $nFiles files")
-      assertSameRows(spark.read.schema(tbl.schema)
-        .parquet(parts.files.map(_.getPath.toString): _*).filter(p), expected)
+      assertSameRows(spark.read.schema(tbl.schema).parquet(planned: _*).filter(p), expected)
       reader.foreach { df =>
         assert(df.inputFiles.length == listed,
           s"$name: dedicated reader opened ${df.inputFiles.length}, scan() $listed")
         assertSameRows(df, expected)
       }
     }
+    // a runtime re-prune — Spark's dynamic filter, an IN on the key
+    // through the scan's filter — plans the files scan() lists for it
+    val inKeys = Seq(5L, 395L)
+    val inRows = collectSorted(tbl.scan().filter(col("k").isin(inKeys: _*)))
+    val inListed = tbl.lastListedFiles
+    assert(inRows.size == 2 && inListed < nFiles)
+    val rtPlanned = columnarFiles(Array.empty, Array(org.apache.spark.sql.graft.GraftSqlShim
+      .inPredicate("k", inKeys, org.apache.spark.sql.types.LongType)))
+    assert(rtPlanned.size == inListed && tbl.lastListedFiles == inListed,
+      s"runtime IN: columnar planned ${rtPlanned.size}, scan() listed $inListed")
+    assertSameRows(spark.read.schema(tbl.schema).parquet(rtPlanned: _*)
+      .filter(col("k").isin(inKeys: _*)), all.filter(col("k").isin(inKeys: _*)))
   }
 
   test("scan() null/prefix/null-safe predicates prune from null counts and string bounds") {
@@ -1455,7 +1481,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val l0 = reader.manifestListings
     reader.read(); reader.currentVersion; reader.recordedKey
     // the change feed's per-trigger offer resolves the head the same way
-    assert(reader.nextFeedOffer(30L, 1L).contains(30L))
+    assert(reader.nextFeedOffer(30L, 1L).contains((30L, 30L)))
     assert(reader.manifestListings - l0 == 0,
       s"quiescent repeated resolves listed ${reader.manifestListings - l0} times")
     // a commit by ANOTHER handle lands at version+1 — the fast path's
@@ -1496,14 +1522,15 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(tbl.oldestCommittedVersion.contains(0L))
     assert(tbl.committedVersionAtOrBelow(-1L).isEmpty)
     // the per-trigger feed offer, same table (committed 0,1,3; gap 2)
-    assert(tbl.nextFeedOffer(0L, 10L).contains(3L), "unbounded window offers the head")
-    assert(tbl.nextFeedOffer(0L, 1L).contains(1L), "window capped on the commit log")
-    assert(tbl.nextFeedOffer(1L, 1L).contains(3L),
+    assert(tbl.nextFeedOffer(0L, 10L).contains((3L, 3L)), "unbounded window offers the head")
+    assert(tbl.nextFeedOffer(0L, 1L).contains((1L, 3L)), "window capped on the commit log")
+    assert(tbl.nextFeedOffer(1L, 1L).contains((3L, 3L)),
       "a gap-swallowed window still advances to the next committed version")
-    assert(tbl.nextFeedOffer(3L, 1L).contains(3L), "caught up: re-offer the head")
-    assert(tbl.nextFeedOffer(99L, 1L).contains(3L),
+    assert(tbl.nextFeedOffer(3L, 1L).contains((3L, 3L)), "caught up: re-offer the head")
+    assert(tbl.nextFeedOffer(99L, 1L).contains((3L, 3L)),
       "cursor ahead of the head: offer must not invent versions (caller won't regress)")
-    assert(tbl.nextFeedOffer(0L, Long.MaxValue).contains(3L), "no overflow on the unbounded default")
+    assert(tbl.nextFeedOffer(0L, Long.MaxValue).contains((3L, 3L)),
+      "no overflow on the unbounded default")
   }
 
   test("manifest byte lengths: scan() and optimize() stat zero files; legacy manifests degrade") {
@@ -1940,24 +1967,32 @@ class SnapshotTableSpec extends AnyFunSuite {
     val dir = freshDir()
     val tbl = new SnapshotTable(spark, dir, "k")
     tbl.create(kv(1L -> "a"))
+    val v0 = tbl.currentVersion
     spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW graft_ins_v USING `graft-snapshot` " +
       s"OPTIONS (path '$dir', `key` 'k')")
-    try {
+    // the same relation reached through a DataFrame's temp view
+    spark.read.format("graft-snapshot").option("key", "k").load(dir)
+      .createOrReplaceTempView("graft_ins_df_v")
+    try for (view <- Seq("graft_ins_v", "graft_ins_df_v")) {
       // Spark's v1 INSERT path writes parquet straight into the
       // relation's root — bytes no manifest references, i.e. rows that
       // silently never appear in a read. The sentinel second rootPath
       // turns that into a loud AnalysisException naming the supported
       // write route instead.
       val e = intercept[org.apache.spark.sql.AnalysisException](
-        spark.sql("INSERT INTO graft_ins_v VALUES (2, 'b')"))
-      assert(e.getMessage.contains("UNSUPPORTED_INSERT"))
-      assert(e.getMessage.contains("graft-snapshot"), "the error should name the write route")
+        spark.sql(s"INSERT INTO $view VALUES (2, 'b')"))
+      assert(e.getMessage.contains("UNSUPPORTED_INSERT"), view)
+      assert(e.getMessage.contains("graft-snapshot"), s"$view: the error should name the write route")
+      assert(tbl.currentVersion == v0, s"$view: a rejected INSERT must not commit")
       assertSameRows(tbl.read(), kv(1L -> "a"))
       // and no rogue file landed at the table root
       val rogue = new java.io.File(dir).listFiles()
         .filter(_.isFile).map(_.getName).filterNot(_.startsWith("."))
-      assert(rogue.isEmpty, s"INSERT left manifest-invisible files: ${rogue.toSeq}")
-    } finally spark.catalog.dropTempView("graft_ins_v")
+      assert(rogue.isEmpty, s"$view: INSERT left manifest-invisible files: ${rogue.toSeq}")
+    } finally {
+      spark.catalog.dropTempView("graft_ins_v")
+      spark.catalog.dropTempView("graft_ins_df_v")
+    }
   }
 
   test("format provider time travel: versionAsOf and timestampAsOf options") {

@@ -21,7 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  7. v1 streaming `execution.streaming.{Source, Sink, Offset}` +
   *     `execution.streaming.runtime.LongOffset`             — SnapshotChangeFeedSource
   *  8. `execution.datasources.{PartitioningAwareFileIndex, NoopCache,
-  *     PartitionSpec}` + `v2.parquet.ParquetScan` apply arity — GraftColumnarScan
+  *     PartitionSpec}` — GraftFileIndex; `v2.parquet.ParquetScan` apply
+  *     arity — GraftColumnarScan
   *  9. `internal.connector.PredicateUtils.toV1`             — runtime filtering
   * 10. `datasources.parquet.ParquetWriteSupport` + the SQLConf parquet
   *     write entries the delta writer populates                — GraftRowLevel
@@ -97,8 +98,8 @@ class ShimCanarySpec extends AnyFunSuite {
 
   test("8: PartitioningAwareFileIndex/NoopCache/PartitionSpec and the ParquetScan arity hold") {
     import org.apache.spark.sql.execution.datasources.{NoopCache, PartitionSpec}
-    // referenced for compile-time presence; emptySpec is the value the
-    // shim's unpartitioned index serves
+    // referenced for compile-time presence; emptySpec is the value
+    // GraftFileIndex, the one unpartitioned index, serves
     assert(PartitionSpec.emptySpec.partitions.isEmpty)
     assert(NoopCache != null)
     // ParquetScan's apply arity is pinned by GraftColumnarScan.scala:71;
