@@ -1,16 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit, lower, regexp_replace, translate, when}
+import org.apache.spark.sql.functions.col
 
-import graft.ops.{Analytics, EventOps, ReferenceOps, RetrievalEval, TextOps, VectorOps, WeeklySummary}
+import graft.ops.Analytics
 
 /** the TPC-H-shaped scan/join/agg analytics surface plus SCD2/point-in-time/data-quality — the `Analytics` slice of the
   * [[SparkEntry]] registry (r19 split: entries verbatim; `queries` and
   * `oracles` pair one-to-one, the driver contract unchanged). */
 private[graft] object AnalyticsQueries {
 
-  import SparkEntry.{AsOf, DeltaFrom, DeltaTo, rentalCte, materializeAndClean, snapshotCtes}
+  import SparkEntry.AsOf
   import EntryOracleGen._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,16 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit, lower, regexp_replace, translate, when}
+import org.apache.spark.sql.functions.col
 
-import graft.ops.{Analytics, EventOps, ReferenceOps, RetrievalEval, TextOps, VectorOps, WeeklySummary}
+import graft.ops.EventOps
 
 /** the event-stream surface over `events`: rollups, sessions, sketches, as-of joins, funnels — the `Events` slice of the
   * [[SparkEntry]] registry (r19 split: entries verbatim; `queries` and
   * `oracles` pair one-to-one, the driver contract unchanged). */
 private[graft] object EventsQueries {
 
-  import SparkEntry.{AsOf, DeltaFrom, DeltaTo, rentalCte, materializeAndClean, snapshotCtes}
   import EntryOracleGen._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

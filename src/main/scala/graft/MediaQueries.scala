@@ -1,17 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit, lower, regexp_replace, translate, when}
+import org.apache.spark.sql.functions.{col, regexp_replace, translate}
 
-import graft.ops.{Analytics, EventOps, ReferenceOps, RetrievalEval, TextOps, VectorOps, WeeklySummary}
 
 /** the multimodal surface over synthetic media payloads: decode tiers, dedup, perceptual near-dup — the `Media` slice of the
   * [[SparkEntry]] registry (r19 split: entries verbatim; `queries` and
   * `oracles` pair one-to-one, the driver contract unchanged). */
 private[graft] object MediaQueries {
 
-  import SparkEntry.{AsOf, DeltaFrom, DeltaTo, rentalCte, materializeAndClean, snapshotCtes}
-  import EntryOracleGen._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

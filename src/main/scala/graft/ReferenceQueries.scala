@@ -1,16 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit, lower, regexp_replace, translate, when}
+import org.apache.spark.sql.functions.{col, lit, when}
 
-import graft.ops.{Analytics, EventOps, ReferenceOps, RetrievalEval, TextOps, VectorOps, WeeklySummary}
+import graft.ops.{ReferenceOps, WeeklySummary}
 
 /** the reference pipeline's own surface: weekly summary snapshots, CDC delta/watermark probes, and the upsert-round family over the snapshot store — the `Reference` slice of the
   * [[SparkEntry]] registry (r19 split: entries verbatim; `queries` and
   * `oracles` pair one-to-one, the driver contract unchanged). */
 private[graft] object ReferenceQueries {
 
-  import SparkEntry.{AsOf, DeltaFrom, DeltaTo, rentalCte, materializeAndClean, snapshotCtes}
+  import SparkEntry.{AsOf, DeltaFrom, DeltaTo, rentalCte, materializeAndClean}
   import EntryOracleGen._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,17 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit, lower, regexp_replace, translate, when}
+import org.apache.spark.sql.functions.{col, lit, lower, regexp_replace}
 
-import graft.ops.{Analytics, EventOps, ReferenceOps, RetrievalEval, TextOps, VectorOps, WeeklySummary}
 
 /** the SnapshotTable/SQL-catalog operational surface: pruned reads, change feeds, pure-SQL DML/DDL, maintenance — the `Snapshot` slice of the
   * [[SparkEntry]] registry (r19 split: entries verbatim; `queries` and
   * `oracles` pair one-to-one, the driver contract unchanged). */
 private[graft] object SnapshotQueries {
 
-  import SparkEntry.{AsOf, DeltaFrom, DeltaTo, rentalCte, materializeAndClean, snapshotCtes}
-  import EntryOracleGen._
+  import SparkEntry.materializeAndClean
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -4,9 +4,8 @@ import java.sql.Timestamp
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit, lower, regexp_replace, translate, when}
 
-import graft.ops.{Analytics, EventOps, ReferenceOps, RetrievalEval, TextOps, VectorOps, WeeklySummary}
+import graft.ops.WeeklySummary
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *

@@ -1,16 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit, lower, regexp_replace, translate, when}
+import org.apache.spark.sql.functions.{col, concat, lit, when}
 
-import graft.ops.{Analytics, EventOps, ReferenceOps, RetrievalEval, TextOps, VectorOps, WeeklySummary}
+import graft.ops.{RetrievalEval, TextOps, VectorOps}
 
 /** the text/LLM-data-pipeline surface: doc stats/quality, dedup families, sampling/splits, retrieval, BPE, corpus curation — the `Text` slice of the
   * [[SparkEntry]] registry (r19 split: entries verbatim; `queries` and
   * `oracles` pair one-to-one, the driver contract unchanged). */
 private[graft] object TextQueries {
 
-  import SparkEntry.{AsOf, DeltaFrom, DeltaTo, rentalCte, materializeAndClean, snapshotCtes}
+  import SparkEntry.materializeAndClean
   import EntryOracleGen._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

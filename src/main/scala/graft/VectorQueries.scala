@@ -1,16 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit, lower, regexp_replace, translate, when}
+import org.apache.spark.sql.functions.col
 
-import graft.ops.{Analytics, EventOps, ReferenceOps, RetrievalEval, TextOps, VectorOps, WeeklySummary}
+import graft.ops.{TextOps, VectorOps}
 
 /** the embedding/ANN surface over `embeddings`: similarity search, near-dup, clustering, the persisted vector index — the `Vector` slice of the
   * [[SparkEntry]] registry (r19 split: entries verbatim; `queries` and
   * `oracles` pair one-to-one, the driver contract unchanged). */
 private[graft] object VectorQueries {
 
-  import SparkEntry.{AsOf, DeltaFrom, DeltaTo, rentalCte, materializeAndClean, snapshotCtes}
+  import SparkEntry.materializeAndClean
   import EntryOracleGen._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

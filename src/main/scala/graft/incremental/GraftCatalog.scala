@@ -416,7 +416,7 @@ private[graft] final class GraftTable(tbl: SnapshotTable, ident: String,
       s"no snapshot table at ${tbl.location}"))
     val pred = filters.flatMap(GraftFilters.toColumn(_))
       .foldLeft(lit(true))(_ && _)
-    tbl.delete(tbl.scanAt(Some(v)).filter(pred).select(col(tbl.keyColumn)).distinct(),
+    tbl.delete(tbl.scanAt(Some(v)).filter(pred).select(col(tbl.keyColumn)),
       expectedVersion = Some(v))
   }
 }

@@ -104,16 +104,20 @@ import org.apache.spark.sql.types._
   * (`repartitionByRange`) so future merges prune tightly. Work ∝
   * touched files + batch — at 100 TB with key-clustered files
   * (time-ordered facts, week-keyed summaries) a batch touches a sliver
-  * of the table. The per-file test runs against the batch's distinct
-  * KEY SET when it is small enough to collect (≤ [[keyPruner]]'s
-  * `pruneSetCap`, exact: a file is touched iff it can hold at least one
-  * batch key), and against a few dozen range-clustered SUB-RANGES of
-  * the key set past the cap — never a single [min,max] envelope, whose
+  * of the table. Every keyed write and [[readKeys]] starts from ONE
+  * key profile ([[batchKeys]]): the batch's distinct table-typed keys,
+  * collected in one job while they number at most `pruneSetCap`. The
+  * per-file test then runs against that exact KEY SET (a file is
+  * touched iff it can hold at least one batch key); only a key set
+  * past the cap takes the uncollected route, which tests a few dozen
+  * range-clustered SUB-RANGES of the set ([[keyPruner]]) so driver
+  * memory stays bounded — never a single [min,max] envelope, whose
   * prune silently degrades to a full-table rewrite when one backdated
   * key in an otherwise-fresh batch widens the envelope across the key
   * domain (the late-CDC-update shape). Pruning is exact for
-  * numeric/date/timestamp/string keys; other key types degrade to
-  * "always overlaps" (correct, just unpruned). Writes may ADD nullable
+  * numeric/date/timestamp/string keys; other key types, and a set
+  * holding an unencodable key such as NaN, degrade to "always
+  * overlaps" (correct, just unpruned). Writes may ADD nullable
   * columns ([[evolveSchema]]): pre-evolution files stay untouched and
   * read the new column as null; type changes and dropped columns are
   * rejected loudly.
@@ -151,12 +155,13 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
   /** Opt-in per-file KEY BLOOM ([[KeyBloom]]): when > 0, every staged
     * file records a `keyBloomBits`-bit bloom over `xxhash64(key)` in
     * the manifest (one extra agg column in the same stats pass), and
-    * the exact key-set prune tier consults it — a scattered point
-    * batch skips range-overlapping files that never held its keys.
-    * Files without a bloom (older commits, non-bloom handles) stay
-    * conservatively range-pruned only. Size for ~10 bits per key per
-    * file (~1% fpp); the bits live inline in the manifest, so this is
-    * for stores whose file count × bloom size fits a manifest budget. */
+    * the exact key-set prune ([[exactKeyPruner]]) consults it — a
+    * scattered point batch skips range-overlapping files that never
+    * held its keys. Files without a bloom (older commits, non-bloom
+    * handles) stay conservatively range-pruned only. Size for ~10 bits
+    * per key per file (~1% fpp); the bits live inline in the manifest,
+    * so this is for stores whose file count × bloom size fits a
+    * manifest budget. */
   require(keyBloomBits == 0 || (keyBloomBits >= 64 && keyBloomBits % 64 == 0),
     s"keyBloomBits must be 0 (off) or a positive multiple of 64, got $keyBloomBits")
 
@@ -1031,9 +1036,11 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
 
   /** Keyed POINT-LOOKUP read with manifest-level file pruning: only
     * data files that can hold at least one requested key are handed to
-    * the scan (the same key-set/sub-range prune [[merge]] and
-    * [[delete]] use — the read-side twin of the sparse-batch
-    * copy-on-write), then an exact semi-join keeps the requested rows.
+    * the scan (the keys take [[delete]]'s one profile, [[batchKeys]],
+    * and its prune — the read-side twin of the sparse-batch
+    * copy-on-write), then an exact semi-join keeps the requested rows:
+    * against the collected keys as a local frame (no shuffle), or, for
+    * a key set past `pruneSetCap`, against the keys' `distinct`.
     * "Fetch these doc_ids" at 100 TB opens the handful of files whose
     * key range holds them — even when the ids are scattered across the
     * whole key domain, where the single-envelope [[readRange]] would
@@ -1042,9 +1049,14 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     val m = requireManifest
     require(keys.schema.fieldNames.contains(key),
       s"readKeys frame must carry the table key column $key")
+    val keyType = m.schema(key).dataType
     val ks = keys.select(col(key))
-    val entries = m.entries.filter(keyPruner(ks, m.schema(key).dataType))
-    readEntries(m, entries).join(ks.distinct(), Seq(key), "left_semi")
+    batchKeys(None, Some(ks), keyType) match {
+      case Some(b) => readEntries(m, m.entries.filter(exactKeyPruner(b.keys, keyType)))
+        .join(localKeyFrame(b.keys, keyType), Seq(key), "left_semi")
+      case None => readEntries(m, m.entries.filter(keyPruner(ks, keyType)))
+        .join(ks.distinct(), Seq(key), "left_semi")
+    }
   }
 
   /** CATALYST-INTEGRATED scan: the snapshot exposed through a custom
@@ -1484,62 +1496,44 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     case _ => false
   }
 
-  /** [[keyPruner]] tier thresholds — the set cap is a `private[graft]
-    * var` so a spec can force the sub-range tier without a 100k-key
-    * batch. */
+  /** [[batchKeys]]'s collect cap — past it a key set takes the
+    * uncollected route. Settable, so a spec can force that route
+    * without a 100k-key batch. */
   private[graft] var pruneSetCap: Long = 100000L
   private val pruneRangeBuckets = 64
 
-  /** Per-file overlap test against the source batch's KEY SET — the
-    * prune [[keyedWrite]]'s uncollected route partitions entries with
-    * ([[exactKeyPruner]] serves the collected route). Two precision
-    * tiers, both batch-bounded:
-    *
-    *   - ≤ [[pruneSetCap]] distinct keys: collect them, encode, sort; a file
-    *     is touched iff a binary search finds at least one batch key
-    *     inside its [min,max] — EXACT, so an adversarial batch of two
-    *     keys at opposite ends of the key domain (a late CDC update, a
-    *     mixed-age forget) touches exactly the two files holding those
-    *     keys, not everything between them. Files carrying a KEY BLOOM
-    *     (`keyBloomBits` handles) prune further: in-range keys the
-    *     bloom proves absent touch nothing — the hole range stats
-    *     cannot close (a false positive costs only the rewrite range
-    *     pruning would have paid).
-    *   - past the cap: [[pruneRangeBuckets]] range-clustered sub-ranges of the
-    *     distinct keys (one shuffle of the bare keys + a bucket-count
-    *     collect); a file is touched iff it overlaps some sub-range.
-    *     Between-key gaps WITHIN a bucket are the only imprecision,
-    *     and a batch that big rewrites proportionally anyway.
-    *
-    * Null keys are dropped first (an anti-join never matches a null
-    * key, so no existing row can be displaced by one). Any unencodable
-    * non-null key (e.g. NaN) degrades the whole test to "touch
+  /** `keys`' key column normalized to the table's key type — the one
+    * form the profile, the sub-range pruner and the over-cap doomed set
+    * take. The stats encodings AND the bloom hashes were computed over
+    * table-typed values, so an Int-typed batch against a Long-keyed
+    * table must compare (and hash) as Longs. Null keys are dropped (an
+    * anti- or semi-join never matches one), and so is a cross-typed key
+    * its cast changes (1.5 against a Long key): the coerced join the
+    * caller's frame would run never matches it either. */
+  private def tableKeys(keys: DataFrame, keyType: DataType): DataFrame = {
+    val typed = col(key).cast(keyType)
+    val kept = if (keys.schema(key).dataType == keyType) col(key).isNotNull else typed === col(key)
+    keys.where(kept).select(typed.as(key))
+  }
+
+  /** SUB-RANGE prune for a key set past [[pruneSetCap]] — the
+    * uncollected route of [[keyedWrite]] and [[readKeys]]:
+    * [[pruneRangeBuckets]] range-clustered sub-ranges of the distinct
+    * keys (one shuffle of the bare keys + a bucket-count collect); a
+    * file is touched iff it overlaps some sub-range. Between-key gaps
+    * WITHIN a bucket are the only imprecision, and a batch that big
+    * rewrites proportionally anyway. An opaque key kind or an
+    * unencodable bound (e.g. NaN) degrades the whole test to "touch
     * everything" — conservative, matching the stats contract. */
   private def keyPruner(keys: DataFrame,
       tableKeyType: DataType): Entry => Boolean = {
     val kind = kindOf(tableKeyType)
     if (kind == "opaque") return _ => true
-    // normalize the batch to the TABLE's key type first: the stats
-    // encodings AND the bloom hashes were computed over table-typed
-    // values, so an Int-typed batch against a Long-keyed table must
-    // compare (and hash) as Longs — pruning off the batch frame's own
-    // type would xxhash64 different bytes and wrongly skip files
-    val ks = keys.select(col(key).cast(tableKeyType)).na.drop(Seq(key)).distinct()
-    // ONE job decides the tier AND collects the exact set when it fits:
-    // cap+1 rows of bare keys — batch-bounded driver traffic, and the
-    // overflow row is the "too big, go sub-range" signal
-    val head = ks.limit(pruneSetCap.toInt + 1).collect()
-    if (head.isEmpty) return _ => false
-    if (head.length <= pruneSetCap) {
-      val pts = head.flatMap { r => val v = r.get(0); ordEncode(v).map(e => (e, v)) }
-      if (pts.length < head.length) return _ => true // unencodable key: conservative
-      return exactKeyPruner(pts, kind, tableKeyType)
-    }
-    // SUB-RANGE tier: [lo, hi] sub-ranges of the batch's key set,
-    // encoded — disjoint by construction (blooms are point tests and
-    // do not apply to ranges)
+    // [lo, hi] sub-ranges of the batch's key set, encoded — disjoint by
+    // construction (blooms are point tests and do not apply to ranges)
     val enc: Array[(Option[String], Option[String])] =
-      ks.repartitionByRange(pruneRangeBuckets, col(key))
+      tableKeys(keys, tableKeyType).distinct()
+        .repartitionByRange(pruneRangeBuckets, col(key))
         .groupBy(org.apache.spark.sql.functions.spark_partition_id())
         .agg(min(col(key)).as("mn"), max(col(key)).as("mx"))
         .collect().map(r => (ordEncode(r.get(1)), ordEncode(r.get(2))))
@@ -1564,15 +1558,24 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     }
   }
 
-  /** EXACT pruning tier over an already-collected (distinct, non-null,
-    * encodable, ≤ [[pruneSetCap]]) key set: a file is touched iff at
-    * least one batch key falls inside its [min,max] — and, when the
-    * file carries a key bloom, iff the bloom also says one of those
-    * in-range keys may be present (a range-overlapping file that never
-    * held the batch's keys prunes here; range stats alone cannot). */
-  private def exactKeyPruner(pts: Array[(String, Any)], kind: String,
+  /** EXACT prune over a collected (distinct, non-null, table-typed)
+    * key set: a file is touched iff at least one key falls inside its
+    * [min,max] — EXACT, so an adversarial batch of two keys at opposite
+    * ends of the key domain (a late CDC update, a mixed-age forget)
+    * touches exactly the two files holding those keys, not everything
+    * between them — and, when the file carries a key bloom, iff the
+    * bloom also says one of those in-range keys may be present (a
+    * range-overlapping file that never held the batch's keys prunes
+    * here; range stats alone cannot). A set of an opaque key kind, or
+    * holding an unencodable key (e.g. NaN), is unprunable: every file
+    * is touched. */
+  private def exactKeyPruner(keys: Array[Any],
       tableKeyType: DataType): Entry => Boolean = {
-    if (pts.isEmpty) return _ => false
+    if (keys.isEmpty) return _ => false
+    val kind = kindOf(tableKeyType)
+    if (kind == "opaque") return _ => true
+    val pts = keys.flatMap(v => ordEncode(v).map(e => (e, v)))
+    if (pts.length < keys.length) return _ => true
     val sorted = pts.sortWith((a, b) => ordLt(kind, a._1, b._1))
     val encs = sorted.map(_._1)
     lazy val hashes = sorted.map(p => KeyBloom.hashOf(p._2, tableKeyType))
@@ -1601,65 +1604,56 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     }
   }
 
-  /** ONE-JOB batch key profile (guide §5: every separate action is a
-    * full driver round-trip — plan, codegen, schedule, collect): the
-    * distinct keys of a keyed write's upsert and delete sides (either
-    * may be absent) with their upsert multiplicity, gathered in a
-    * single `groupBy(key)` job, serve everything [[keyedWrite]] would
+  /** THE key profile of every keyed operation — [[keyedWrite]]'s upsert
+    * and delete sides (either may be absent) and [[readKeys]]' keys (a
+    * delete side only). ONE `groupBy(key)` job (guide §5: every
+    * separate action is a full driver round-trip — plan, codegen,
+    * schedule, collect) gathers the distinct table-typed keys with
+    * their upsert multiplicity, and serves everything the caller would
     * otherwise pay SEPARATE jobs for — the key-uniqueness guard
-    * (`upRows` vs `upDistinct`), the touched-file pruner (`pts`), the
-    * deletion-vector split (`upPts`), the doomed sidecar key set
-    * (`delOnly`), and the survivors anti-join's build side
-    * ([[localKeyFrame]] over `pts`). `None` ⇒ the set overflows
-    * [[pruneSetCap]], a side's key type needs a cast, the key kind is
-    * opaque, or a key is unencodable — [[keyedWrite]] then runs its
-    * uncollected route (value-identical, just more round-trips; big
-    * batches amortize them). */
-  private final case class BatchKeys(upRows: Long, upDistinct: Long,
-      pts: Array[(String, Any)], upPts: Array[(String, Any)],
-      delOnly: Array[Any])
+    * (`upRows` vs the distinct `upKeys`), the touched-file pruner
+    * ([[exactKeyPruner]] over `keys`), the deletion-vector split
+    * (`upKeys`), the doomed sidecar key set (`delOnly`), and the
+    * anti-/semi-join build side ([[localKeyFrame]] over `keys`). `None`
+    * ⇔ the distinct key set overflows [[pruneSetCap]]: the caller then
+    * runs its uncollected route (value-identical, just more
+    * round-trips; big batches amortize them), which keeps driver
+    * memory bounded. */
+  private final case class BatchKeys(upRows: Long, keys: Array[Any],
+      upKeys: Array[Any], delOnly: Array[Any])
 
   private def batchKeys(up: Option[DataFrame], del: Option[DataFrame],
       tableKeyType: DataType): Option[BatchKeys] = {
-    if (kindOf(tableKeyType) == "opaque") return None
-    // the no-cast gate keeps the combined counts exactly the separate
-    // jobs' counts: the guard counted PRE-cast distinct keys while the
-    // pruner counted post-cast — only an identity cast makes them one
-    if ((up ++ del).exists(_.schema(key).dataType != tableKeyType)) return None
+    // the upsert side is table-typed already ([[evolveSchema]] rejects
+    // a key type change) and keeps its null keys: the uniqueness guard
+    // counts a null-keyed row, but never as a distinct key
     val tagged = (up.map(_.select(col(key), lit(1L).as("__up"))) ++
-      del.map(_.select(col(key), lit(0L).as("__up")))).reduce(_ unionByName _)
+      del.map(tableKeys(_, tableKeyType).withColumn("__up", lit(0L))))
+      .reduce(_ unionByName _)
     val g = tagged.groupBy(col(key)).agg(sum(col("__up")).as("__c"))
       .limit(pruneSetCap.toInt + 1).collect()
     if (g.length > pruneSetCap) return None
     var upRows = 0L
-    var upDistinct = 0L
-    val pts = Array.newBuilder[(String, Any)]
-    val upPts = Array.newBuilder[(String, Any)]
+    val keys = Array.newBuilder[Any]
+    val upKeys = Array.newBuilder[Any]
     val delOnly = Array.newBuilder[Any]
-    var encodable = true
     g.foreach { r =>
       val v = r.get(0)
       val c = r.getLong(1)
       upRows += c
       if (v != null) {
-        if (c > 0) upDistinct += 1
-        ordEncode(v) match {
-          case Some(e) =>
-            pts += ((e, v))
-            if (c > 0) upPts += ((e, v)) else delOnly += v
-          case None => encodable = false
-        }
+        keys += v
+        if (c > 0) upKeys += v else delOnly += v
       }
     }
-    if (!encodable) return None
-    Some(BatchKeys(upRows, upDistinct, pts.result(), upPts.result(),
-      delOnly.result()))
+    Some(BatchKeys(upRows, keys.result(), upKeys.result(), delOnly.result()))
   }
 
   /** The collected exact key set as a LocalRelation-backed frame — the
-    * anti-join build side / DV sidecar source WITHOUT re-running the
-    * batch subtree (its cache-read + distinct shuffle broadcast stages)
-    * in every pass that consumes it; a LocalTableScan broadcast builds
+    * anti-join build side / DV sidecar source / [[readKeys]] semi-join
+    * build side WITHOUT re-running the batch subtree (its cache-read +
+    * distinct shuffle broadcast stages) in every pass that consumes
+    * it; a LocalTableScan broadcast builds
     * on the driver with zero stages. Bounded by [[pruneSetCap]] rows of
     * bare keys. Dropping null keys is anti-join/semi-join-invariant:
     * a null right-side key never equals anything. */
@@ -1943,7 +1937,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
   private[graft] var onBeforeTerminate: () => Unit = () => ()
 
   private def commit(base: Long, op: String, schema: StructType,
-      entries: Seq[Entry], tag: String = "",
+      entries: Seq[Entry], tag: String,
       colmap: Map[String, String] = Map.empty,
       retired: Seq[String] = Nil): Long = {
     require(schema.fieldNames.contains(key), s"key column $key missing from schema")
@@ -2549,9 +2543,11 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * (delete keys only) and [[applyDelta]] (both), committed as `op`:
     *
     *   1. one [[batchKeys]] job profiles both sides (an absent side adds
-    *      nothing to it); past its reach the uncollected route runs the
-    *      per-purpose jobs instead — the upsert side's guard counts, the
-    *      [[keyPruner]] over the key union, the doomed-set count;
+    *      nothing to it) — whatever the key types, kind or values. Only a
+    *      distinct key set past `pruneSetCap` takes the uncollected
+    *      route, which runs the per-purpose jobs instead: the upsert
+    *      side's guard counts, the sub-range [[keyPruner]] over the key
+    *      union, the doomed-set count;
     *   2. the upsert side must be key-unique;
     *   3. files no batch key can reach carry forward by reference;
     *   4. on a `deleteVectorMaxRows` handle, touched files no UPSERT key
@@ -2581,7 +2577,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       val bk = batchKeys(up, del, keyType)
       val nUpRows = up.fold(0L) { u =>
         val (rows, distinct) = bk match {
-          case Some(b) => (b.upRows, b.upDistinct)
+          case Some(b) => (b.upRows, b.upKeys.length.toLong)
           case None =>
             val r = u.agg(count(lit(1)), count_distinct(col(key))).collect()(0)
             (r.getLong(0), r.getLong(1))
@@ -2596,17 +2592,14 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
       val liveUp = up.filter(_ => nUpRows > 0)
       val upKeys = liveUp.map(_.select(col(key)))
       val affected = (upKeys ++ del).reduceOption(_ unionByName _)
-      val (touched, untouched) = m.entries.partition(bk match {
-        case Some(b) => exactKeyPruner(b.pts, kindOf(keyType), keyType)
-        case None => affected.fold((_: Entry) => false)(keyPruner(_, keyType))
-      })
+      // past the cap some side holds keys, so `affected` is defined
+      val (touched, untouched) = m.entries.partition(
+        bk.fold(keyPruner(affected.get, keyType))(b => exactKeyPruner(b.keys, keyType)))
       val split = del match {
         case Some(d) if deleteVectorMaxRows > 0 && touched.nonEmpty =>
           val (upTouched, delOnly) = upKeys.fold((Seq.empty[Entry], touched)) { uk =>
-            touched.partition(bk match {
-              case Some(b) => exactKeyPruner(b.upPts, kindOf(keyType), keyType)
-              case None => keyPruner(uk, keyType)
-            })
+            touched.partition(
+              bk.fold(keyPruner(uk, keyType))(b => exactKeyPruner(b.upKeys, keyType)))
           }
           // the doomed set: delete keys no upsert replaces (the upsert
           // wins), table-typed so sidecars compare as the key type; a set
@@ -2617,9 +2610,8 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
               if (b.delOnly.isEmpty || b.delOnly.length > deleteVectorMaxRows) None
               else Some(deletionVectorPlan(m, delOnly, localKeyFrame(b.delOnly, keyType)))
             case None =>
-              val typed = d.select(col(key).cast(keyType)).na.drop(Seq(key)).distinct()
-              val doomed = upKeys.fold(typed)(uk =>
-                typed.join(uk.select(col(key).cast(keyType)), Seq(key), "left_anti"))
+              val typed = tableKeys(d, keyType).distinct()
+              val doomed = upKeys.fold(typed)(typed.join(_, Seq(key), "left_anti"))
                 .persist(disk)
               try {
                 val n = doomed.count()
@@ -2639,7 +2631,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
           // rewritten files read with the EVOLVED schema: a just-added
           // column comes back null for pre-evolution rows. Reaching here
           // means upsert rows or touched files, so some key side exists
-          val antiKeys = bk.fold(affected.get)(b => localKeyFrame(b.pts.map(_._2), keyType))
+          val antiKeys = bk.fold(affected.get)(b => localKeyFrame(b.keys, keyType))
           val survivors = readEntries(m, schema, split.cow).join(antiKeys, Seq(key), "left_anti")
           stage(clustered(liveUp.fold(survivors)(u =>
             survivors.unionByName(u.select(schema.fieldNames.map(col): _*)))), m.colmap)

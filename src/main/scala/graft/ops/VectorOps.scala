@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VecDot
-import graft.functions.VectorFns._
 
 /** Similarity search over the `embeddings` table (`vec_id`,
   * `embedding: array<float>`, `label`).

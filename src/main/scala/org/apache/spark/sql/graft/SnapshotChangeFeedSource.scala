@@ -466,10 +466,6 @@ final class SnapshotChangeFeedSource(
     * snapshot. None outside AvailableNow. */
   private var drainTo: Option[Long] = None
 
-  /** Spec seam: the captured drain cap, if an AvailableNow run armed
-    * one. */
-  def drainCap: Option[Long] = drainTo
-
   override def prepareForTriggerAvailableNow(): Unit =
     // the cap lands on the COMMIT LOG like every other cursor: the
     // current committed head (or the birth base on an empty-so-far

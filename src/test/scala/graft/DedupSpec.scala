@@ -649,7 +649,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("split drift PSI: md5 splits sit in the no-shift band; a biased split screams") {
     val s = spark
-    import s.implicits._
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val psi = TextOps.splitDriftPsi(docs).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap

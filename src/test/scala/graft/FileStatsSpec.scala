@@ -123,8 +123,8 @@ final class FileStatsSpec extends AnyFunSuite {
     // the r20 combined batch profile (ONE groupBy job serving the
     // uniqueness guard, the file pruner, the DV split, and the
     // anti-join build side) against the r19 separate-jobs path, forced
-    // via the pruneSetCap seam (a tiny cap overflows the profile and
-    // keyPruner's exact tier alike): table contents, change feeds, and
+    // via the pruneSetCap seam (a tiny cap overflows the profile into
+    // the uncollected sub-range route): table contents, change feeds, and
     // guard behavior must be identical — only job counts may differ
     def run(dir: String, cap: Long): SnapshotTable = {
       val t = new SnapshotTable(spark, dir, "doc_id",

@@ -1,6 +1,5 @@
 package graft
 
-import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame

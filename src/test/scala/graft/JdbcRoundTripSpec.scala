@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.incremental.{IncrementalWeeklySummary, Watermarks}
+import graft.incremental.IncrementalWeeklySummary
 import graft.sources.JdbcUpsert
 
 import TestSpark._

@@ -83,7 +83,6 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
 
   test("a foreachBatch consumer applies the feed with applyDelta and survives a restart") {
     val s = spark
-    import s.implicits._
     val dir = freshDir()
     val ckpt = freshDir()
     val tbl = new SnapshotTable(spark, dir, "k")
@@ -186,7 +185,6 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
 
   test("sink dedup is keyed on (sinkId, batchId): a new pipeline's batch 0 is not swallowed") {
     val s = spark
-    import s.implicits._
     val dir = freshDir()
     def sink(id: String) = new org.apache.spark.sql.graft.SnapshotTableProvider()
       .createSink(s.sqlContext, Map("path" -> dir, "key" -> "k", "sinkId" -> id), Nil,
@@ -226,7 +224,6 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
 
   test("rate-limited stream across a clean restart never re-delivers committed intervals") {
     val s = spark
-    import s.implicits._
     val dir = freshDir()
     val ckpt = freshDir()
     val tbl = new SnapshotTable(spark, dir, "k")

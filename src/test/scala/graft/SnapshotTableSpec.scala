@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.ConcurrentModificationException
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
@@ -138,7 +138,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val tbl = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(10))
     val v0 = tbl.create((1L to 400L).map(i => (i, s"v$i")).toDF("k", "v"))
     val filesBefore = tbl.filesAt(v0).size
-    tbl.pruneSetCap = 4 // force the sub-range tier for a 5-key batch
+    tbl.pruneSetCap = 4 // force the over-cap sub-range route for a 5-key batch
     val v1 = tbl.merge(Seq(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d", 400L -> "z")
       .toDF("k", "v"))
     assert(tbl.read().count() == 400)
@@ -1174,6 +1174,80 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(tbl.readKeys(Seq(7L, 7L).toDF("k")).count() == 1)
   }
 
+  /** Drives merge, delete, applyDelta and readKeys on a table keyed by
+    * `key(i)` (an index → key value map) and checks each step against an
+    * in-memory model of index → value, once per key route: the collected
+    * profile and the over-cap route (`pruneSetCap = 1`). `show` renders
+    * a key value comparably (byte arrays and NaN have no useful ==). */
+  private def modelTrial[K: Encoder](label: String, key: Int => K,
+      show: Any => String): Unit = {
+    val s = spark
+    import s.implicits._
+    implicit val kvEnc: Encoder[(K, String)] =
+      Encoders.tuple(implicitly[Encoder[K]], Encoders.STRING)
+    for (cap <- Seq(100000L, 1L)) {
+      val shape = s"$label (cap=$cap)"
+      val tbl = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(3))
+      tbl.pruneSetCap = cap
+      var model = (0 to 11).map(i => i -> s"v$i").toMap
+      def rows(is: Seq[(Int, String)]) = is.map { case (i, v) => (key(i), v) }.toDF("k", "v")
+      def keys(is: Int*) = is.map(key).toDF("k")
+      def render(df: DataFrame, m: Map[Int, String]) = (
+        df.collect().map(r => (show(r.getAs[Any]("k")), r.getAs[String]("v"))).sorted.toSeq,
+        m.toSeq.map { case (i, v) => (show(key(i)), v) }.sorted)
+      def check(step: String): Unit = {
+        val (got, want) = render(tbl.read(), model)
+        assert(got == want, s"$shape: $step diverged")
+      }
+      tbl.create(rows(model.toSeq))
+      check("create")
+      tbl.merge(rows(Seq(0 -> "M0", 3 -> "M3", 20 -> "M20")))
+      model ++= Map(0 -> "M0", 3 -> "M3", 20 -> "M20")
+      check("merge")
+      intercept[IllegalArgumentException](tbl.merge(rows(Seq(4 -> "a", 4 -> "b"))))
+      tbl.delete(keys(1, 5, 99))
+      model --= Seq(1, 5)
+      check("delete")
+      tbl.applyDelta(rows(Seq(6 -> "D6", 21 -> "D21", 8 -> "D8")), keys(7, 8, 0))
+      model = model - 7 - 0 ++ Map(6 -> "D6", 21 -> "D21", 8 -> "D8")
+      check("applyDelta")
+      val (got, want) = render(tbl.readKeys(keys(2, 6, 21, 99, 1)),
+        model.filter(e => Set(2, 6, 21).contains(e._1)))
+      assert(got == want, s"$shape: readKeys diverged")
+    }
+  }
+
+  test("a binary-keyed (opaque) table: keyed writes and readKeys equal an in-memory model") {
+    modelTrial[Array[Byte]]("binary", i => Array(i.toByte, (i * 7).toByte),
+      v => v.asInstanceOf[Array[Byte]].mkString(","))(Encoders.BINARY)
+  }
+
+  test("a double-keyed table holding NaN: keyed writes and readKeys equal an in-memory model") {
+    // index 0 is the NaN key: merge replaces its row, applyDelta deletes
+    // it, and every step keeps the other keys exact
+    modelTrial[Double]("double+NaN", i => if (i == 0) Double.NaN else i * 1.5,
+      v => v.toString)(Encoders.scalaDouble)
+  }
+
+  test("an Int-typed delete carries forward the same files as the same Long-typed delete") {
+    val s = spark
+    import s.implicits._
+    for (cap <- Seq(100000L, 2L)) {
+      val tbl = new SnapshotTable(spark, freshDir(), "k", clusterPartitions = Some(8))
+      tbl.pruneSetCap = cap
+      val v0 = tbl.create((1L to 400L).map(i => (i, s"v$i")).toDF("k", "v"))
+      val doomed = Seq(5, 123, 377)
+      val v1 = tbl.delete(doomed.map(_.toLong).toDF("k"))
+      val longCarried = tbl.filesAt(v0).toSet.intersect(tbl.filesAt(v1).toSet)
+      val base = tbl.restore(v0) // same entries, so the same file paths
+      val v3 = tbl.delete(doomed.toDF("k"))
+      val intCarried = tbl.filesAt(base).toSet.intersect(tbl.filesAt(v3).toSet)
+      assert(longCarried.size >= tbl.filesAt(v0).size - 3, s"cap=$cap: delete rewrote too much")
+      assert(intCarried == longCarried, s"cap=$cap: Int-typed delete pruned differently")
+      assertSameRows(tbl.read(), tbl.readVersion(v1))
+    }
+  }
+
   test("optimize compacts small files content-identically; big files carry by reference; tag survives") {
     val tbl = new SnapshotTable(spark, freshDir(), "k")
     tbl.create(kv(1L -> "a"), tag = "wm-1")
@@ -1264,8 +1338,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     // The handle shape cycles through every combination of deletion
     // vectors (cap 3: small delete sides vector, bigger ones rewrite),
     // a 64-bit key bloom, and Int-typed delete keys against the Long
-    // key (the uncollected cast route); each trial then checks an
-    // applyDelta step against anti-join-then-Upsert.merge.
+    // key; each trial then checks an applyDelta step against
+    // anti-join-then-Upsert.merge, and readKeys of a random key set,
+    // Long- and Int-typed, against the model's semi-join.
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val s = spark
@@ -1280,10 +1355,11 @@ class SnapshotTableSpec extends AnyFunSuite {
       dkeys <- keysGen(Seq(0, 1, 2, 3, 8, 40))
       ukeys <- keysGen(Seq(0, 1, 3, 20))
       xkeys <- keysGen(Seq(0, 1, 2, 3, 30))
-      cap <- Gen.oneOf(100000, 3) // exact tier and forced sub-range tier
-    } yield (n, files, bkeys.distinct.map(_.toLong), dkeys, ukeys, xkeys, cap)
+      cap <- Gen.oneOf(100000, 3) // collected profile and forced over-cap route
+      rkeys <- keysGen(Seq(0, 1, 3, 30))
+    } yield (n, files, bkeys.distinct.map(_.toLong), dkeys, ukeys, xkeys, cap, rkeys)
     for (trial <- 1 to 12) {
-      val (n, files, bkeys, dkeys, ukeys, xkeys, cap) =
+      val (n, files, bkeys, dkeys, ukeys, xkeys, cap, rkeys) =
         layoutGen.pureApply(Gen.Parameters.default, Seed(42L + trial))
       val dvMax = if (trial % 2 == 0) 3L else 0L
       val bloom = if ((trial / 2) % 2 == 1) 64 else 0
@@ -1313,6 +1389,10 @@ class SnapshotTableSpec extends AnyFunSuite {
       assert(collectSorted(tbl.read()) == expect,
         s"$shape: applyDelta diverged (upserts=$ukeys deletes=$xkeys)")
       assert(tbl.countRows() == expect.size, s"$shape: manifest row count drifted")
+      val lookedUp = expect.filter(r => rkeys.contains(r(0)))
+      for (ks <- Seq(rkeys.toDF("k"), rkeys.map(_.toInt).toDF("k")))
+        assert(collectSorted(tbl.readKeys(ks)) == lookedUp,
+          s"$shape: readKeys diverged (keys=$rkeys as ${ks.schema("k").dataType})")
     }
   }
 
@@ -1901,7 +1981,6 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("format provider batch write: SaveMode semantics, keyed merge option, tag riding") {
     val s = spark
-    import s.implicits._
     val dir = freshDir()
     def write(df: org.apache.spark.sql.DataFrame) = df.write.format("graft-snapshot")
       .option("path", dir).option("key", "k")
@@ -1963,7 +2042,6 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("INSERT INTO a graft-snapshot view fails loudly — never a manifest-invisible write") {
     val s = spark
-    import s.implicits._
     val dir = freshDir()
     val tbl = new SnapshotTable(spark, dir, "k")
     tbl.create(kv(1L -> "a"))
@@ -1997,7 +2075,6 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("format provider time travel: versionAsOf and timestampAsOf options") {
     val s = spark
-    import s.implicits._
     val dir = freshDir()
     val tbl = new SnapshotTable(spark, dir, "k")
     tbl.create(kv(1L -> "a")) // v0

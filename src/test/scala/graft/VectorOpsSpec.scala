@@ -462,7 +462,6 @@ class VectorOpsSpec extends AnyFunSuite {
 
   test("semantic dedup: kept set has no lower-id near-twin in-cluster; twins dedup") {
     val s = spark
-    import s.implicits._
     val kept = VectorOps.semanticDedup(fixture, k = 4, iters = 2, minCos = 0.9)
     val asg = VectorOps.kmeans(fixture, k = 4, iters = 2).select("vec_id", "cid")
     // dropped = all - kept; every dropped id must have a kept-or-dropped

@@ -17,7 +17,6 @@ class VectorStreamSpec extends AnyFunSuite {
     * twinned at 100+i. */
   private lazy val fixture = {
     val s = spark
-    import s.implicits._
     val rnd = new scala.util.Random(7)
     def vec() = Array.fill(64)(rnd.nextGaussian().toFloat)
     val base = (0 until 60).map(i => (i.toLong, vec()))
