@@ -33,7 +33,12 @@ import org.apache.spark.sql.types._
   *   dir/manifests/v<zero-padded>.json       one per committed version
   * }}}
   * A manifest is line-oriented: `#`-prefixed header (parent version,
-  * operation, key column, schema JSON), one entry per data file
+  * operation, key column, schema JSON; on a keyed write, a `#keys`
+  * line — count, then the comma-joined encoded keys the commit
+  * upserted or deleted, which the change feed restricts its diff to,
+  * see [[changesBetween]]; a reader that does not know a header name
+  * ignores it, so an older reader of a newer table just diffs
+  * unrestricted), one entry per data file
   * (relative path, row count, key kind, encoded key min/max, key null
   * count, file byte length — the writer records the length at stage
   * time so no read and no [[optimize]] ever getFileStatus per file —
@@ -263,12 +268,16 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * the renamed column without a byte rewritten (the Delta/Iceberg
     * column-mapping rung, name-keyed). `retired` holds physical names
     * of DROPPED columns: a later add must never reuse one, or old
-    * files would resurrect the dropped values under the new column. */
+    * files would resurrect the dropped values under the new column.
+    * `changedKeys` is a keyed write's changed-key set, [[ordEncode]]d
+    * (the `#keys` header; see [[recordedKeys]]); None when the commit
+    * recorded none. */
   private final case class Manifest(version: Long, parent: Long, op: String,
       schema: StructType, entries: Seq[Entry], tag: Option[String],
       keyName: Option[String] = None,
       colmap: Map[String, String] = Map.empty,
-      retired: Seq[String] = Nil) {
+      retired: Seq[String] = Nil,
+      changedKeys: Option[Seq[String]] = None) {
     /** Physical (on-file) name of a logical column. */
     def physOf(logical: String): String = colmap.getOrElse(logical, logical)
     /** The schema as data files store it. */
@@ -419,9 +428,18 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     }.toMap).getOrElse(Map.empty)
     val retired = header.get("#retired")
       .map(_.split(",").toSeq.map(b64d)).getOrElse(Nil)
+    // `#keys <count> <enc,enc,...>`: a count that disagrees with the
+    // list reads as no record (the feed then diffs unrestricted)
+    val changedKeys = header.get("#keys").flatMap { h =>
+      val (n, list) = h.span(_ != ' ')
+      n.toIntOption.flatMap { c =>
+        val ks = if (c == 0) Nil else list.drop(1).split(",", -1).toSeq
+        Option(ks).filter(_.size == c)
+      }
+    }
     Some(Manifest(v, header("#parent").toLong, header("#op"),
       DataType.fromJson(header("#schema")).asInstanceOf[StructType], entries,
-      header.get("#tag"), header.get("#key"), colmap, retired))
+      header.get("#tag"), header.get("#key"), colmap, retired, changedKeys))
   }
 
   /** The full committed chain, oldest first — for the callers that
@@ -891,29 +909,43 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * an UPDATE surfaces as its removed/added pair (join the two sides
     * on the key for key-grain semantics).
     *
-    * MANIFEST-DIFF PRUNED AND REWRITE-OP-AWARE: data files are
-    * immutable and carry between versions BY PATH, so files referenced
-    * by both endpoint manifests cancel without being read. Path
-    * cancellation alone is defeated by a rewrite-only commit in the
-    * interval — [[optimize]] compaction rewrites untouched mass into
-    * new paths, and an endpoint diff across it would shuffle the whole
-    * compacted table to discover zero logical change. So the interval
-    * DECOMPOSES at every `optimize` commit (content-identical by
-    * construction — the one op whose entire file churn is guaranteed
-    * logical noise): each segment between consecutive optimizes
-    * path-diffs on its own, the per-segment churn unions into one
-    * before/after pair, and the global `exceptAll` cancels rows that
-    * net out across segments (inserted in one commit, deleted in a
-    * later one) — exactly the endpoint multiset diff, at Σ segment
-    * churn cost. A sync across routine compaction reads the merges'
-    * churn, never the compacted mass. Decomposition needs every
-    * manifest in the interval; if intermediates were retired the feed
-    * falls back to the plain endpoint diff (correct, possibly
-    * compaction-priced). A `restore` is a REAL logical change and is
-    * never skipped — its file re-references diff like any commit.
+    * The diff is ONE shuffle by the key that nets each distinct row's
+    * count (after − before): the multiset diff two `exceptAll`s would
+    * compute at a shuffle of both sides each. Its COST ∝ THE KEYS THE
+    * INTERVAL'S COMMITS CHANGED, through three exact cuts before it:
+    *   - PATH CANCELLATION: data files are immutable and carry between
+    *     versions by (path, deletion vector), so entries both ends of a
+    *     segment reference cancel without being read.
+    *   - OPTIMIZE DECOMPOSITION: [[optimize]] rewrites untouched mass
+    *     into new paths (content-identical by construction), so the
+    *     interval splits at every `optimize` commit, each segment
+    *     path-diffs on its own, and the per-segment churn unions into
+    *     one before/after pair. A sync across routine compaction reads
+    *     the merges' churn, never the compacted mass; the global net
+    *     count still cancels rows that net out across segments
+    *     (inserted in one commit, deleted in a later one) — exactly the
+    *     endpoint multiset diff.
+    *   - KEY RESTRICTION: under copy-on-write a segment's churn is every
+    *     file its writes touched, and survivor rows are copied verbatim.
+    *     A keyed write records the keys it upserted or deleted (the
+    *     `#keys` header), so a key outside a segment's recorded union
+    *     reads identically on both sides, and both sides are cut to that
+    *     union by an `In` on the key (which the file index prunes on too)
+    *     before the diff: the shuffle is ∝ changed rows, not ∝ rewritten
+    *     files. A commit whose entries equal its parent's (tag, rename,
+    *     add-column, widen) adds no key. A segment holding any other
+    *     commit without a record diffs unrestricted: create, overwrite,
+    *     append, restore, repair, a key set past `pruneSetCap` or the
+    *     inline cap, a key kind the stats encoding does not hold
+    *     exactly, a manifest written before the header.
+    * Decomposition and restriction need every manifest in the interval;
+    * if intermediates were retired the feed falls back to the plain
+    * endpoint diff (correct, possibly compaction-priced). A `restore`
+    * is a REAL logical change and is never skipped — its file
+    * re-references diff like any commit.
     *
     * Copy-on-write rewrites untouched survivor ROWS into new files;
-    * the row-level `exceptAll` cancels those exactly (a moved-but-
+    * the row-level net count cancels those exactly (a moved-but-
     * identical row is not a change). Multiset semantics: a duplicated
     * full row removed once reports exactly one removal. Works across
     * add-nullable-column evolution — both sides read with the `to`
@@ -925,51 +957,82 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     // physical names are rename-stable, so files from any version in the
     // interval serve the feed under the newest logical names — a pure
     // rename commit changes no entry and feeds ZERO rows
-    def side(pick: ((Seq[Entry], Seq[Entry])) => Seq[Entry]): DataFrame =
-      segments.map(seg => readEntries(toM, toM.schema, pick(seg)))
-        .reduceOption(_ unionByName _)
+    def side(pick: ChangeSegment => Seq[Entry]): DataFrame =
+      segments.filter(s => s.before.nonEmpty || s.after.nonEmpty).map { seg =>
+        val rows = readEntries(toM, toM.schema, pick(seg))
+        seg.keys.fold(rows)(ks => rows.where(col(key).isin(ks: _*)))
+      }.reduceOption(_ unionByName _)
         .getOrElse(readEntries(toM, toM.schema, Nil))
-    val before = side(_._1)
-    val after = side(_._2)
-    after.exceptAll(before).withColumn("_change", lit("added"))
-      .unionByName(before.exceptAll(after).withColumn("_change", lit("removed")))
+    val after = side(_.after)
+    // ONE shuffle, by the key: each distinct row's net count (after −
+    // before) is the multiset diff both `exceptAll`s would compute at a
+    // shuffle of both sides each; a row then repeats |count| times. The
+    // output stays partitioned by the key, so [[changesKeyed]]'s join
+    // on it shuffles nothing more.
+    side(_.before).withColumn("__n", lit(-1L)).unionByName(after.withColumn("__n", lit(1L)))
+      .repartition(col(key))
+      .groupBy(after.columns.map(col).toIndexedSeq: _*).agg(sum(col("__n")).as("__n"))
+      .where(col("__n") =!= 0)
+      .withColumn("_change", when(col("__n") > 0, "added").otherwise("removed"))
+      .withColumn("__n", explode(array_repeat(lit(0), abs(col("__n")).cast("int"))))
+      .drop("__n")
   }
 
   /** The relative data-file paths [[changesBetween]] would scan for the
-    * interval, both sides flattened — the spec seam for asserting a
-    * compaction's outputs never enter the feed's scan. */
-  private[graft] def changeScanPaths(from: Long, to: Long): (Seq[String], Seq[String]) = {
+    * interval, both sides flattened, and each segment's key restriction
+    * (None: unrestricted) — the spec seam for asserting a compaction's
+    * outputs never enter the feed's scan, and which keys it is cut to. */
+  private[graft] def changeScanPaths(from: Long,
+      to: Long): (Seq[String], Seq[String], Seq[Option[Set[Any]]]) = {
     val (segments, _) = changeScanSegments(from, to)
-    (segments.flatMap(_._1.map(_.path)), segments.flatMap(_._2.map(_.path)))
+    (segments.flatMap(_.before.map(_.path)), segments.flatMap(_.after.map(_.path)),
+      segments.map(_.keys.map(_.toSet)))
   }
 
-  /** The per-segment (beforeChurn, afterChurn) entry lists
-    * [[changesBetween]] scans, plus the read schema (`to`'s). Segments
-    * are delimited by `optimize` commits (see [[changesBetween]]); one
-    * endpoint-diff segment when the interval has no optimize to
-    * decompose around, or as the retired-intermediate fallback. */
-  private def changeScanSegments(
-      from: Long, to: Long): (Seq[(Seq[Entry], Seq[Entry])], Manifest) = {
+  /** One [[changesBetween]] segment: the entries only its start
+    * references, those only its end references, and the key values
+    * (typed as the `to` key) both sides are cut to — None when some
+    * commit in it recorded no changed-key set. */
+  private final case class ChangeSegment(before: Seq[Entry], after: Seq[Entry],
+      keys: Option[Seq[Any]])
+
+  /** The [[ChangeSegment]]s [[changesBetween]] scans, plus the read
+    * schema's manifest (`to`'s). Segments are delimited by `optimize`
+    * commits (see [[changesBetween]]); one unrestricted endpoint-diff
+    * segment when intermediates are missing. */
+  private def changeScanSegments(from: Long, to: Long): (Seq[ChangeSegment], Manifest) = {
     val a = loadManifest(from).getOrElse(
       throw new IllegalStateException(s"no committed version $from at $dir"))
     val b = loadManifest(to).getOrElse(
       throw new IllegalStateException(s"no committed version $to at $dir"))
-    def churn(s: Manifest, e: Manifest): (Seq[Entry], Seq[Entry]) = {
-      // entry identity = (path, deletion vector): a merge-on-read
-      // delete changes a file's LOGICAL content without changing its
-      // path, so a DV'd entry diffs against its pre-DV self — both
-      // sides read masked, and the exceptAll nets out to exactly the
-      // freshly masked rows
-      def id(x: Entry): (String, Option[String]) = (x.path, x.dv.map(_._1))
-      val sIds = s.entries.map(id).toSet
-      val eIds = e.entries.map(id).toSet
-      (s.entries.filterNot(x => eIds(id(x))), e.entries.filterNot(x => sIds(id(x))))
+    // entry identity = (path, deletion vector): a merge-on-read delete
+    // changes a file's LOGICAL content without changing its path, so a
+    // DV'd entry diffs against its pre-DV self — both sides read masked,
+    // and the diff nets out to exactly the freshly masked rows
+    def id(x: Entry): (String, Option[String]) = (x.path, x.dv.map(_._1))
+    def ids(m: Manifest): Set[(String, Option[String])] = m.entries.map(id).toSet
+    val keyType = b.schema(key).dataType
+    def churn(s: Manifest, e: Manifest, keys: Option[Set[String]]): ChangeSegment = {
+      val typed = keys.flatMap { ks =>
+        val vs = ks.toSeq.flatMap(ordDecode(_, keyType))
+        Option(vs).filter(_.size == ks.size)
+      }
+      if (typed.exists(_.isEmpty)) ChangeSegment(Nil, Nil, typed)
+      else {
+        val (sIds, eIds) = (ids(s), ids(e))
+        ChangeSegment(s.entries.filterNot(x => eIds(id(x))),
+          e.entries.filterNot(x => sIds(id(x))), typed)
+      }
     }
+    // the keys commit `c` changed over its parent `p`: none when it
+    // references exactly `p`'s entries, else its record (if any)
+    def changed(p: Manifest, c: Manifest): Option[Set[String]] =
+      if (ids(p) == ids(c)) Some(Set.empty) else c.changedKeys.map(_.toSet)
     // every committed manifest in [from, to]; decomposition needs a
     // contiguous parent chain (retire() can only trim a PREFIX of
     // history, but verify anyway — a gap falls back to the endpoint diff)
     val chain = listManifests.filter { case (v, _) => v >= from && v <= to }
-      .flatMap { case (v, st) => loadValidated(v, st) }
+      .flatMap { case (v, st) => loadValidated(v, st) }.toIndexedSeq
     val contiguous = chain.nonEmpty && chain.head.version == from &&
       chain.last.version == to &&
       chain.sliding(2).forall {
@@ -977,20 +1040,18 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
         case _ => true
       }
     val segments =
-      if (!contiguous || !chain.exists(_.op == "optimize")) Seq(churn(a, b))
+      if (!contiguous) Seq(churn(a, b, None))
       else {
-        val cuts = Seq.newBuilder[(Manifest, Manifest)]
-        var start = chain.head
-        var prev = chain.head
-        chain.tail.foreach { m =>
-          if (m.op == "optimize") {
-            if (prev.version != start.version) cuts += ((start, prev))
-            start = m
+        // a segment runs from the chain head or an optimize commit to
+        // the commit before the next optimize (or the chain's end)
+        val starts = 0 +: chain.indices.tail.filter(chain(_).op == "optimize")
+        val ends = starts.tail.map(_ - 1) :+ (chain.size - 1)
+        starts.zip(ends).filter { case (s, e) => e > s }.map { case (s, e) =>
+          val keys = (s + 1 to e).foldLeft(Option(Set.empty[String])) { (acc, i) =>
+            for (u <- acc; k <- changed(chain(i - 1), chain(i))) yield u ++ k
           }
-          prev = m
+          churn(chain(s), chain(e), keys)
         }
-        if (prev.version != start.version) cuts += ((start, prev))
-        cuts.result().map { case (s, e) => churn(s, e) }
       }
     (segments, b)
   }
@@ -1002,7 +1063,12 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     * doing its own pair-matching. Every mirror applies it through
     * [[SnapshotSync.applyFeed]]: the batch [[SnapshotSync.sync]] and, as
     * the `graft-snapshot` stream source's micro-batches, the `cdc`-mode
-    * sink. Same pruning and rewrite-op awareness as the row feed.
+    * sink. Its cost is the row feed's one shuffle: the full-outer join
+    * of the added and removed rows on the key shuffles nothing more,
+    * because the row feed comes out partitioned by the key. Wherever
+    * the interval recorded its changed keys, that shuffle carries only
+    * the changed keys' rows; an interval holding an unrecorded commit
+    * pays its whole churn (see [[changesBetween]]).
     * CONTRACT: assumes key-unique snapshots — what merge/delete/
     * applyDelta maintain; a table fed duplicate keys via create/append
     * reports those keys at row grain fidelity lost. */
@@ -1482,6 +1548,18 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     case _ => None
   }
 
+  /** [[ordEncode]]'s inverse for a [[SnapshotTable.recordable]] key
+    * type: the value typed as `dt` (dates as `LocalDate`); None for an
+    * encoding that does not fit `dt` or any other type. */
+  private def ordDecode(enc: String, dt: DataType): Option[Any] = scala.util.Try(dt match {
+    case ByteType => BigDecimal(enc).toByteExact
+    case ShortType => BigDecimal(enc).toShortExact
+    case IntegerType => BigDecimal(enc).toIntExact
+    case LongType => BigDecimal(enc).toLongExact
+    case DateType => java.time.LocalDate.ofEpochDay(BigDecimal(enc).toLongExact)
+    case StringType => new String(java.util.Base64.getDecoder.decode(enc), "UTF-8")
+  }).toOption
+
   private def ordLt(kind: String, a: String, b: String): Boolean = kind match {
     case "num" => BigDecimal(a) < BigDecimal(b)
     case "str" =>
@@ -1648,6 +1726,17 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
     }
     Some(BatchKeys(upRows, keys.result(), upKeys.result(), delOnly.result()))
   }
+
+  /** A keyed write's changed-key set as its manifest records it (the
+    * `#keys` header the change feed restricts to): the batch's distinct
+    * keys, [[ordEncode]]d, when the key kind encodes EXACTLY (integral,
+    * date and string keys — a timestamp floors to the millisecond) and
+    * the set holds at most [[SnapshotTable.RecordedKeysMax]] keys. None
+    * otherwise: the commit records nothing and every feed over it diffs
+    * unrestricted. */
+  private def recordedKeys(keys: Array[Any], keyType: DataType): Option[Seq[String]] =
+    if (!SnapshotTable.recordable(keyType) || keys.length > SnapshotTable.RecordedKeysMax) None
+    else Some(keys.toSeq.flatMap(ordEncode)).filter(_.size == keys.length)
 
   /** The collected exact key set as a LocalRelation-backed frame — the
     * anti-join build side / DV sidecar source / [[readKeys]] semi-join
@@ -1939,7 +2028,8 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
   private def commit(base: Long, op: String, schema: StructType,
       entries: Seq[Entry], tag: String,
       colmap: Map[String, String] = Map.empty,
-      retired: Seq[String] = Nil): Long = {
+      retired: Seq[String] = Nil,
+      changedKeys: Option[Seq[String]] = None): Long = {
     require(schema.fieldNames.contains(key), s"key column $key missing from schema")
     if (!fs.exists(manifestDir)) fs.mkdirs(manifestDir)
     val target = math.max(base, allVersions.lastOption.getOrElse(-1L)) + 1
@@ -1969,7 +2059,8 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
          else Seq("#colmap " + colmap.toSeq.sortBy(_._1)
            .map { case (l, p) => s"${b64(l)}:${b64(p)}" }.mkString(","))) ++
         (if (retired.isEmpty) Nil
-         else Seq("#retired " + retired.map(b64).mkString(",")))
+         else Seq("#retired " + retired.map(b64).mkString(","))) ++
+        changedKeys.map(ks => s"#keys ${ks.size} ${ks.mkString(",")}")
       } ++
         (if (tag.nonEmpty) Seq(s"#tag ${tag.replaceAll("[\\r\\n]", " ")}") else Nil) ++
         entries.flatMap(e => (e.line +: e.statLines) ++ e.bloomLines ++ e.dvLines))
@@ -2637,7 +2728,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
             survivors.unionByName(u.select(schema.fieldNames.map(col): _*)))), m.colmap)
         }
       commit(m.version, op, schema, untouched ++ split.carry ++ split.dvd ++ fresh,
-        tag, m.colmap, m.retired)
+        tag, m.colmap, m.retired, bk.flatMap(b => recordedKeys(b.keys, keyType)))
     } finally (up ++ del).foreach(_.unpersist(blocking = false))
   }
 
@@ -2741,6 +2832,17 @@ final class SnapshotTable(spark: SparkSession, dir: String, key: String,
 }
 
 object SnapshotTable {
+
+  /** The largest changed-key set a keyed commit records inline in its
+    * manifest — about 40 KB of header at 20-byte keys. */
+  private val RecordedKeysMax = 2048
+
+  /** Key types whose values [[SnapshotTable]]'s stats encoding holds
+    * exactly, so a recorded key decodes back to the value it came from. */
+  private def recordable(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType | StringType => true
+    case _ => false
+  }
 
   /** True iff `df`'s plan PROVABLY produces zero rows: an empty
     * [[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]] or a

@@ -532,15 +532,22 @@ final class SnapshotChangeFeedSource(
         // retention job) would otherwise surface as a bare "no
         // committed version" from deep inside the diff — fail with the
         // operational cause and the recovery instead (the same fence
-        // SnapshotSync documents).
-        tbl.oldestCommittedVersion.filter(_ > from).foreach(oldest =>
-          throw new IllegalStateException(
-            s"stream cursor is at version $from but the table's retained history now " +
-              s"starts at $oldest — retire() outran this stream's checkpoint. " +
-              "Restart with a fresh checkpoint (and startingVersion) and re-sync the " +
-              "consumer, or retain more history than the stream's maximum lag."))
-        tbl.changesKeyed(from, to)
-          .withColumn("_commit_version", org.apache.spark.sql.functions.lit(to))
+        // SnapshotSync documents). The feed's own manifest listing is
+        // the batch's only one: the oldest version is probed only when
+        // the feed fails to resolve.
+        val feed =
+          try tbl.changesKeyed(from, to)
+          catch {
+            case e: IllegalStateException => tbl.oldestCommittedVersion match {
+              case Some(oldest) if oldest > from => throw new IllegalStateException(
+                s"stream cursor is at version $from but the table's retained history now " +
+                  s"starts at $oldest — retire() outran this stream's checkpoint. " +
+                  "Restart with a fresh checkpoint (and startingVersion) and re-sync the " +
+                  "consumer, or retain more history than the stream's maximum lag.", e)
+              case _ => throw e
+            }
+          }
+        feed.withColumn("_commit_version", org.apache.spark.sql.functions.lit(to))
       }
     // a streaming source's schema is FIXED at stream start: when the
     // table evolved (added a nullable column) inside the interval, the

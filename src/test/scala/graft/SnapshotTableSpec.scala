@@ -561,12 +561,12 @@ class SnapshotTableSpec extends AnyFunSuite {
       (400L, "X", "added"), (999L, "ins", "added"), (400L, "v400", "removed"))
       .toDF("k", "v", "_change"))
     // ...and its scan set EXCLUDES the compaction's outputs entirely
-    val (beforeScan, afterScan) = tbl.changeScanPaths(v0, v2)
+    val (beforeScan, afterScan, _) = tbl.changeScanPaths(v0, v2)
     assert((beforeScan ++ afterScan).toSet.intersect(compactionOutputs).isEmpty,
       "feed scanned compaction outputs — rewrite-op decomposition broken")
     // a rewrite-only interval is an EMPTY feed with an empty scan
     assert(tbl.changesBetween(v1, v2).isEmpty)
-    val (b12, a12) = tbl.changeScanPaths(v1, v2)
+    val (b12, a12, _) = tbl.changeScanPaths(v1, v2)
     assert(b12.isEmpty && a12.isEmpty)
     // rows that net out ACROSS segments cancel: 999 was inserted before
     // the compaction; delete it after — the v0..v3 feed must not carry
@@ -582,6 +582,86 @@ class SnapshotTableSpec extends AnyFunSuite {
     val restFeed = tbl.changesBetween(v3, v4)
     assert(restFeed.filter(col("_change") === "removed")
       .filter(col("k") === 400L).count() == 1, "restore must surface in the feed")
+  }
+
+  test("change feed cuts each segment to the keys its keyed commits recorded") {
+    val s = spark
+    import s.implicits._
+    val dir = freshDir()
+    val tbl = new SnapshotTable(spark, dir, "k", clusterPartitions = Some(4))
+    def restriction(from: Long, to: Long) = tbl.changeScanPaths(from, to)._3
+    val v0 = tbl.create((1L to 400L).map(i => (i, s"v$i")).toDF("k", "v"))
+    // merge, delete and applyDelta each record their batch keys (a
+    // delete key that matches no row included); a tag commit adds none
+    val v1 = tbl.merge(kv(5L -> "five", 401L -> "new"))
+    val v2 = tbl.delete(Seq(7L, 999L).toDF("k"))
+    val v3 = tbl.applyDelta(kv(9L -> "nine"), Seq(11L).toDF("k"))
+    val v4 = tbl.setTag("t4")
+    assert(restriction(v0, v4) == Seq(Some(Set(5L, 401L, 7L, 999L, 9L, 11L))))
+    assert(restriction(v1, v2) == Seq(Some(Set(7L, 999L))))
+    assert(restriction(v3, v4) == Seq(Some(Set.empty)))
+    assert(tbl.changeScanPaths(v3, v4)._1.isEmpty)
+    assertSameRows(tbl.changesKeyed(v0, v4), Seq(
+      (5L, "five", "update"), (401L, "new", "insert"), (9L, "nine", "update"),
+      (7L, "v7", "delete"), (11L, "v11", "delete")).toDF("k", "v", "_change_type"))
+    // append, restore, the uncollected route and a key set past the
+    // inline cap record nothing: every interval holding one diffs whole
+    val v5 = tbl.append(kv(500L -> "app"))
+    val v6 = tbl.restore(v3)
+    tbl.pruneSetCap = 1
+    val v7 = try tbl.merge(kv(20L -> "a", 21L -> "b")) finally tbl.pruneSetCap = 100000L
+    val v8 = tbl.merge((1000L to 3048L).map(i => (i, s"w$i")).toDF("k", "v"))
+    Seq(v4 -> v5, v3 -> v5, v5 -> v6, v6 -> v7, v7 -> v8, v0 -> v8).foreach { case (a, b) =>
+      assert(restriction(a, b) == Seq(None), s"v$a..v$b must be unrestricted")
+    }
+    // an optimize splits the interval; each side of it restricts alone
+    val v9 = tbl.merge(kv(30L -> "x"))
+    tbl.optimize(smallBytes = Long.MaxValue)
+    val v11 = tbl.delete(Seq(31L).toDF("k"))
+    assert(restriction(v8, v11) == Seq(Some(Set(30L)), Some(Set(31L))))
+    assert(restriction(v7, v11) == Seq(None, Some(Set(31L))))
+    // add-column and widen commits change no entry: they add no key
+    tbl.addColumn("n", org.apache.spark.sql.types.IntegerType)
+    val v13 = tbl.widenColumn("n", org.apache.spark.sql.types.LongType)
+    assert(restriction(v11, v13) == Seq(Some(Set.empty)))
+    assert(tbl.changesBetween(v11, v13).isEmpty)
+    // string and date keys decode back to the values they recorded, the
+    // empty string included
+    val str = new SnapshotTable(spark, freshDir(), "k")
+    val s0 = str.create(Seq(("", "e"), ("a", "x"), ("b", "y")).toDF("k", "v"))
+    val s1 = str.applyDelta(Seq(("", "E"), ("c", "z")).toDF("k", "v"), Seq("b").toDF("k"))
+    assert(str.changeScanPaths(s0, s1)._3 == Seq(Some(Set("", "b", "c"))))
+    assertSameRows(str.changesKeyed(s0, s1), Seq(("", "E", "update"), ("c", "z", "insert"),
+      ("b", "y", "delete")).toDF("k", "v", "_change_type"))
+    val dated = new SnapshotTable(spark, freshDir(), "k")
+    val day = java.time.LocalDate.of(2005, 5, 24)
+    val d0 = dated.create(Seq((java.sql.Date.valueOf(day), "a")).toDF("k", "v"))
+    val d1 = dated.merge(Seq((java.sql.Date.valueOf(day.plusDays(1)), "b")).toDF("k", "v"))
+    assert(dated.changeScanPaths(d0, d1)._3 == Seq(Some(Set(day.plusDays(1)))))
+    assert(dated.changesKeyed(d0, d1).select("v", "_change_type").as[(String, String)]
+      .collect().toSeq == Seq(("b", "insert")))
+    // an opaque (binary) key records nothing
+    val bin = new SnapshotTable(spark, freshDir(), "k")
+    val b0 = bin.create(Seq((Array[Byte](1), "a"), (Array[Byte](2), "b")).toDF("k", "v"))
+    val b1 = bin.merge(Seq((Array[Byte](2), "B")).toDF("k", "v"))
+    assert(bin.changeScanPaths(b0, b1)._3 == Seq(None))
+    assert(bin.changesKeyed(b0, b1).select("v", "_change_type").as[(String, String)]
+      .collect().toSeq == Seq(("B", "update")))
+    // a legacy table (no #keys line in any manifest) reads unrestricted
+    // and gives the same feeds
+    val intervals = Seq(v0 -> v4, v1 -> v3, v8 -> v11, v0 -> v13)
+    val rowFeeds = intervals.map { case (a, b) => collectSorted(tbl.changesBetween(a, b)) }
+    val keyFeeds = intervals.map { case (a, b) => collectSorted(tbl.changesKeyed(a, b)) }
+    Files.list(java.nio.file.Paths.get(dir, "manifests")).forEach { p =>
+      val kept = Files.readAllLines(p).toArray.map(_.toString).filterNot(_.startsWith("#keys "))
+      Files.write(p, kept.mkString("\n").getBytes("UTF-8"))
+    }
+    val legacy = new SnapshotTable(spark, dir, "k")
+    intervals.zip(rowFeeds.zip(keyFeeds)).foreach { case ((a, b), (rowFeed, keyFeed)) =>
+      assert(legacy.changeScanPaths(a, b)._3.forall(_.isEmpty), s"legacy v$a..v$b restricted")
+      assert(collectSorted(legacy.changesBetween(a, b)) == rowFeed, s"legacy row feed v$a..v$b")
+      assert(collectSorted(legacy.changesKeyed(a, b)) == keyFeed, s"legacy keyed feed v$a..v$b")
+    }
   }
 
   test("SnapshotSync across auto-compaction: merge churn applies, optimize-only advances tag-only") {
